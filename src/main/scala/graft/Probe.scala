@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual registered queries at SPARK_GRAFT_SF_DIR
   * (default sf0.1) with the same session config as [[Bench]], printing
   * per-query seconds and, with -explain, the formatted physical plan.
@@ -15,15 +13,8 @@ object Probe {
     val dumpDir = args.sliding(2).collectFirst { case Array("-dump", d) => d }
     val names = args.filterNot(a => a.startsWith("-") || dumpDir.contains(a))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val builder = LocalSession.builder(cpus)
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — A/B config experiments without
     // a recompile (dev tool only; Bench stays the driver's contract)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq

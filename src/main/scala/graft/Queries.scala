@@ -1530,14 +1530,13 @@ object Queries {
       |       round(min(d.med), 4) AS med, round(min(mad.mad), 4) AS mad
       |FROM d JOIN mad USING (event_type)
       |GROUP BY d.event_type ORDER BY d.event_type""") { (s, dir) =>
-    // projected + fanned (r22, §2.3/§2.5): the operator PINS its input
-    // (eager copy), so handing it the full events row materialized the
-    // props payload and ts columns it never reads, off a single-task
-    // scan; three columns in, 16-wide
+    // projected (§2.3): the operator PINS its input (eager copy), so
+    // handing it the full events row materialized the props payload
+    // and ts columns it never reads; three columns in. No scan
+    // fan-out: at 32 cores the hash repartition made this query slower
+    // (2.66 s → 3.70 s)
     graft.operators.Profile.robustOutliers(
-      Tables.fanOutScan(
-        Tables.events(s, dir).select("event_type", "value", "event_id"),
-        dir, "events", col("event_id")),
+      Tables.events(s, dir).select("event_type", "value", "event_id"),
       "event_type", "value", tieCol = "event_id", k = 3.0)
       .groupBy("event_type")
       .agg(

@@ -69,12 +69,7 @@ object SchemaReport {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (lines, bad) = check(spark, dir)
     lines.foreach(println)

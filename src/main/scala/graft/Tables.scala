@@ -190,12 +190,11 @@ object Tables {
     *
     * The guard is the INPUT FILE SIZE (one cheap FS status call, no
     * plan forcing — r21's df.rdd.getNumPartitions guard planned every
-    * load twice): if the file already yields >= `width` scan splits at
+    * load twice): if the file already yields >= width scan splits at
     * the session's maxPartitionBytes, the scan is wide on its own and
     * this is the identity — on a lake-scale table no shuffle is ever
-    * added. `width` defaults to `spark.graft.fanout.width` when set
-    * (the deployment's memory-bandwidth knob), else HALF the session's
-    * defaultParallelism: the fanned work is allocation-heavy string
+    * added. The width is HALF the session's defaultParallelism (at
+    * least 2): the fanned work is allocation-heavy string
     * hashing that contends on shared memory bandwidth, so it saturates
     * at about the PHYSICAL core count — half the advertised (SMT)
     * width. Measured on the 32-thread bench host: the same fanned
@@ -204,13 +203,9 @@ object Tables {
     * stage); derived from parallelism, never a constant, so the
     * 8-core control run fans to 4. */
   def fanOutScan(df: DataFrame, dir: String, table: String,
-                 key: org.apache.spark.sql.Column,
-                 width: Int = 0): DataFrame = {
+                 key: org.apache.spark.sql.Column): DataFrame = {
     val spark = df.sparkSession
-    val want =
-      if (width > 0) width
-      else spark.conf.getOption("spark.graft.fanout.width").map(_.toInt)
-        .getOrElse(math.max(2, spark.sparkContext.defaultParallelism / 2))
+    val want = math.max(2, spark.sparkContext.defaultParallelism / 2)
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = try fs.getContentSummary(p).getLength catch { case _: Throwable => 0L }

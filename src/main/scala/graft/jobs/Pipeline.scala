@@ -608,14 +608,8 @@ object Pipeline {
   /** CLI: graft.jobs.Pipeline <sfDir> <lakeRoot> */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, lakeRoot) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val lake = run(spark, sfDir, lakeRoot)
     for (t <- Seq(lake.history, lake.patterns, lake.analysis, lake.predictions))

@@ -165,9 +165,8 @@ object FuzzyLinkIndex {
     * the OUTPUT is selection-order-invariant because the exact
     * levenshtein verify decides every candidate).
     *
-    * Versions published before the gram tier existed (or a standing
-    * catalog that LOST rows vs the served one — parts are the source
-    * of truth) fall back to the from-scratch derivation. */
+    * A standing catalog that LOST rows vs the served one (parts are
+    * the source of truth) falls back to the from-scratch derivation. */
   def refreshLinkIndex(spark: SparkSession, path: String,
                        orderStaleBound: Double = 0.2): String = {
     require(orderStaleBound >= 0 && orderStaleBound <= 1,
@@ -185,19 +184,12 @@ object FuzzyLinkIndex {
     // the catalog-is-a-function guard: two batches claiming one id
     // with different strings would merge gram partitions downstream
     FuzzyJoin.requireUniqueIds(cSrc, "id", "catalog")
-    val fs = new org.apache.hadoop.fs.Path(indexRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // incremental iff the served version carries the gram tier AND
-    // its catalog is a subset of the standing one (append-only parts
-    // guarantee it; anything else re-derives from the parts, which
-    // are the source of truth)
-    val incrementalFrom = served.filter { root =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/catalog")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$root/grams"))
-    }
+    // incremental iff the served catalog is a subset of the standing
+    // one (append-only parts guarantee it; anything else re-derives
+    // from the parts, which are the source of truth)
     // (all grams, true folded dfreq, epoch-reuse: (served root, new
     // strings' grams, new strings) when the pinned order survives)
-    val (gb, dfreq, reuse) = incrementalFrom match {
+    val (gb, dfreq, reuse) = served match {
       case Some(root) =>
         val oldCat = spark.read.parquet(s"$root/catalog")
         val newRows = Checkpoints.pin(cSrc.join(oldCat, Seq("id", "s"), "left_anti"))
@@ -211,7 +203,7 @@ object FuzzyLinkIndex {
               .groupBy("g", "occ").agg(sum(col("df")).as("df")))
           // bound 1.0 = never re-rank: skip the footrule entirely
           val stale = orderStaleBound < 1.0 &&
-            orderStaleness(servedOrder(spark, fs, root), folded) > orderStaleBound
+            orderStaleness(spark.read.parquet(s"$root/order"), folded) > orderStaleBound
           (spark.read.parquet(s"$root/grams").unionByName(newGrams), folded,
             if (stale) None else Some((root, newGrams, newRows)))
         } else {
@@ -227,8 +219,8 @@ object FuzzyLinkIndex {
       case Some((root, newGrams, newRows)) =>
         // EPOCH PATH: carry the order, reuse the served selections,
         // select only the new strings — no catalog-wide window pass
-        val epochOrder = servedOrder(spark, fs, root)
-        epochOrder.write.mode("overwrite").parquet(s"$indexRoot/$newName/order")
+        spark.read.parquet(s"$root/order")
+          .write.mode("overwrite").parquet(s"$indexRoot/$newName/order")
         val orderP = spark.read.parquet(s"$indexRoot/$newName/order")
         val (_, newPb, newShort) =
           FuzzyJoin.catalogTablesFromGrams(newRows, newGrams, orderP, "id", "s", k, q)
@@ -237,9 +229,7 @@ object FuzzyLinkIndex {
         spark.read.parquet(s"$root/short").unionByName(newShort)
           .write.mode("overwrite").parquet(s"$indexRoot/$newName/short")
         graft.sources.IndexMeta
-          .read(spark, s"$root/meta.json", "fuzzy-link index version")
-          .getOrElse("order_epoch", // pre-r19 served: its own number
-            root.substring(root.lastIndexOf("v_") + 2).toLong)
+          .read(spark, s"$root/meta.json", "fuzzy-link index version")("order_epoch")
       case None =>
         // RE-RANK PATH (from-scratch, fallback, or drift past the
         // bound): a fresh epoch — selection of EVERY string under the
@@ -262,15 +252,6 @@ object FuzzyLinkIndex {
     graft.sources.VersionedRoot.publish(spark, indexRoot, newName, served)
     newName
   }
-
-  /** The served version's SELECTION order — the explicit `order/`
-    * tier (r19+), or `dfreq/` for versions published before the two
-    * diverged (its dfreq WAS its selection order). */
-  private def servedOrder(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): DataFrame =
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/order")))
-      spark.read.parquet(s"$root/order")
-    else spark.read.parquet(s"$root/dfreq")
 
   /** How far the pinned epoch order has drifted from the fresh folded
     * frequencies: Spearman footrule between the two (df, g, occ)
@@ -310,9 +291,8 @@ object FuzzyLinkIndex {
     if (v <= 1) 0.0 else 2.0 * r.getLong(1) / (v.toDouble * v)
   }
 
-  /** The from-scratch gram derivation (first version, pre-r18
-    * vintages, or a fallback when the served catalog is not a subset
-    * of the standing parts). */
+  /** The from-scratch gram derivation (first version, or a fallback
+    * when the served catalog is not a subset of the standing parts). */
   private def fromScratch(cSrc: org.apache.spark.sql.DataFrame,
                           q: Int): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val gb = FuzzyJoin.catalogGramRows(cSrc, "id", "s", q)
@@ -374,14 +354,12 @@ object FuzzyLinkIndex {
         s"fuzzy-link index at $path has no published version — run refreshLinkIndex"))
     val pSrc = Checkpoints.pin(probe.select(col(idCol), col(strCol)))
     FuzzyJoin.requireUniqueIds(pSrc, idCol, "probe")
-    val fs = new org.apache.hadoop.fs.Path(res)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // rank the probe under the served SELECTION order (the epoch the
     // catalog's prefixes were chosen under), never the raw folded
     // frequencies — the one-shared-order requirement of the prefix
     // lemma, made explicit by the r19 epoch split
     FuzzyJoin.probeLookup(pSrc,
-      servedOrder(spark, fs, res),
+      spark.read.parquet(s"$res/order"),
       spark.read.parquet(s"$res/prefix"),
       spark.read.parquet(s"$res/short"),
       idCol, strCol, k, q)

@@ -278,8 +278,8 @@ object GraphArtifact {
     (s"s${fp.replace('-', 'n')}", r.getLong(0), r.getLong(2))
   }
 
-  /** A memo's served version's `pub_seq` stamp — None for legacy
-    * pre-stamp memos, never-published debris, or an unreadable meta.
+  /** A memo's served version's `pub_seq` stamp — None for
+    * never-published debris or an unreadable meta.
     * The ONE definition both the stamp reservation ([[reservePubSeq]]
     * fallback scan)
     * and retention ranking ([[prunePprMemos]]) resolve through, so
@@ -302,9 +302,10 @@ object GraphArtifact {
     * mid-refresh leaves at worst a GAP in the sequence, never a
     * duplicate (writing the counter after publish would let a crash
     * in between re-assign the published stamp). A missing or torn
-    * counter (legacy artifact, or the reservation write itself
-    * crashed) falls back to the original max-over-memos scan, which
-    * re-derives a safe next stamp from the stamps actually stored.
+    * counter (the reservation write crashed inside
+    * [[graft.sources.IndexMeta.writeAtomic]]'s delete→rename window)
+    * falls back to the max-over-memos scan, which re-derives a safe
+    * next stamp from the stamps actually stored.
     * Retention still ranks on the STORED stamps, not the counter
     * (r18 advice: filesystem mtimes tie). Single-writer maintenance,
     * like every refresh, so read-increment-persist cannot race
@@ -372,26 +373,13 @@ object GraphArtifact {
     if (Profile.committedPartDirs(spark, path).isEmpty) return None
     val cur = committedEdges(spark, path).count()
     if (cur == 0L) return None
-    val (key, seedN, seedAlt) = seedSignature(seeds)
-    val root = s"$path/ppr/$key"
+    val root = s"$path/ppr/${seedKey(seeds)}"
     val served = graft.sources.VersionedRoot.resolve(spark, root, "PPR memo")
     val stale = served match {
       case None => true
       case Some(r) =>
         val vmeta = graft.sources.IndexMeta
           .read(spark, s"$r/meta.json", "PPR memo version")
-        // legacy-identity backfill (r18 verdict #2): a memo published
-        // before the identity fields existed skips readPpr's collision
-        // refusal until its next refresh — stamp the probe's identity
-        // into a SIDECAR on this touch instead (never the version
-        // meta: it's the completeness marker, and an in-place rewrite
-        // would put a crash window on it). The backfill trusts the
-        // dirname fingerprint once — the same trust every pre-r18
-        // read made — and from then on the memo refuses mismatches.
-        if (!vmeta.contains("seed_n") &&
-            !graft.sources.IndexMeta.exists(spark, s"$r/seed_id.json"))
-          graft.sources.IndexMeta.write(spark, s"$r/seed_id.json",
-            Seq("seed_n" -> seedN, "seed_alt" -> seedAlt))
         graft.sources.VersionedRoot.grewPast(cur,
           vmeta.getOrElse("part_rows", 0L), growthPct)
     }
@@ -403,14 +391,10 @@ object GraphArtifact {
     * seed set has never been refreshed (a silent empty result would
     * read as "no proximity" — the one answer a curation loop must
     * never get from a missing memo), and loud when the resolved
-    * memo's stored seed identity disagrees with the probe's
-    * (a dirname-fingerprint collision serves the WRONG kernel's ranks
-    * otherwise). The identity lives in the version meta (r18+
-    * refreshes) or the `seed_id.json` sidecar a [[maybeRefreshPpr]]
-    * touch backfills onto legacy memos (r18 verdict #2); a memo that
-    * has neither — legacy and never ticked since — is accepted as-is
-    * for one more read, and an unparseable sidecar (crash mid-
-    * backfill) reads as absent until the next tick rewrites it. */
+    * memo's stored seed identity (`seed_n`/`seed_alt` in the version
+    * meta) disagrees with the probe's or is missing (a
+    * dirname-fingerprint collision serves the WRONG kernel's ranks
+    * otherwise). */
   def readPpr(spark: SparkSession, path: String, seeds: DataFrame): DataFrame = {
     graft.sources.IndexMeta.read(spark, s"$path/meta.json", "rank artifact")
     val (key, seedN, seedAlt) = seedSignature(seeds) // one agg: key + identity
@@ -418,18 +402,13 @@ object GraphArtifact {
     val res = graft.sources.VersionedRoot.resolve(spark, root, "PPR memo")
       .getOrElse(sys.error(
         s"rank artifact at $path has no published PPR for this seed set — run refreshPpr"))
-    val vmeta = graft.sources.IndexMeta.read(spark, s"$res/meta.json", "PPR memo version")
-    val stored =
-      if (vmeta.contains("seed_n")) Some(vmeta)
-      else scala.util.Try(graft.sources.IndexMeta
-        .read(spark, s"$res/seed_id.json", "PPR memo seed identity")).toOption
-    stored.filter(_.contains("seed_n")).foreach { m =>
-      require(m("seed_n") == seedN && m.getOrElse("seed_alt", 0L) == seedAlt,
-        s"PPR memo at $root does not match this seed set " +
-          s"(stored identity ${m("seed_n")}/${m.getOrElse("seed_alt", 0L)}, " +
-          s"probe $seedN/$seedAlt) — a seed-fingerprint collision or a " +
-          "tampered memo; refusing to serve another kernel's ranks")
-    }
+    val m = graft.sources.IndexMeta.read(spark, s"$res/meta.json", "PPR memo version")
+    def stored(k: String) = m.get(k).fold("<absent>")(_.toString)
+    require(m.get("seed_n").contains(seedN) && m.get("seed_alt").contains(seedAlt),
+      s"PPR memo at $root does not match this seed set " +
+        s"(stored identity ${stored("seed_n")}/${stored("seed_alt")}, " +
+        s"probe $seedN/$seedAlt) — a seed-fingerprint collision or a " +
+        "tampered memo; refusing to serve another kernel's ranks")
     spark.read.parquet(s"$res/ranks")
   }
 
@@ -449,9 +428,8 @@ object GraphArtifact {
     * set forever — a service probing many ad-hoc kernels leaks
     * storage). Keeps the `maxMemos` most-recently-REFRESHED memos
     * (refresh recency = the served version's monotonic `pub_seq`
-    * stamp, falling back to the `CURRENT` pointer's mtime for
-    * pre-stamp memos — serving reads leave no trace by design, so
-    * refresh recency is the retention signal) and deletes the rest. An evicted kernel is
+    * stamp — serving reads leave no trace by design, so refresh
+    * recency is the retention signal) and deletes the rest. An evicted kernel is
     * LOUD to [[readPpr]] and re-derives fully on its next
     * [[maybeRefreshPpr]] — eviction can cost a re-sweep, never a
     * wrong answer. Single-writer maintenance entry, paced like every
@@ -470,18 +448,13 @@ object GraphArtifact {
     // refresh recency = the served version's monotonic `pub_seq`
     // stamp (r18 advice: CURRENT-pointer mtimes tie under coarse
     // filesystem timestamp granularity, and the name tie-break could
-    // evict the most-recently refreshed kernel). Era-first ordering:
-    // never-published debris evicts before legacy pre-stamp memos,
-    // which evict before any stamped memo — within an era the old
-    // (mtime, name) order still applies, so legacy behavior is
-    // unchanged until memos carry stamps.
+    // evict the most-recently refreshed kernel). Unstamped memos —
+    // never-published debris or an unreadable meta — evict first, in
+    // (mtime, name) order.
     val stamped = memos.map { m =>
-      val cur = new org.apache.hadoop.fs.Path(m.getPath, "CURRENT")
-      val seq = pubSeqOf(spark, m.getPath.toString)
-      val era = if (seq.nonEmpty) 2 else if (fs.exists(cur)) 1 else 0
-      val t = if (fs.exists(cur)) fs.getFileStatus(cur).getModificationTime
-        else m.getModificationTime // never-published debris: oldest bucket
-      (m.getPath, (era, seq.getOrElse(t)))
+      val key = pubSeqOf(spark, m.getPath.toString)
+        .fold((0, m.getModificationTime))(seq => (1, seq))
+      (m.getPath, key)
     }.sortBy { case (p, k) => (k, p.getName) } // total order: ties break by name
     val evicted = stamped.dropRight(maxMemos)
     evicted.foreach { case (p, _) => fs.delete(p, true) }

@@ -87,48 +87,6 @@ object KeywordSearch {
     .agg(count(lit(1)).as("tf"))
     .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)).cast("int"))
 
-  /** Materialize the doc_id side table of a pre-`docs`-vintage index —
-    * a ONE-time postings scan at adoption, after which every ingest's
-    * anti-join reads the compact id table instead of the
-    * corpus-sized postings (one slim column per doc vs one row per
-    * (doc, term)). Crash-safe (r15 review): the heal writes to a
-    * scratch dir and promotes it with ONE atomic directory rename —
-    * a crash mid-write leaves `docs` absent (so the next single-
-    * writer entry re-heals over the debris) instead of leaving a
-    * partial table that the existence check would mistake for healed,
-    * silently desynchronizing the replay anti-join forever.
-    *
-    * Completeness guard (r15 review): postings only cover documents
-    * with at least one token, while stats.n_docs counts EVERY indexed
-    * document — so an index that ever ingested a zero-token doc is
-    * unhealable from postings (the healed table would miss that id,
-    * a later re-ingest of it would pass the anti-join, and n_docs /
-    * avgdl would silently double-count). The heal therefore refuses
-    * — loudly, before promoting — whenever the postings doc count
-    * disagrees with stats.n_docs; such an index needs a rebuild. */
-  private def ensureDocIdTable(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/docs")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) return
-    val healing = new org.apache.hadoop.fs.Path(s"$indexPath/docs__healing")
-    spark.read.parquet(s"$indexPath/postings").select("doc_id").distinct()
-      .write.mode("overwrite").parquet(healing.toString)
-    val healed = spark.read.parquet(healing.toString).count()
-    val nDocs = spark.read.parquet(s"$indexPath/stats")
-      .select(col("n_docs")).head().getLong(0)
-    if (healed != nDocs) {
-      fs.delete(healing, true)
-      throw new IllegalStateException(
-        s"vintage heal at $indexPath: postings cover $healed distinct doc_ids " +
-          s"but stats.n_docs = $nDocs — the index holds zero-token documents " +
-          "(or lost postings) and exact stats cannot be healed; rebuild it")
-    }
-    if (!fs.rename(healing, p))
-      throw new java.io.IOException(
-        s"vintage heal: could not promote $healing to $p")
-  }
-
   /** Persist an inverted index to `indexPath`: the postings list
     * (doc_id, dl, term, tf) PARTITIONED BY a term-hash bucket, the
     * per-term document frequencies (same bucketing), a slim doc_id
@@ -215,7 +173,6 @@ object KeywordSearch {
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverInvertedIndex(spark, indexPath)
-    ensureDocIdTable(spark, indexPath)
     val stats = spark.read.parquet(s"$indexPath/stats")
     val termBuckets = stats.select(col("term_buckets")).head().getInt(0)
     // replay anti-join reads the slim doc_id side table, NOT the
@@ -360,7 +317,6 @@ object KeywordSearch {
     recoverInvertedIndex(spark, indexPath)
     require(fs.exists(p),
       s"no inverted index at $indexPath — only compact directories built by buildInvertedIndex")
-    ensureDocIdTable(spark, indexPath)
     graft.sources.Sinks.compactPartitioned(spark, s"$indexPath/postings", "tb", targetFileBytes)
     graft.sources.Sinks.compactPartitioned(spark, s"$indexPath/dfreq", "tb", targetFileBytes)
     // the docs id table accretes one small delta per ingest batch too

@@ -406,16 +406,6 @@ object Profile {
     s"${r.getLong(0)}x${r.getLong(1)}"
   }
 
-  /** Does a STORED fingerprint match a freshly computed one? Accepts
-    * the pre-r16 bare-XOR format (no count prefix) so artifacts
-    * written before the format change keep their no-op replay path —
-    * without this, a byte-identical redelivery against an old
-    * artifact would throw 'DIFFERENT contribution' and crash-loop the
-    * stream on correct data (r16 review). */
-  private[operators] def fingerprintMatches(stored: String, fresh: String): Boolean =
-    stored == fresh ||
-      (!stored.contains("x") && stored == fresh.substring(fresh.indexOf('x') + 1))
-
   private[operators] def landBatchPart(contribution: DataFrame, path: String,
                             part: String, what: String,
                             fpRow: DataFrame => org.apache.spark.sql.Column =
@@ -431,7 +421,7 @@ object Profile {
       val in = fs.open(fpFile)
       val old = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
-      require(fingerprintMatches(old, fp),
+      require(old == fp,
         s"$what part $part already holds a DIFFERENT contribution " +
           s"(fingerprint $old vs $fp) — a redelivered batch must be identical; " +
           "this looks like a reset checkpoint or a second writer sharing the artifact")
@@ -443,7 +433,7 @@ object Profile {
     // a different payload under a retired key is loud
     readTombstones(fs, dir.getParent).get(part) match {
       case Some(retired) =>
-        require(fingerprintMatches(retired, fp),
+        require(retired == fp,
           s"$what part $part was merged away holding a DIFFERENT contribution " +
             s"(fingerprint $retired vs $fp) — a redelivered batch must be identical; " +
             "this looks like a reset checkpoint or a second writer sharing the artifact")
@@ -512,9 +502,8 @@ object Profile {
     * without keeping one tombstone DIR per batch forever. Written
     * only by single-writer maintenance ([[finishMerge]]), read by
     * [[landBatchPart]] on the slow path (dir absent). */
-  /** One `<name> <count-x-xor fingerprint>` ledger line (the bare
-    * pre-r16 XOR form tolerated, like [[fingerprintMatches]]). */
-  private val LedgerLine = "(.+) (-?\\d+(?:x-?\\d+)?)".r
+  /** One `<name> <count-x-xor fingerprint>` ledger line. */
+  private val LedgerLine = "(.+) (-?\\d+x-?\\d+)".r
 
   /** The ledger's terminator record — `#end <entry count>`, written
     * LAST (r17 verdict #5): a file that carries it is COMPLETE by
@@ -527,8 +516,8 @@ object Profile {
   /** Parse ledger lines (r17 verdict #5 — the first-merge crash must
     * heal clean):
     *  - terminator present and last, count matching → every entry;
-    *  - no terminator and every line parses → a complete pre-r18
-    *    ledger: every entry;
+    *  - no terminator and every line parses → a tmp a crash cut at
+    *    a line boundary: every entry;
     *  - no terminator, malformed TRAILING line → a crash mid-write of
     *    the tmp; the lost tail's source dirs were never deleted
     *    (deletion happens strictly after the writer closes), so
@@ -664,7 +653,7 @@ object Profile {
     val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/_fp"))
     val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
     finally in.close()
-    require(fingerprintMatches(stored, fresh),
+    require(stored == fresh,
       s"$what part at $dir fails its fingerprint ($stored vs $fresh) — " +
         "refusing to rewrite a corrupted part into a freshly-committed dir")
     fresh

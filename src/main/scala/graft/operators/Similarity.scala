@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.VersionedRoot
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -187,16 +188,22 @@ object Similarity {
     * [[ivfTopKIndexed]] probe reads only its nProbe cell partitions:
     * the IVF read-reduction made physical as partition pruning, which
     * is the shape that matters at 100 TB — a probe touches
-    * nProbe/nCells of the corpus files, not the table. */
-  def buildIvfIndex(embeddings: DataFrame, indexPath: String, nCells: Int = 16): Unit =
-    writeIvfTables(widened(embeddings).select(col("vec_id"), col("emb")), indexPath, nCells)
+    * nProbe/nCells of the corpus files, not the table. The tables land
+    * in a `v_<n>` version directory published through
+    * [[graft.sources.VersionedRoot]] (`v_1` on a fresh path), the same
+    * protocol every later [[rebuildIvfIndex]] uses. */
+  def buildIvfIndex(embeddings: DataFrame, indexPath: String, nCells: Int = 16): Unit = {
+    val spark = embeddings.sparkSession
+    publishVersion(spark, indexPath, VersionedRoot.resolve(spark, indexPath, "IVF index"))(
+      writeIvfTables(widened(embeddings).select(col("vec_id"), col("emb")), _, nCells))
+  }
 
-  /** The index-build core shared by [[buildIvfIndex]] (flat layout)
-    * and [[rebuildIvfIndex]] (version dirs): one seeded KMeans fit,
-    * the tiny centroid table, the cell-partitioned inverted file, and
-    * meta WRITTEN LAST — a version directory is only eligible for
-    * serving once its meta exists, which is what makes a crashed
-    * rebuild invisible. `base` is already (vec_id, emb-double). */
+  /** The index-build core shared by [[buildIvfIndex]] and
+    * [[rebuildIvfIndex]]: one seeded KMeans fit, the tiny centroid
+    * table, the cell-partitioned inverted file, and meta WRITTEN LAST —
+    * a version directory is only eligible for serving once its meta
+    * exists, which is what makes a crashed (re)build invisible. `base`
+    * is already (vec_id, emb-double). */
   private def writeIvfTables(base: DataFrame, root: String, nCells: Int): Unit = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
@@ -220,109 +227,48 @@ object Similarity {
 
   private val ivfSeed = 42L
 
-  /** Resolve the SERVING root of an IVF index: the version directory
-    * named by the `CURRENT` pointer, else (pointer mid-swap or never
-    * versioned) the newest COMPLETE `v_<n>` dir — complete = its meta
-    * exists, and meta is written last — else the legacy flat layout at
-    * `indexPath` itself. Probes, appends, compaction and telemetry all
-    * resolve through here, so a [[rebuildIvfIndex]] swap retargets
-    * every consumer atomically with the pointer rename while readers
-    * that already resolved keep their old (still on-disk) version. */
-  private def ivfRoot(spark: SparkSession, indexPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(s"$indexPath/CURRENT")
-    def complete(name: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$name/meta.json"))
-    def newestComplete(): String = {
-      val vers = if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.matches("v_\\d+")).filter(complete) else Array.empty[String]
-      if (vers.nonEmpty) s"$indexPath/${vers.maxBy(_.stripPrefix("v_").toLong)}"
-      else indexPath
-    }
-    // exists→open is a TOCTOU window against a concurrent rebuild's
-    // delete→rename publish: the pointer can vanish between the two
-    // calls. That race IS the documented "no CURRENT" state — take the
-    // newest-complete-version fallback, never surface the FNFE. A
-    // pointer that reads fine but names an incomplete version is real
-    // corruption and stays loud.
-    val pointed =
-      if (!fs.exists(cur)) None
-      else try {
-        val in = fs.open(cur)
-        Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close())
-      } catch { case _: java.io.FileNotFoundException => None }
-    pointed match {
-      case Some(name) =>
-        require(complete(name), s"IVF index at $indexPath: CURRENT names $name but it is incomplete")
-        s"$indexPath/$name"
-      case None => newestComplete()
-    }
+  /** The SERVING version dir of an IVF/IVFPQ index
+    * ([[graft.sources.VersionedRoot.resolve]]). Probes, appends,
+    * compaction and telemetry all resolve through here, so a rebuild's
+    * pointer swap retargets every consumer atomically while readers
+    * that already resolved keep their old (still on-disk) version. A
+    * path that was never built fails loudly. */
+  private def servedRoot(spark: SparkSession, indexPath: String, what: String): String =
+    VersionedRoot.resolve(spark, indexPath, what).getOrElse(
+      throw new IllegalArgumentException(s"no $what at $indexPath — build the index first"))
+
+  /** Write a complete new version of the index at `indexPath` with
+    * `write` (given the new version dir) and publish it: the
+    * `CURRENT` swap plus GC keyed on `servedBefore`, the version the
+    * caller resolved before writing ([[graft.sources.VersionedRoot]]). */
+  private def publishVersion(spark: SparkSession, indexPath: String,
+                             servedBefore: Option[String])(write: String => Unit): Unit = {
+    val newName = VersionedRoot.nextVersion(spark, indexPath)
+    write(s"$indexPath/$newName")
+    VersionedRoot.publish(spark, indexPath, newName, servedBefore)
   }
 
   /** Centroid refresh — the ACTING half of the drift telemetry
     * ([[ivfCellStats]] says WHEN; this is the rebuild): re-cluster the
     * currently indexed corpus with a fresh seeded KMeans fit, write a
-    * complete NEW version directory (`v_<n+1>`: centroids + re-assigned
-    * inverted file + meta), and swap the `CURRENT` pointer. The swap is
-    * the only mutation the serving path can observe: a probe resolves
-    * either the old version or the new one, never a half-written mix —
-    * an incomplete version (no meta yet, or a crash mid-rebuild) is
-    * never eligible, and the previous version stays on disk so
-    * probes that resolved before the swap finish against intact files.
-    * GC keeps exactly {new version, the version ACTUALLY served
-    * before the swap} — keyed off the resolved old root, NOT off
-    * version numbering, because a crashed rebuild can leave an
-    * incomplete v_k with a HIGHER number than the serving version:
-    * numbering-based GC would then keep the garbage and delete the
-    * version live readers still scan (the r14 advisor's
-    * FileNotFound-mid-scan window). Everything else, incomplete
-    * debris included, is deleted (bounded disk debt); the legacy flat
-    * tables are left for the operator since the first rebuild cannot
-    * know whether an out-of-band reader still points at them.
-    * Single-writer, like every persisted artifact here. */
+    * complete NEW version directory (centroids + re-assigned inverted
+    * file + meta), and swap the `CURRENT` pointer. The swap is the
+    * only mutation the serving path can observe: a probe resolves
+    * either the old version or the new one, never a half-written mix,
+    * and the previous version stays on disk so probes that resolved
+    * before the swap finish against intact files. GC keeps exactly
+    * {new version, the version ACTUALLY served before the swap} —
+    * keyed off the resolved old root, NOT off version numbering,
+    * because a crashed rebuild can leave an incomplete v_k with a
+    * HIGHER number than the serving version. Single-writer, like every
+    * persisted artifact here. */
   def rebuildIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val oldRoot = ivfRoot(spark, indexPath)
+    val oldRoot = servedRoot(spark, indexPath, "IVF index")
     val meta = graft.sources.IndexMeta.read(spark, s"$oldRoot/meta.json", "IVF index")
     val nCells = meta.getOrElse("nCells",
       sys.error(s"IVF index meta at $oldRoot lacks nCells")).toInt
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
-      .map(_.getPath.getName).filter(_.matches("v_\\d+"))
-    val next = existing.map(_.stripPrefix("v_").toLong).foldLeft(0L)(math.max) + 1
-    val newName = s"v_$next"
     val corpus = spark.read.parquet(s"$oldRoot/inverted").select(col("vec_id"), col("emb"))
-    writeIvfTables(corpus, s"$indexPath/$newName", nCells)
-    publishIndexVersion(fs, indexPath, newName, oldRoot, existing)
-  }
-
-  /** Atomic version publication + GC, shared by [[rebuildIvfIndex]]
-    * and [[rebuildIvfPqIndex]]: point CURRENT at `newName` via temp +
-    * rename (the delete→rename window is benign — a reader finding no
-    * CURRENT falls back to the newest complete version, which IS the
-    * one being published), then GC by SERVED identity, not version
-    * arithmetic: keep only the new version and the one `oldRoot`
-    * actually resolved to — a crashed rebuild's incomplete v_k can
-    * outnumber the serving version, so "keep v_(next-1)" would keep
-    * garbage and delete what live readers still scan. When oldRoot is
-    * the legacy flat layout its basename matches no v_ name and every
-    * old version dir is debris. */
-  private def publishIndexVersion(fs: org.apache.hadoop.fs.FileSystem, indexPath: String,
-                                  newName: String, oldRoot: String,
-                                  existing: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexPath/CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((newName + "\n").getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(s"$indexPath/CURRENT")
-    fs.delete(cur, false)
-    if (!fs.rename(tmp, cur))
-      throw new java.io.IOException(s"rebuild: could not publish $cur")
-    val keep = Set(newName, new org.apache.hadoop.fs.Path(oldRoot).getName)
-    existing.filterNot(keep).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/$n"), true)
-    }
+    publishVersion(spark, indexPath, Some(oldRoot))(writeIvfTables(corpus, _, nCells))
   }
 
   /** IVF parameter fingerprint beside the index tables (same
@@ -366,7 +312,7 @@ object Similarity {
   /** Append new vectors to a persisted IVF index: assign each to its
     * nearest EXISTING centroid (centroids are not retrained — the
     * standard IVF append; cell-balance drift is what periodic
-    * [[buildIvfIndex]] rebuilds repair) and append into that cell's
+    * [[rebuildIvfIndex]] runs repair) and append into that cell's
     * partition. Already-indexed vec_ids are anti-joined out first
     * (the id column only — parquet pruning), so a crash-retried
     * append never duplicates a vector: same replay contract as the
@@ -379,7 +325,7 @@ object Similarity {
     * same `inverted` table its anti-join reads. */
   def appendToIvfIndex(embeddings: DataFrame, indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVF index")
     val metaDim = checkIvfMeta(spark, root)
     val centers = readCentroids(spark, root)
     require(centers.head.length == metaDim,
@@ -403,7 +349,7 @@ object Similarity {
                      k: Int, nProbe: Int = 4,
                      maxBroadcastProbes: Int = defaultMaxBroadcastProbes): DataFrame = {
     import spark.implicits._
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVF index")
     checkIvfMeta(spark, root) // loud failure on unbuilt/dim-mismatched index
     val centers = readCentroids(spark, root)
     val probeCellsUdf = nearestCellsUdf(centers, nProbe)
@@ -436,7 +382,7 @@ object Similarity {
     * agree exactly (SimilaritySpec). */
   def compactIvfIndex(spark: SparkSession, indexPath: String,
                       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVF index")
     checkIvfMeta(spark, root) // only compact real IVF indexes, loudly
     graft.sources.Sinks.compactPartitioned(
       spark, s"$root/inverted", "cell", targetFileBytes)
@@ -462,7 +408,7 @@ object Similarity {
     * cells), imbalance = max_cell / avg_cell (1.0 = perfectly
     * balanced; empty cells push it up). */
   def ivfCellStats(spark: SparkSession, indexPath: String): DataFrame = {
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVF index")
     val nCells = graft.sources.IndexMeta
       .read(spark, s"$root/meta.json", "IVF index")
       .getOrElse("nCells", sys.error(s"IVF index meta at $root lacks nCells"))
@@ -875,12 +821,15 @@ object Similarity {
     * by q_ann_ivfpq_check's measured recall bound — the q_ann_ivf
     * pattern. */
   def buildIvfPqIndex(embeddings: DataFrame, indexPath: String, nCells: Int = 16,
-                      nCentroids: Int = 16, nSub: Int = 8, iters: Int = 5): Unit =
-    writeIvfPqTables(widened(embeddings).select(col("vec_id"), col("emb")),
-      indexPath, nCells, nCentroids, nSub, iters)
+                      nCentroids: Int = 16, nSub: Int = 8, iters: Int = 5): Unit = {
+    val spark = embeddings.sparkSession
+    publishVersion(spark, indexPath, VersionedRoot.resolve(spark, indexPath, "IVFPQ index"))(
+      writeIvfPqTables(widened(embeddings).select(col("vec_id"), col("emb")),
+        _, nCells, nCentroids, nSub, iters))
+  }
 
-  /** The IVFPQ build core shared by [[buildIvfPqIndex]] (flat layout)
-    * and [[rebuildIvfPqIndex]] (version dirs) — the same split
+  /** The IVFPQ build core shared by [[buildIvfPqIndex]] and
+    * [[rebuildIvfPqIndex]] — the same split
     * [[writeIvfTables]] has for the IVF family: coarse KMeans fit,
     * tiny centroid table, residual-space trained codebook,
     * cell-partitioned packed codes, and meta WRITTEN LAST so a
@@ -920,9 +869,9 @@ object Similarity {
     * the same under streaming appends (r14 verdict #2): re-cluster the
     * cells, RETRAIN the residual codebook, re-encode every indexed
     * vector, all into a new `v_<n+1>` version directory behind the
-    * same atomic CURRENT-pointer swap ([[publishIndexVersion]] — one
-    * observable mutation, incomplete versions never eligible, the
-    * served version kept for in-flight readers, debris GC'd).
+    * same atomic CURRENT-pointer swap ([[graft.sources.VersionedRoot]]
+    * — one observable mutation, incomplete versions never eligible,
+    * the served version kept for in-flight readers, debris GC'd).
     *
     * Unlike IVF, the artifact CANNOT seed its own rebuild: PQ codes
     * are lossy, the original vectors are not recoverable from them.
@@ -933,7 +882,7 @@ object Similarity {
     * `corpus` but not yet indexed are ignored (they belong to the next
     * append), keeping rebuild ≡ "the same index, re-quantized". */
   def rebuildIvfPqIndex(spark: SparkSession, indexPath: String, corpus: DataFrame): Unit = {
-    val oldRoot = ivfRoot(spark, indexPath)
+    val oldRoot = servedRoot(spark, indexPath, "IVFPQ index")
     val m = graft.sources.IndexMeta.read(spark, s"$oldRoot/meta.json", "IVFPQ index")
     def f(k: String) = m.getOrElse(k, sys.error(s"IVFPQ index meta at $oldRoot lacks $k")).toInt
     val indexed = spark.read.parquet(s"$oldRoot/codes").select(col("vec_id"))
@@ -946,15 +895,8 @@ object Similarity {
     require(nCovered == nIndexed,
       s"rebuildIvfPqIndex: corpus covers $nCovered of $nIndexed indexed vectors — " +
         "a rebuild from a partial vector store would silently drop the rest")
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
-      .map(_.getPath.getName).filter(_.matches("v_\\d+"))
-    val next = existing.map(_.stripPrefix("v_").toLong).foldLeft(0L)(math.max) + 1
-    val newName = s"v_$next"
-    writeIvfPqTables(base, s"$indexPath/$newName",
-      f("nCells"), f("nCentroids"), f("nSub"), f("iters"))
-    publishIndexVersion(fs, indexPath, newName, oldRoot, existing)
+    publishVersion(spark, indexPath, Some(oldRoot))(writeIvfPqTables(base, _,
+      f("nCells"), f("nCentroids"), f("nSub"), f("iters")))
   }
 
   /** Drift-triggered IVFPQ refresh — [[maybeRebuildIvfIndex]]'s twin
@@ -976,7 +918,7 @@ object Similarity {
     * (total/used/max/min/avg/imbalance) over the `codes` table's cell
     * partitions — the observable [[maybeRebuildIvfPqIndex]] acts on. */
   def ivfPqCellStats(spark: SparkSession, indexPath: String): DataFrame = {
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVFPQ index")
     val nCells = graft.sources.IndexMeta
       .read(spark, s"$root/meta.json", "IVFPQ index")
       .getOrElse("nCells", sys.error(s"IVFPQ index meta at $root lacks nCells"))
@@ -1013,10 +955,10 @@ object Similarity {
         zip_with(col("emb"), col("__cent"), (x, c) => x - c).as("emb"))
   }
 
-  /** Meta guard against the RESOLVED root (version dir or legacy
-    * flat layout — the same [[ivfRoot]] resolution every IVFPQ
-    * consumer shares, so a [[rebuildIvfPqIndex]] swap retargets all
-    * of them atomically). Returns nSub. */
+  /** Meta guard against the RESOLVED version dir — the same
+    * [[servedRoot]] resolution every IVFPQ consumer shares, so a
+    * [[rebuildIvfPqIndex]] swap retargets all of them atomically.
+    * Returns nSub. */
   private def checkIvfPqMeta(spark: SparkSession, root: String): Int = {
     val m = graft.sources.IndexMeta.read(spark, s"$root/meta.json", "IVFPQ index")
     m.getOrElse("nCells", sys.error(s"IVFPQ index meta at $root lacks nCells"))
@@ -1029,7 +971,7 @@ object Similarity {
     * the same replay contract as every other index family. */
   def appendToIvfPqIndex(embeddings: DataFrame, indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVFPQ index")
     val nSub = checkIvfPqMeta(spark, root)
     val cents = spark.read.parquet(s"$root/codebook")
     val coded = spark.read.parquet(s"$root/codes").select(col("vec_id")).distinct()
@@ -1046,7 +988,7 @@ object Similarity {
   /** Compact the IVFPQ codes, preserving the `cell=` pruning layout. */
   def compactIvfPqIndex(spark: SparkSession, indexPath: String,
                         targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVFPQ index")
     checkIvfPqMeta(spark, root)
     graft.sources.Sinks.compactPartitioned(
       spark, s"$root/codes", "cell", targetFileBytes)
@@ -1062,7 +1004,7 @@ object Similarity {
   def ivfPqTopK(spark: SparkSession, indexPath: String, probes: DataFrame,
                 k: Int, nProbe: Int = 4): DataFrame = {
     import spark.implicits._
-    val root = ivfRoot(spark, indexPath)
+    val root = servedRoot(spark, indexPath, "IVFPQ index")
     val nSub = checkIvfPqMeta(spark, root)
     val centers = spark.read.parquet(s"$root/centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)

@@ -46,11 +46,6 @@ object IndexMeta {
       throw new java.io.IOException(s"writeAtomic: could not swap $p")
   }
 
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Read all integer fields; `what` names the index family in errors. */
   def read(spark: SparkSession, path: String, what: String): Map[String, Long] = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -3,13 +3,10 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** The versioned-publication protocol behind every refreshable
-  * artifact that must swap ATOMICALLY under live readers — the
-  * discipline [[graft.operators.Similarity]] established for the
-  * IVF/IVFPQ rebuilds (Similarity.ivfRoot/publishIndexVersion are the
-  * original in-place instance, kept there verbatim because the ANN
-  * lifecycle additionally resolves a pre-versioning legacy flat
-  * layout), generalized here for the graph rank artifact and any
-  * future family:
+  * artifact that must swap ATOMICALLY under live readers — the IVF and
+  * IVFPQ indexes ([[graft.operators.Similarity]]), graph ranks and PPR
+  * memos, the fuzzy-link index and the model artifact all build and
+  * refresh through it:
   *
   *  - a refresh writes a COMPLETE new `v_<n>` directory whose
   *    `meta.json` is written LAST, so an incomplete version (crash
@@ -29,8 +26,7 @@ import org.apache.spark.sql.SparkSession
   * refresh (its version is the kept `servedBefore`); a reader that
   * holds a resolved version across TWO refresh cycles can lose its
   * files to the second publish's GC. Operators therefore pace
-  * maintenance refreshes slower than their longest read job — the
-  * same contract as the IVF/IVFPQ rebuilds this generalizes — or
+  * maintenance refreshes slower than their longest read job, or
   * disable GC-by-retention out of band if reads are unbounded.
   */
 object VersionedRoot {

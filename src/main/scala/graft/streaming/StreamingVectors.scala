@@ -25,8 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Operational contract at scale: appends assign to FROZEN centroids,
   * so a drifting ingest distribution unbalances the cells —
   * [[Similarity.ivfCellStats]] is the rebuild trigger an operator
-  * watches, and [[Similarity.buildIvfIndex]] over the accepted sink is
-  * the rebuild.
+  * watches, and [[Similarity.rebuildIvfIndex]] is the rebuild: it
+  * re-clusters the indexed vectors into a new version behind the
+  * index's atomic `CURRENT` pointer.
   */
 object StreamingVectors {
 

@@ -456,9 +456,9 @@ class GraphSpec extends SparkSpec {
       GraphArtifact.maybeRefreshPpr(spark, s"$path-nope", seedsA)
     }
     // publish-stamp counter (r19 advice: O(1) FS read per refresh, not
-    // a meta read per memo): losing it — legacy artifact or a crash
-    // before the reservation write — falls back to the max-over-memos
-    // scan and can NEVER assign a duplicate stamp
+    // a meta read per memo): losing it — a crash inside the
+    // reservation write's delete→rename window — falls back to the
+    // max-over-memos scan and can NEVER assign a duplicate stamp
     val counter = java.nio.file.Paths.get(s"$path/ppr/_pub_seq.json")
     assert(java.nio.file.Files.exists(counter), "refresh must persist the stamp counter")
     def stamps(): Seq[Long] = {
@@ -524,38 +524,19 @@ class GraphSpec extends SparkSpec {
     rmTree(path)
   }
 
-  test("PPR memo: legacy identity backfill on tick, then loud on mismatch") {
+  test("PPR memo: readPpr refuses a memo without seed identity") {
     val path = tmpArt()
     GraphArtifact.initRankArtifact(spark, path, iters = 3)
     GraphArtifact.ingestEdgeBatch(artEdges.toDF("src", "dst"), path, 0L)
     val seeds = Seq(0L, 1L).toDF("node")
     GraphArtifact.maybeRefreshPpr(spark, path, seeds)
-    val ranks = GraphArtifact.readPpr(spark, path, seeds)
-      .as[(Long, Long)].collect().toMap
-    // forge a pre-r18 memo: strip identity and stamp from the version
-    // meta (legacy vintages had neither, and no sidecar)
+    // strip the identity from the served version meta
     val memoRoot = s"$path/ppr/" + new java.io.File(s"$path/ppr").list()
       .filter(_.startsWith("s")).head
     val res = graft.sources.VersionedRoot.resolve(spark, memoRoot, "t").get
     val vm = graft.sources.IndexMeta.read(spark, s"$res/meta.json", "t")
     graft.sources.IndexMeta.write(spark, s"$res/meta.json",
-      (vm - "seed_n" - "seed_alt" - "pub_seq").toSeq)
-    // legacy acceptance: the read still serves (identity unknowable)
-    assert(GraphArtifact.readPpr(spark, path, seeds)
-      .as[(Long, Long)].collect().toMap === ranks)
-    // one tick backfills the identity sidecar without refreshing
-    assert(GraphArtifact.maybeRefreshPpr(spark, path, seeds) === None)
-    assert(graft.sources.IndexMeta.exists(spark, s"$res/seed_id.json"),
-      "a maybeRefreshPpr touch must backfill the legacy memo's identity")
-    assert(GraphArtifact.readPpr(spark, path, seeds)
-      .as[(Long, Long)].collect().toMap === ranks,
-      "the backfilled identity must verify for the true seed set")
-    // a mismatched probe (tampered sidecar stands in for a dirname
-    // collision) is now loud — the r18 gap: before the backfill, a
-    // legacy memo skipped this refusal forever
-    val sid = graft.sources.IndexMeta.read(spark, s"$res/seed_id.json", "t")
-    graft.sources.IndexMeta.write(spark, s"$res/seed_id.json",
-      (sid + ("seed_alt" -> (sid("seed_alt") + 1L))).toSeq)
+      (vm - "seed_n" - "seed_alt").toSeq)
     assert(intercept[IllegalArgumentException] {
       GraphArtifact.readPpr(spark, path, seeds)
     }.getMessage.contains("does not match this seed set"))

@@ -166,7 +166,7 @@ class KeywordSearchSpec extends SparkSpec {
     }
   }
 
-  test("doc_id side table: maintained by every writer, heals pre-docs vintages, stats crash window compactable") {
+  test("doc_id side table: maintained by every writer, required by ingest, stats crash window compactable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bm25docs").toString
     KeywordSearch.buildInvertedIndex(docs, dir, termBuckets = 4)
     def docIds: Seq[Long] = spark.read.parquet(s"$dir/docs").as[Long].collect().sorted.toSeq
@@ -178,13 +178,15 @@ class KeywordSearchSpec extends SparkSpec {
     KeywordSearch.ingestIntoInvertedIndex(b, dir)
     KeywordSearch.ingestIntoInvertedIndex(b, dir) // replay: no-op
     assert(docIds === (base :+ 500L).sorted, "ingest must append exactly once")
-    // pre-docs-vintage index (id table absent): the next single-writer
-    // entry materializes it from postings once, then ingest proceeds
-    rmTree(s"$dir/docs")
-    KeywordSearch.ingestIntoInvertedIndex(
-      Seq((501L, "engine anew again")).toDF("doc_id", "text"), dir)
-    assert(docIds === (base ++ Seq(500L, 501L)).sorted,
-      "vintage heal must recover ALL indexed ids, not just the batch")
+    // an index without the id table fails loudly: the replay
+    // anti-join reads it (moved aside and back for this check)
+    val aside = java.nio.file.Files.createTempDirectory("graft-bm25aside").resolve("docs")
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir/docs"), aside)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      KeywordSearch.ingestIntoInvertedIndex(
+        Seq((501L, "engine anew again")).toDF("doc_id", "text"), dir)
+    }
+    java.nio.file.Files.move(aside, java.nio.file.Paths.get(s"$dir/docs"))
     // the stats mid-promote crash window (live stats deleted, staged
     // pending, marker live): compactInvertedIndex is documented to
     // roll the commit forward FIRST — it must heal this state, not
@@ -197,9 +199,8 @@ class KeywordSearchSpec extends SparkSpec {
     KeywordSearch.compactInvertedIndex(spark, dir)
     assert(new java.io.File(s"$dir/stats").exists(), "compact must promote the staged stats")
     assert(!new java.io.File(s"$dir/commit.plan").exists(), "compact must retire the marker")
-    // the healed, compacted index still scores exactly like a rebuild
+    // the compacted index still scores exactly like a rebuild
     val grown = docs.unionByName(b)
-      .unionByName(Seq((501L, "engine anew again")).toDF("doc_id", "text"))
     val direct = KeywordSearch.bm25TopK(grown, Seq("spark", "engine"), 10)
       .as[(Long, Double)].collect().toSeq
     val indexed = KeywordSearch.bm25TopKIndexed(spark, dir, Seq("spark", "engine"), 10)

@@ -12,6 +12,12 @@ class SimilaritySpec extends SparkSpec {
   private def emb(rows: (Long, Seq[Float])*): DataFrame =
     rows.toDF("vec_id", "embedding")
 
+  /** The version dir an IVF/IVFPQ index serves, and its `CURRENT` name. */
+  private def served(dir: String): String =
+    graft.sources.VersionedRoot.resolve(spark, dir, "t").get
+  private def current(dir: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/CURRENT")).trim
+
   test("bruteTopK ranks by exact cosine") {
     // 2-d-style vectors padded into the API's float arrays
     val d = emb(
@@ -86,7 +92,7 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/idx"
     Similarity.buildIvfIndex(corpus, dir, nCells = 8)
     // inverted file is physically partitioned by cell
-    assert(new java.io.File(s"$dir/inverted").listFiles().exists(_.getName.startsWith("cell=")))
+    assert(new java.io.File(s"${served(dir)}/inverted").listFiles().exists(_.getName.startsWith("cell=")))
     val probes = corpus.filter($"vec_id" < 5)
     val indexed = Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
@@ -106,15 +112,15 @@ class SimilaritySpec extends SparkSpec {
     Similarity.appendToIvfIndex(corpus.filter($"vec_id" % 10 === 8), dir)
     Similarity.appendToIvfIndex(corpus.filter($"vec_id" % 10 === 9), dir)
     def cellFiles: Map[String, Int] =
-      new java.io.File(s"$dir/inverted").listFiles().filter(_.getName.startsWith("cell="))
+      new java.io.File(s"${served(dir)}/inverted").listFiles().filter(_.getName.startsWith("cell="))
         .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
     val filesBefore = cellFiles
     assert(filesBefore.values.exists(_ > 1), "fixture must accumulate multiple part files")
     val probes = corpus.filter($"vec_id" < 5)
     val before = Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val metaBefore = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json"))
-    val centroidsBefore = spark.read.parquet(s"$dir/centroids")
+    val metaBefore = java.nio.file.Files.readString(java.nio.file.Paths.get(s"${served(dir)}/meta.json"))
+    val centroidsBefore = spark.read.parquet(s"${served(dir)}/centroids")
       .as[(Int, Array[Double])].collect().map { case (c, v) => (c, v.toSeq) }.toSet
 
     Similarity.compactIvfIndex(spark, dir)
@@ -125,9 +131,9 @@ class SimilaritySpec extends SparkSpec {
     val after = Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(after === before, "compaction changed probe results")
-    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")) === metaBefore,
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"${served(dir)}/meta.json")) === metaBefore,
       "compaction must not touch meta.json")
-    val centroidsAfter = spark.read.parquet(s"$dir/centroids")
+    val centroidsAfter = spark.read.parquet(s"${served(dir)}/centroids")
       .as[(Int, Array[Double])].collect().map { case (c, v) => (c, v.toSeq) }.toSet
     assert(centroidsAfter === centroidsBefore, "compaction must not touch centroids")
     // appends after compaction still land probe-visible
@@ -157,7 +163,7 @@ class SimilaritySpec extends SparkSpec {
       assert(got(i) === i + 10000L, s"appended twin of $i must be its nearest neighbor"))
     // replay: the anti-join makes a retried append a no-op
     Similarity.appendToIvfIndex(batch, dir)
-    val n = spark.read.parquet(s"$dir/inverted")
+    val n = spark.read.parquet(s"${served(dir)}/inverted")
       .filter($"vec_id" >= 10000L).count()
     assert(n === 3L, "replayed append duplicated index rows")
   }
@@ -173,7 +179,7 @@ class SimilaritySpec extends SparkSpec {
     }
     Similarity.buildIvfIndex(corpus, dir, nCells = 8) // 64-dim corpus
     // meta fingerprint records the build parameters
-    val meta = graft.sources.IndexMeta.read(spark, s"$dir/meta.json", "IVF index")
+    val meta = graft.sources.IndexMeta.read(spark, s"${served(dir)}/meta.json", "IVF index")
     assert(meta("nCells") === 8L && meta("dim") === 64L)
     // appending or probing vectors of a DIFFERENT dim used to silently
     // truncate every distance loop (min-length) and destroy recall —
@@ -191,7 +197,7 @@ class SimilaritySpec extends SparkSpec {
     // anti-join only guards against ids already on disk)
     val v = Seq.fill(64)(0.5f)
     Similarity.appendToIvfIndex(emb(7000L -> v, 7000L -> v), dir)
-    assert(spark.read.parquet(s"$dir/inverted").filter($"vec_id" === 7000L).count() === 1L)
+    assert(spark.read.parquet(s"${served(dir)}/inverted").filter($"vec_id" === 7000L).count() === 1L)
   }
 
   test("persisted IVF index recall ≥ 0.8 vs brute force POST-APPEND") {
@@ -214,28 +220,28 @@ class SimilaritySpec extends SparkSpec {
   test("rebuildIvfIndex: versioned atomic swap, probe ≡ fresh build, appends follow the pointer") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfrb").toString + "/idx"
     Similarity.buildIvfIndex(corpus.filter($"vec_id" % 10 < 8), dir, nCells = 8)
+    assert(current(dir) === "v_1", "a fresh build publishes v_1")
     Similarity.appendToIvfIndex(corpus.filter($"vec_id" % 10 >= 8), dir) // drifted cells
     val probes = corpus.filter($"vec_id" % 25 === 0L)
     Similarity.rebuildIvfIndex(spark, dir)
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/CURRENT")).trim === "v_1")
-    // the legacy flat tables (the pre-rebuild serving root) are intact:
-    // a probe that resolved before the swap finishes against whole files
-    assert(new java.io.File(s"$dir/inverted").exists() &&
-      new java.io.File(s"$dir/centroids").exists())
+    assert(current(dir) === "v_2", "the first rebuild publishes v_2")
+    // the pre-rebuild serving version is intact: a probe that resolved
+    // before the swap finishes against whole files
+    assert(new java.io.File(s"$dir/v_1/inverted").exists() &&
+      new java.io.File(s"$dir/v_1/centroids").exists())
     // probe off the rebuilt index ≡ a fresh buildIvfIndex over the same
     // corpus (same seeded fit over the same reloaded rows)
     val got = Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 2)
       .as[(Long, Long, Double, Long)].collect().toSet
     val freshDir = java.nio.file.Files.createTempDirectory("graft-ivfrf").toString + "/idx"
     Similarity.buildIvfIndex(
-      spark.read.parquet(s"$dir/inverted").select($"vec_id", $"emb".as("embedding")),
+      spark.read.parquet(s"$dir/v_1/inverted").select($"vec_id", $"emb".as("embedding")),
       freshDir, nCells = 8)
     val fresh = Similarity.ivfTopKIndexed(spark, freshDir, probes, 5, nProbe = 2)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(got === fresh, "rebuild must equal a fresh build over the same corpus")
     // every vector survived the re-assignment exactly once
-    assert(spark.read.parquet(s"$dir/v_1/inverted").count() === 200L)
+    assert(spark.read.parquet(s"$dir/v_2/inverted").count() === 200L)
     // recall holds on the refreshed centroids
     val truth = Similarity.bruteTopK(corpus, probes, 5)
       .as[(Long, Long, Double, Long)].collect().map(r => (r._1, r._2)).toSet
@@ -250,21 +256,21 @@ class SimilaritySpec extends SparkSpec {
     assert(noPointer === got, "pointer-less resolution must serve the newest complete version")
     // appends resolve through the pointer: they land in the CURRENT
     // version, and cell telemetry sees them there
-    Similarity.rebuildIvfIndex(spark, dir) // re-publishes CURRENT (v_2)
+    Similarity.rebuildIvfIndex(spark, dir) // re-publishes CURRENT (v_3)
     val twin = corpus.filter($"vec_id" === 0L)
       .select(($"vec_id" + 9000L).as("vec_id"), $"embedding")
     Similarity.appendToIvfIndex(twin, dir)
-    assert(spark.read.parquet(s"$dir/v_2/inverted").filter($"vec_id" === 9000L).count() === 1L)
-    assert(spark.read.parquet(s"$dir/inverted").filter($"vec_id" === 9000L).count() === 0L,
-      "append must not touch the superseded flat tables")
+    assert(spark.read.parquet(s"$dir/v_3/inverted").filter($"vec_id" === 9000L).count() === 1L)
+    assert(spark.read.parquet(s"$dir/v_2/inverted").filter($"vec_id" === 9000L).count() === 0L,
+      "append must not touch the superseded version")
     assert(Similarity.ivfCellStats(spark, dir).collect().head
       .getAs[Long]("total_vecs") === 201L)
     // bounded version debt: the previous version survives each swap,
     // older ones are deleted
-    assert(new java.io.File(s"$dir/v_1").exists(), "previous version must be kept")
-    Similarity.rebuildIvfIndex(spark, dir) // v_3 → v_1 ages out
-    assert(!new java.io.File(s"$dir/v_1").exists(), "v_1 must age out after two more swaps")
-    assert(new java.io.File(s"$dir/v_2").exists())
+    assert(new java.io.File(s"$dir/v_2").exists(), "previous version must be kept")
+    Similarity.rebuildIvfIndex(spark, dir) // v_4 → v_2 ages out
+    assert(!new java.io.File(s"$dir/v_2").exists(), "v_2 must age out after two more swaps")
+    assert(new java.io.File(s"$dir/v_3").exists())
   }
 
   test("IVFPQ: exhaustive settings reduce to brute force; pruning keeps recall; lifecycle parity") {
@@ -295,7 +301,7 @@ class SimilaritySpec extends SparkSpec {
       .select(($"vec_id" + 7000L).as("vec_id"), $"embedding")
     Similarity.appendToIvfPqIndex(twin, dir)
     Similarity.appendToIvfPqIndex(twin, dir) // replay
-    val rows = spark.read.parquet(s"$dir/codes")
+    val rows = spark.read.parquet(s"${served(dir)}/codes")
       .filter($"vec_id".isin(0L, 7000L))
       .select("vec_id", "codes", "cell")
       .as[(Long, Seq[Long], Int)].collect()
@@ -309,10 +315,13 @@ class SimilaritySpec extends SparkSpec {
     val after = Similarity.ivfPqTopK(spark, dir, probes, 5, nProbe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(after === before, "compaction changed IVFPQ probe results")
-    // meta guard: unbuilt use fails loudly
+    // meta guard: unbuilt probe and append fail loudly
+    val unbuilt = java.nio.file.Files.createTempDirectory("graft-noivfpq").toString
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopK(spark,
-        java.nio.file.Files.createTempDirectory("graft-noivfpq").toString, probes, 3)
+      Similarity.ivfPqTopK(spark, unbuilt, probes, 3)
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.appendToIvfPqIndex(twin, unbuilt)
     }
   }
 
@@ -320,6 +329,7 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqrb").toString + "/idx"
     Similarity.buildIvfPqIndex(corpus.filter($"vec_id" % 10 < 8), dir,
       nCells = 8, nCentroids = 64)
+    assert(current(dir) === "v_1", "a fresh build publishes v_1")
     Similarity.appendToIvfPqIndex(corpus.filter($"vec_id" % 10 >= 8), dir) // drifted
     val probes = corpus.filter($"vec_id" % 25 === 0L)
     // a rebuild from a PARTIAL vector store must refuse — it would
@@ -329,13 +339,12 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(ePart.getMessage.contains("covers"), ePart.getMessage)
     Similarity.rebuildIvfPqIndex(spark, dir, corpus)
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/CURRENT")).trim === "v_1")
-    // legacy flat tables stay for pre-swap readers
-    assert(new java.io.File(s"$dir/codes").exists() &&
-      new java.io.File(s"$dir/codebook").exists())
+    assert(current(dir) === "v_2", "the first rebuild publishes v_2")
+    // the pre-rebuild version stays for pre-swap readers
+    assert(new java.io.File(s"$dir/v_1/codes").exists() &&
+      new java.io.File(s"$dir/v_1/codebook").exists())
     // every indexed vector survived the re-encode exactly once
-    assert(spark.read.parquet(s"$dir/v_1/codes").count() === 200L)
+    assert(spark.read.parquet(s"$dir/v_2/codes").count() === 200L)
     // the strongest post-rebuild pin, partition-independent: with both
     // reductions disabled the rerank off the REBUILT artifacts must
     // still reduce to exact brute force (same gate a fresh build has —
@@ -359,24 +368,24 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.ivfPqTopKReranked(spark, dir, corpus, probes, 5,
       nProbe = 8, shortlist = 199)
       .as[(Long, Long, Double, Long)].collect().toSet === brute)
-    Similarity.rebuildIvfPqIndex(spark, dir, corpus) // re-publishes CURRENT (v_2)
+    Similarity.rebuildIvfPqIndex(spark, dir, corpus) // re-publishes CURRENT (v_3)
     // appends resolve through the pointer; telemetry and compaction too
     val twin = corpus.filter($"vec_id" === 0L)
       .select(($"vec_id" + 9000L).as("vec_id"), $"embedding")
     Similarity.appendToIvfPqIndex(twin, dir)
-    assert(spark.read.parquet(s"$dir/v_2/codes").filter($"vec_id" === 9000L).count() === 1L)
-    assert(spark.read.parquet(s"$dir/codes").filter($"vec_id" === 9000L).count() === 0L,
-      "append must not touch the superseded flat tables")
+    assert(spark.read.parquet(s"$dir/v_3/codes").filter($"vec_id" === 9000L).count() === 1L)
+    assert(spark.read.parquet(s"$dir/v_2/codes").filter($"vec_id" === 9000L).count() === 0L,
+      "append must not touch the superseded version")
     assert(Similarity.ivfPqCellStats(spark, dir).collect().head
       .getAs[Long]("total_vecs") === 201L)
     Similarity.compactIvfPqIndex(spark, dir)
     assert(Similarity.ivfPqCellStats(spark, dir).collect().head
       .getAs[Long]("total_vecs") === 201L)
     // bounded version debt, served-version GC (parity with IVF)
-    assert(new java.io.File(s"$dir/v_1").exists(), "previous version must be kept")
-    Similarity.rebuildIvfPqIndex(spark, dir, corpus.unionByName(twin)) // v_3 → v_1 ages out
-    assert(!new java.io.File(s"$dir/v_1").exists())
-    assert(new java.io.File(s"$dir/v_2").exists())
+    assert(new java.io.File(s"$dir/v_2").exists(), "previous version must be kept")
+    Similarity.rebuildIvfPqIndex(spark, dir, corpus.unionByName(twin)) // v_4 → v_2 ages out
+    assert(!new java.io.File(s"$dir/v_2").exists())
+    assert(new java.io.File(s"$dir/v_3").exists())
   }
 
   test("maybeRebuildIvfPqIndex: no refit below the bound, refit above restores balance and serves the pile") {
@@ -409,29 +418,28 @@ class SimilaritySpec extends SparkSpec {
 
   test("rebuild GC keys off the SERVED version: incomplete higher-numbered debris dies, the serving version survives") {
     // the r14 advisor's window: a rebuild that crashed after partially
-    // writing v_2 (no meta) leaves debris with a HIGHER number than
-    // the serving v_1. Numbering-based GC (keep v_(next-1)) would keep
-    // the garbage and delete v_1 — the version CURRENT still points at
+    // writing v_3 (no meta) leaves debris with a HIGHER number than
+    // the serving v_2. Numbering-based GC (keep v_(next-1)) would keep
+    // the garbage and delete v_2 — the version CURRENT still points at
     // until the swap, which concurrent readers may be mid-scan on.
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfgc").toString + "/idx"
     Similarity.buildIvfIndex(corpus, dir, nCells = 8)
-    Similarity.rebuildIvfIndex(spark, dir) // serving = v_1
+    Similarity.rebuildIvfIndex(spark, dir) // serving = v_2
     val probes = corpus.filter($"vec_id" % 25 === 0L)
     val served = Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 2)
       .as[(Long, Long, Double, Long)].collect().toSet
-    // crashed rebuild: v_2 exists, partially written, NO meta.json
-    assert(new java.io.File(s"$dir/v_2/centroids").mkdirs())
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/v_2/centroids/part-junk"),
+    // crashed rebuild: v_3 exists, partially written, NO meta.json
+    assert(new java.io.File(s"$dir/v_3/centroids").mkdirs())
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/v_3/centroids/part-junk"),
       Array[Byte](1, 2, 3))
     // resolution ignores the incomplete version entirely
     assert(Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 2)
       .as[(Long, Long, Double, Long)].collect().toSet === served)
-    Similarity.rebuildIvfIndex(spark, dir) // publishes v_3 off v_1
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/CURRENT")).trim === "v_3")
-    assert(new java.io.File(s"$dir/v_1").exists(),
+    Similarity.rebuildIvfIndex(spark, dir) // publishes v_4 off v_2
+    assert(current(dir) === "v_4")
+    assert(new java.io.File(s"$dir/v_2").exists(),
       "the previously SERVED version must survive the swap for in-flight readers")
-    assert(!new java.io.File(s"$dir/v_2").exists(),
+    assert(!new java.io.File(s"$dir/v_3").exists(),
       "incomplete debris must be deleted, not kept as the 'previous' version")
     assert(Similarity.ivfTopKIndexed(spark, dir, probes, 5, nProbe = 2)
       .as[(Long, Long, Double, Long)].collect().toSet === served)
@@ -472,7 +480,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.buildIvfIndex(corpus.filter($"vec_id" % 10 < 8), dir, nCells = 8)
     Similarity.appendToIvfIndex(corpus.filter($"vec_id" % 10 >= 8), dir)
     val r = Similarity.ivfCellStats(spark, dir).collect().head
-    val perCell = spark.read.parquet(s"$dir/inverted")
+    val perCell = spark.read.parquet(s"${served(dir)}/inverted")
       .groupBy("cell").count().as[(Int, Long)].collect().map(_._2)
     assert(r.getAs[Long]("total_vecs") === 200L, "build + append must cover the corpus once")
     assert(r.getAs[Long]("n_cells") === 8L)

@@ -208,7 +208,9 @@ class StreamingSpec extends SparkSpec {
     land("v1.json", Seq(100L -> vec(), 101L -> vec(), 102L -> vec(),
       103L -> dupVec, 103L -> dupVec))
     drain()
-    val inv = () => spark.read.parquet(s"$idx/inverted")
+    // tables are read through the version each index serves
+    def served(dir: String) = graft.sources.VersionedRoot.resolve(spark, dir, "t").get
+    val inv = () => spark.read.parquet(s"${served(idx)}/inverted")
     assert(inv().count() === 20L, "16 seed + 4 distinct ingested")
     assert(inv().filter($"vec_id" === 103L).count() === 1L,
       "within-batch duplicate vec_id must collapse to one index row")
@@ -232,7 +234,7 @@ class StreamingSpec extends SparkSpec {
     assert(codes().count() === 22L, "PQ codes must cover seed + both drains once")
     assert(codes().filter($"vec_id" === 103L).count() === 1L)
     // ...and so did the composed IVFPQ tier, cell-partitioned
-    val ivfPqCodes = () => spark.read.parquet(s"$ivfPqIdx/codes")
+    val ivfPqCodes = () => spark.read.parquet(s"${served(ivfPqIdx)}/codes")
     assert(ivfPqCodes().count() === 22L, "IVFPQ codes must cover seed + both drains once")
     assert(ivfPqCodes().filter($"vec_id" === 103L).count() === 1L)
 
