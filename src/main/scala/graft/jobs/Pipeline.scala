@@ -148,7 +148,9 @@ object Pipeline {
         dayBars.select(col("user_id"), lit(null).cast("double").as("prev_close"))
           .limit(0)
       else {
-        val hist = spark.read.parquet(lake.history)
+        // lazy: a read's footer-inference job is paid only when the
+        // caller gave no slice or the orphan fallback runs
+        def hist = spark.read.parquet(lake.history)
         // the [day − lookback, day) read: from the caller's shared
         // cached slice when provided (r21 — runDay otherwise paid this
         // partition-pruned scan twice, once here and once for the
@@ -365,7 +367,8 @@ object Pipeline {
   private def dayFeatureDelta(spark: SparkSession, lake: LakePaths,
                               day: java.sql.Date, lookbackDays: Int,
                               slice: Option[DataFrame]): DataFrame = {
-    val hist = spark.read.parquet(lake.history).drop("prev_close")
+    // lazy: only the short-context fallback reads unbounded history
+    def hist = spark.read.parquet(lake.history).drop("prev_close")
     val lb = slice.map(_.drop("prev_close")).getOrElse(
       lookbackSlice(spark, lake, day, lookbackDays).drop("prev_close"))
     val daySymbols = lb.filter(col("d") === lit(day)).select("user_id").distinct()

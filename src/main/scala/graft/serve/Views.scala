@@ -2,7 +2,8 @@ package graft.serve
 
 import graft.Tables
 import graft.functions.Indicators
-import graft.operators.DailySeries
+import graft.operators.{Checkpoints, DailySeries}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,17 +13,68 @@ import org.apache.spark.sql.functions._
   * (user_id = symbol, DailySeries = price history).
   *
   * Serving notes: the reference caches each loader for 1h
-  * (`@st.cache_data(ttl=3600)`); the Spark-native equivalents of that
-  * tier are `df.cache()` on hot views or precomputed gold tables — the
-  * view functions below are the gold-table definitions. Every view is
-  * bounded (top-k or per-key slice): nothing here collects an unbounded
-  * result to the driver.
+  * (`@st.cache_data(ttl=3600)`). Here every series view reads one
+  * shared intermediate, the session's daily bars of `dir` ([[bars]]),
+  * materialized once per SNAPSHOT of the events files: a request whose
+  * file listing (path, length, mtime) differs from the one the bars
+  * were built from rebuilds them. That is exact invalidation, not a
+  * TTL: a landed day or a rewritten file is served on the next request,
+  * and an unchanged table is never re-scanned. `companyNews` needs
+  * event-grain rows and stays on the raw scan.
+  *
+  * The bars are pinned (`Checkpoints.pin`), not registered with the
+  * CacheManager through `cache`/`persist`. The CacheManager substitutes
+  * a cached plan into ANY later query of the session whose plan
+  * matches, and file indexes compare by root path; so after a file
+  * landed from outside the session, an unrelated `DailySeries(spark,
+  * dir)` (PricePredictor.features, the registry's series queries)
+  * would silently read the stale cached bars. A pinned frame is
+  * invisible to the CacheManager; ViewsSpec's freshness spec holds
+  * both sides of that.
+  *
+  * Every view is bounded (top-k or per-key slice): nothing here
+  * collects an unbounded result to the driver.
   */
 object Views {
 
-  /** data_loader.py:23-40 — company dropdown list (A5). */
+  /** The bars a session built for one events table, and the snapshot of
+    * its files they were built from. */
+  private final case class Pinned(snapshot: Set[(String, Long, Long)], bars: DataFrame)
+
+  private val pinned = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Pinned]()
+
+  /** `DailySeries(spark, dir)`, pinned once per snapshot of the events
+    * files. The snapshot is a driver-side listing of the table's leaf
+    * files, the set Spark's scan lists, taken BEFORE the build: a file
+    * landing mid-build makes the next request's snapshot differ, so it
+    * can cause a spare rebuild but never a stale hit. Concurrent misses
+    * on one (session, table) build once; the map is bounded like
+    * `ModelArtifact`'s loaded models. A superseded pin's blocks go
+    * when Spark's ContextCleaner collects its RDD, after the last
+    * request holding it. */
+  private def bars(spark: SparkSession, dir: String): DataFrame = {
+    val path = new Path(s"$dir/events.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(path)
+    // Spark's scan skips a file when any name below the root is hidden,
+    // e.g. a writer's `_temporary/.../part-*` files.
+    def hidden(p: Path): Boolean =
+      Iterator.iterate(p)(_.getParent).take(p.depth - root.depth)
+        .exists(q => q.getName.startsWith("_") || q.getName.startsWith("."))
+    val files = fs.listFiles(root, true)
+    val snapshot = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filterNot(f => hidden(f.getPath))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    if (pinned.size > 16) pinned.clear()
+    pinned.compute((spark, root.toString), (_, old) =>
+      if (old != null && old.snapshot == snapshot) old
+      else Pinned(snapshot, Checkpoints.pin(DailySeries(spark, dir)))).bars
+  }
+
+  /** data_loader.py:23-40 — company dropdown list (A5). Every event
+    * yields a bar row, so the bars hold exactly the events' users. */
   def companyList(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    bars(spark, dir)
       .select(col("user_id")).distinct()
       .withColumn("label", concat(lit("User ("), col("user_id"), lit(")")))
       .orderBy("user_id")
@@ -32,7 +84,7 @@ object Views {
   def stockData(spark: SparkSession, dir: String, userId: Long,
                 start: String, end: String): DataFrame = {
     val w = Indicators.series("user_id", "d")
-    DailySeries(spark, dir)
+    bars(spark, dir)
       .filter(col("user_id") === userId && col("d").between(start, end))
       .withColumn("sma_14", Indicators.sma(col("close"), w, 14))
       .withColumn("ema_14", Indicators.ema(spark, col("close"), w, 14))
@@ -58,7 +110,7 @@ object Views {
   /** data_loader.py:110-120 — patterns view capped at 100 (J4+O6). */
   def tradingPatterns(spark: SparkSession, dir: String): DataFrame = {
     val w = Indicators.series("user_id", "d")
-    DailySeries(spark, dir)
+    bars(spark, dir)
       .withColumn("c1", lag(col("close"), 1).over(w))
       .withColumn("c2", lag(col("close"), 2).over(w))
       .filter(col("c1").isNotNull && col("c2").isNotNull)
@@ -75,7 +127,7 @@ object Views {
   private def latestChange(spark: SparkSession, dir: String): DataFrame = {
     val w = Indicators.series("user_id", "d")
     val latest = Window.partitionBy("user_id").orderBy(col("d").desc)
-    DailySeries(spark, dir)
+    bars(spark, dir)
       .withColumn("pct_change", Indicators.pctChange(col("close"), w))
       .withColumn("rn", row_number().over(latest))
       .filter(col("rn") === 1 && col("pct_change").isNotNull)
@@ -92,7 +144,7 @@ object Views {
 
   /** data_loader.py:201-213 — market-wide daily average (A2). */
   def marketBehavior(spark: SparkSession, dir: String): DataFrame =
-    DailySeries(spark, dir)
+    bars(spark, dir)
       .groupBy("d")
       .agg(avg("close").as("avg_close"), count(lit(1)).as("n_users"))
       .orderBy("d")
@@ -100,7 +152,7 @@ object Views {
   /** data_loader.py:218-232 — top-10 intraday volatility (O3). */
   def highVolatility(spark: SparkSession, dir: String): DataFrame = {
     val latest = Window.partitionBy("user_id").orderBy(col("d").desc)
-    DailySeries(spark, dir)
+    bars(spark, dir)
       .filter(col("low") > 0)
       .withColumn("pct_range", (col("high") - col("low")) / col("low") * 100)
       .withColumn("rn", row_number().over(latest))

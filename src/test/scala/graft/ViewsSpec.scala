@@ -1,10 +1,15 @@
 package graft
 
+import graft.operators.DailySeries
 import graft.serve.Views
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The ten dashboard loaders (data_loader.py:29-235) against sf0.001:
-  * shape, bounds, and internal consistency.
+  * shape, bounds, internal consistency, equality with their registry
+  * twins, and freshness after a day lands.
   */
 class ViewsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -54,5 +59,73 @@ class ViewsSpec extends SparkSpec {
     val preds = graft.ml.PricePredictor.predictNextDay(spark, dir)
     val anyUser = preds.head().getLong(0)
     assert(Views.stockPredictions(preds, anyUser).count() === 1)
+  }
+
+  /** Multiset equality of two frames with the same columns, Spark-side. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val w = want.select(got.columns.map(col): _*)
+    assert(got.exceptAll(w).isEmpty && w.exceptAll(got).isEmpty, s"$what differs from its twin")
+  }
+
+  test("views with a registry twin serve the twin's rows") {
+    def twin(q: String) = SparkEntry.queries(q)(spark, dir)
+    assertSameRows(Views.companyList(spark, dir).select("user_id"),
+      twin("q_latest_day_per_user"), "companyList")
+    assert(Views.companyList(spark, dir)
+      .filter(col("label") =!= concat(lit("User ("), col("user_id"), lit(")"))).isEmpty)
+    assertSameRows(Views.tradingPatterns(spark, dir),
+      twin("q_w2_trend").filter(col("pattern") =!= "Neutral")
+        .orderBy(col("d").desc, col("user_id")).limit(100), "tradingPatterns")
+    // the twins round close to cents and pct_change/pct_range to 4 places
+    for ((view, q) <- Seq(Views.topGainers _ -> "q_top_gainers", Views.topLosers _ -> "q_top_losers"))
+      assertSameRows(view(spark, dir).select(col("user_id"), col("d"),
+        round(col("close"), 2).as("close"), round(col("pct_change"), 4).as("pct_change")), twin(q), q)
+    assertSameRows(Views.highVolatility(spark, dir)
+      .withColumn("pct_range", round(col("pct_range"), 4)), twin("q_top_volatility"), "highVolatility")
+    // the twin averages closes rounded to micros, the view plain doubles:
+    // they agree to within the rounding's half-micro
+    val mb = Views.marketBehavior(spark, dir)
+    val mbTwin = twin("q_market_behavior")
+    assertSameRows(mb.select("d", "n_users"), mbTwin, "marketBehavior")
+    assert(mb.join(mbTwin.withColumnRenamed("avg_close", "want"), Seq("d"))
+      .filter(abs(col("avg_close") - col("want")) > 5e-7).isEmpty, "marketBehavior avg_close")
+  }
+
+  test("views serve a day landed after their first request; plain scans see it too") {
+    val tmp = Files.createTempDirectory("graft-views")
+    try {
+      val events = Files.createDirectories(tmp.resolve("events.parquet"))
+      Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"), events.resolve("part-0.parquet"))
+      val sf = tmp.toString
+      // the next day: the last day's events a day later, plus a new user,
+      // written outside the table and moved in from outside Spark (Spark's
+      // own writer would refresh the table path it writes)
+      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val lastDay = raw.agg(max(to_date(col("ts")))).head().getDate(0)
+      val moved = raw.filter(to_date(col("ts")) === lit(lastDay))
+        .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY"))
+        .withColumn("event_id", col("event_id") + 1000000000L)
+      val newUser = raw.agg(max("user_id")).head().getLong(0) + 1
+      val nextDay = moved.unionByName(moved.limit(1).withColumn("user_id", lit(newUser)))
+      val staged = tmp.resolve("staged").toString
+      nextDay.coalesce(1).write.parquet(staged)
+
+      val days0 = Views.marketBehavior(spark, sf).collect().map(_.getDate(0))
+      val users0 = Views.companyList(spark, sf).collect().map(_.getLong(0))
+      val bars0 = DailySeries(spark, sf).count()
+      val file = Files.list(java.nio.file.Paths.get(staged)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(file, events.resolve("part-1.parquet"))
+
+      // first, before any view rebuilds: a plan-matching scan of the same
+      // table must not be answered from the views' bars
+      val newBars = nextDay.select("user_id").distinct().count()
+      assert(DailySeries(spark, sf).count() === bars0 + newBars)
+      val days1 = Views.marketBehavior(spark, sf).collect().map(_.getDate(0))
+      assert(days1.toSeq === (days0 :+ days1.last).toSeq)
+      assert(days1.last.toLocalDate === lastDay.toLocalDate.plusDays(1))
+      val users1 = Views.companyList(spark, sf).collect().map(_.getLong(0))
+      assert(users1.toSet === users0.toSet + newUser)
+    } finally rmTree(tmp.toString)
   }
 }
