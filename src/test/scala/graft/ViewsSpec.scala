@@ -4,6 +4,9 @@ import graft.operators.DailySeries
 import graft.serve.Views
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * shape, bounds, internal consistency, equality with their registry
   * twins, and freshness after a day lands.
   */
-class ViewsSpec extends SparkSpec {
+class ViewsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val dir = "/root/testdata/sf0.001"
 
   test("companyList: one row per user, labeled") {
@@ -26,8 +29,7 @@ class ViewsSpec extends SparkSpec {
     val sd = Views.stockData(spark, dir, anyUser, "2024-01-01", "2024-01-31")
     assert(sd.count() > 0)
     assert(sd.select("user_id").distinct().count() === 1)
-    for (c <- Seq("sma_14", "ema_14", "rsi_14", "bb_mid"))
-      assert(sd.columns.contains(c))
+    assert(sd.columns.toSeq.takeRight(4) === Seq("sma_14", "ema_14", "rsi_14", "bb_mid"))
   }
 
   test("topGainers/topLosers: ≤10 rows, ordered, disjoint ends") {
@@ -82,6 +84,11 @@ class ViewsSpec extends SparkSpec {
         round(col("close"), 2).as("close"), round(col("pct_change"), 4).as("pct_change")), twin(q), q)
     assertSameRows(Views.highVolatility(spark, dir)
       .withColumn("pct_range", round(col("pct_range"), 4)), twin("q_top_volatility"), "highVolatility")
+    // and rank them in the twins' order: the rounded value, then user_id
+    def order(df: DataFrame) = df.select("user_id", "d").collect().toSeq
+    for ((view, q) <- Seq(Views.topGainers _ -> "q_top_gainers", Views.topLosers _ -> "q_top_losers",
+                          Views.highVolatility _ -> "q_top_volatility"))
+      assert(order(view(spark, dir)) === order(twin(q)), s"$q order")
     // the twin averages closes rounded to micros, the view plain doubles:
     // they agree to within the rounding's half-micro
     val mb = Views.marketBehavior(spark, dir)
@@ -89,6 +96,18 @@ class ViewsSpec extends SparkSpec {
     assertSameRows(mb.select("d", "n_users"), mbTwin, "marketBehavior")
     assert(mb.join(mbTwin.withColumnRenamed("avg_close", "want"), Seq("d"))
       .filter(abs(col("avg_close") - col("want")) > 5e-7).isEmpty, "marketBehavior avg_close")
+  }
+
+  test("bounded views sort in one partition: no range shuffle, stockData no exchange") {
+    def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect()
+      collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    }
+    val anyUser = Views.companyList(spark, dir).head().getLong(0)
+    assert(exchanges(Views.stockData(spark, dir, anyUser, "2024-01-01", "2024-01-31")).isEmpty)
+    for (view <- Seq(Views.companyList(spark, dir), Views.marketBehavior(spark, dir)))
+      assert(!exchanges(view).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        view.queryExecution.executedPlan.toString)
   }
 
   test("views serve a day landed after their first request; plain scans see it too") {
@@ -110,6 +129,7 @@ class ViewsSpec extends SparkSpec {
       val staged = tmp.resolve("staged").toString
       nextDay.coalesce(1).write.parquet(staged)
 
+      assert(Views.companyNews(spark, sf, newUser).isEmpty)
       val days0 = Views.marketBehavior(spark, sf).collect().map(_.getDate(0))
       val users0 = Views.companyList(spark, sf).collect().map(_.getLong(0))
       val bars0 = DailySeries(spark, sf).count()
@@ -126,6 +146,10 @@ class ViewsSpec extends SparkSpec {
       assert(days1.last.toLocalDate === lastDay.toLocalDate.plusDays(1))
       val users1 = Views.companyList(spark, sf).collect().map(_.getLong(0))
       assert(users1.toSet === users0.toSet + newUser)
+      // the events relation companyNews reads is rebuilt with the bars
+      val news = Views.companyNews(spark, sf, newUser).collect()
+      assert(news.map(_.getAs[java.sql.Date]("event_date").toLocalDate).toSeq ===
+        Seq(lastDay.toLocalDate.plusDays(1)))
     } finally rmTree(tmp.toString)
   }
 }
