@@ -241,7 +241,7 @@ object Queries {
       |ORDER BY event_id""") { (s, dir) =>
     // event_date >= 2024-01-05 ⟺ ts >= its midnight epoch, but pushed
     // to the raw parquet column instead of filtering the derived column
-    Tables.eventsFrom(s, dir, 1704412800L)
+    Tables.eventsIn(s, dir, Some(1704412800L), None)
       .select(
         col("event_id"),
         col("ts_sec"),
@@ -251,7 +251,7 @@ object Queries {
       .orderBy("event_id")
   }
 
-  // Time-sliced rollup through Tables.eventsBetween: the [from, until)
+  // Time-sliced rollup through Tables.eventsIn: the [from, until)
   // bound is applied to the RAW parquet ts column (whatever its vintage)
   // so it reaches the scan as a pushed row-group/page filter — the 100 TB
   // "read one day, not the decade" path. TablesSpec pins the pushdown;
@@ -266,7 +266,7 @@ object Queries {
       |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
       |  AND ts <  TIMESTAMP '2024-01-12 00:00:00'
       |GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-    Tables.eventsBetween(s, dir, 1704844800L, 1705017600L)
+    Tables.eventsIn(s, dir, Some(1704844800L), Some(1705017600L))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         min("ts_sec").as("first_sec"),
@@ -1430,8 +1430,8 @@ object Queries {
       |FROM terms""") { (s, dir) =>
     // the 2024-01-15 split lands on the raw ts column (pushed row-group
     // bounds for BOTH scans) instead of the derived event_date
-    val base = Tables.eventsUntil(s, dir, 1705276800L)
-    val cur = Tables.eventsFrom(s, dir, 1705276800L)
+    val base = Tables.eventsIn(s, dir, None, Some(1705276800L))
+    val cur = Tables.eventsIn(s, dir, Some(1705276800L), None)
     graft.operators.Profile.psi(base, cur, "value", lo = 0.0, hi = 500.0, nb = 25)
       .agg(
         sort_array(collect_list(struct(col("bucket"), col("term")))).as("cs"),

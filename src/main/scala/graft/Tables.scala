@@ -236,23 +236,14 @@ object Tables {
     * (row-group + page pruning). Filtering the derived `ts` instead would
     * wrap the column in `unix_micros(...) * 1000` and read the full scan.
     * On a 100 TB events lake that is the difference between reading one
-    * day and reading the decade. [fromSec, untilSec) are UTC epoch secs. */
-  def eventsBetween(spark: SparkSession, dir: String,
-                    fromSec: Long, untilSec: Long): DataFrame =
-    boundedEvents(spark, dir, Some(fromSec), Some(untilSec))
-
-  /** Open-ended variants of [[eventsBetween]] — same raw-column pushdown,
-    * one bound. An `event_date >= D` / `event_date < D` engine filter is
-    * exactly `eventsFrom(epochSec(D))` / `eventsUntil(epochSec(D))`
-    * (event_date is the UTC floor-to-day of ts), but unlike filtering
-    * the derived column these bounds reach the parquet reader. */
-  def eventsFrom(spark: SparkSession, dir: String, fromSec: Long): DataFrame =
-    boundedEvents(spark, dir, Some(fromSec), None)
-  def eventsUntil(spark: SparkSession, dir: String, untilSec: Long): DataFrame =
-    boundedEvents(spark, dir, None, Some(untilSec))
-
-  private def boundedEvents(spark: SparkSession, dir: String,
-                            fromSec: Option[Long], untilSec: Option[Long]): DataFrame = {
+    * day and reading the decade. [fromSec, untilSec) are UTC epoch secs;
+    * `None` leaves that side open (both `None` is [[events]]). An
+    * `event_date >= D` / `event_date < D` engine filter is exactly
+    * `fromSec = epochSec(D)` / `untilSec = epochSec(D)` (event_date is
+    * the UTC floor-to-day of ts), but unlike filtering the derived
+    * column these bounds reach the parquet reader. */
+  def eventsIn(spark: SparkSession, dir: String,
+               fromSec: Option[Long], untilSec: Option[Long]): DataFrame = {
     val raw = load(spark, dir, "events")
     // foldable literals in the raw column's own type: constant-folded
     // before pushdown, so the scan sees plain `ts >= TIMESTAMP '...'`
@@ -272,7 +263,7 @@ object Tables {
   }
 
   /** The one curated events.ts drift error, shared by every site that
-    * inspects the raw column ([[boundedEvents]], [[normalizeEvents]]). */
+    * inspects the raw column ([[eventsIn]], [[normalizeEvents]]). */
   private def tsDriftError(actual: Option[DataType]): IllegalArgumentException =
     new IllegalArgumentException(
       s"testdata drift: events.ts is ${actual.fold("MISSING")(_.toString)}; " +

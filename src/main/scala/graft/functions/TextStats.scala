@@ -28,9 +28,6 @@ object TextStats {
   def nCharsNoSpace(text: Column): Column =
     length(regexp_replace(text, "\\s+", ""))
 
-  def avgTokenLen(text: Column): Column =
-    nCharsNoSpace(text).cast("double") / nTokens(text)
-
   /** Count of ASCII punctuation characters. */
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,!?;:'\"()\\[\\]-]", ""))
@@ -53,8 +50,6 @@ object TextStats {
   def qualityScoreOf(toks: Column): Column =
     least(lit(1.0), size(toks) / lit(100.0)) * (lit(1.0) - stopwordRatioOf(toks))
 
-  def qualityScore(text: Column): Column = qualityScoreOf(tokens(text))
-
   /** Language-ID heuristic: English function-word density. A real
     * pipeline extends the wordlists per language; the testdata corpus is
     * synthetic English-vocab word salad, so the interesting output is
@@ -62,11 +57,6 @@ object TextStats {
   def langGuessOf(toks: Column): Column =
     when(stopwordRatioOf(toks) >= 0.05, "en").otherwise("unknown")
 
-  def langGuess(text: Column): Column = langGuessOf(tokens(text))
-
   /** Stable document fingerprint (content hash of the canonical form). */
   def fingerprint(text: Column): Column = md5(normalize(text))
-
-  /** LSH-style band of the fingerprint (cheap bucketing key). */
-  def fingerprintBand(text: Column): Column = substring(fingerprint(text), 1, 4)
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * then reads with PartitionFilters: directory-level pruning decided at
   * planning time, which skips whole days without opening a single
   * parquet footer — one level better than the row-group pushdown
-  * [[Tables.eventsBetween]] gets on the flat file (PruningSpec pins the
+  * [[Tables.eventsIn]] gets on the flat file (PruningSpec pins the
   * plan shape, q_lake_slice oracle-pins the values).
   *
   * Reference shape: the processed-zone daily folders the reference

@@ -127,11 +127,11 @@ object Pipeline {
     * diverge for long-idle symbols (r19 advice). The fallback scan is
     * symbol-filtered and runs only when such symbols exist at all
     * (zero extra cost on a dense calendar). The merge rewrites exactly
-    * one date partition. */
-  def mergeHistoryDay(spark: SparkSession, sfDir: String, lake: LakePaths,
-                      day: java.sql.Date,
-                      lookbackDays: Int = DayLookback,
-                      preSlice: Option[DataFrame] = None): Unit = {
+    * one date partition. `pre` is [[runDay]]'s pinned [day − lookback,
+    * day) history slice, `None` when no history stands yet. */
+  private[graft] def mergeHistoryDay(spark: SparkSession, sfDir: String,
+                                     lake: LakePaths, day: java.sql.Date,
+                                     pre: Option[DataFrame]): Unit = {
     // pinned: consumed by the orphan anti-join, the updates join and
     // the merge's touched-partition collect — one source aggregation.
     // The day bound reaches the RAW events scan (r22, guide §6): the
@@ -141,33 +141,24 @@ object Pipeline {
       DailySeries.between(spark, sfDir,
           Some(epochSec(day)), Some(epochSec(day) + 86400L))
         .filter(col("d") === lit(day)))
-    val fs = new org.apache.hadoop.fs.Path(lake.history)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(lake.history)))
+    val prev = pre match {
+      case None =>
         dayBars.select(col("user_id"), lit(null).cast("double").as("prev_close"))
           .limit(0)
-      else {
-        // lazy: a read's footer-inference job is paid only when the
-        // caller gave no slice or the orphan fallback runs
-        def hist = spark.read.parquet(lake.history)
-        // the [day − lookback, day) read: from the caller's shared
-        // cached slice when provided (r21 — runDay otherwise paid this
-        // partition-pruned scan twice, once here and once for the
-        // post-merge lookback slice), a fresh pruned scan otherwise
-        val inLookback = Checkpoints.pin(preSlice.getOrElse(hist
-            .filter(col("d") >= date_sub(lit(day), lookbackDays) && col("d") < lit(day)))
+      case Some(lookback) =>
+        val inLookback = Checkpoints.pin(lookback
           .groupBy("user_id")
           .agg(max_by(col("close"), col("d")).as("prev_close")))
         val orphans = dayBars.select("user_id").distinct()
           .join(inLookback.select("user_id"), Seq("user_id"), "left_anti")
         if (orphans.isEmpty) inLookback
-        else inLookback.unionByName(hist
+        // the history read's footer-inference job is paid only here
+        else inLookback.unionByName(spark.read.parquet(lake.history)
           .filter(col("d") < lit(day))
           .join(broadcast(orphans), Seq("user_id"))
           .groupBy("user_id")
           .agg(max_by(col("close"), col("d")).as("prev_close")))
-      }
+    }
     val updates = dayBars.join(broadcast(prev), Seq("user_id"), "left")
     Sinks.mergeIntoPartitioned(updates, lake.history, Seq("user_id", "d"), "d", doUpdate = true)
   }
@@ -232,18 +223,14 @@ object Pipeline {
     Sinks.mergeIntoPartitioned(all, lake.patterns, Seq("user_id", "d", "pattern"), "d", doUpdate = false)
   }
 
-  /** [[detectPatterns]] for ONE day: the windows read a partition-
-    * pruned [day − lookback, day] history slice (every frame is
+  /** [[detectPatterns]] for ONE day: the windows read [[runDay]]'s
+    * [day − lookback, day] history `slice` (every frame is
     * backward-looking, so the slice is sufficient context), the
     * output keeps the day's rows only, and the merge rewrites one
-    * partition. `slice` lets [[runDay]] hand in the ONE shared
-    * lookback read all post-merge stages reuse. */
-  def detectPatternsDay(spark: SparkSession, lake: LakePaths,
-                        day: java.sql.Date,
-                        lookbackDays: Int = DayLookback,
-                        slice: Option[DataFrame] = None): Unit = {
-    val lb = slice.getOrElse(lookbackSlice(spark, lake, day, lookbackDays))
-    val dayRows = patternsOf(lb).filter(col("d") === lit(day))
+    * partition. */
+  private[graft] def detectPatternsDay(lake: LakePaths, day: java.sql.Date,
+                                       slice: DataFrame): Unit = {
+    val dayRows = patternsOf(slice).filter(col("d") === lit(day))
     Sinks.mergeIntoPartitioned(dayRows, lake.patterns, Seq("user_id", "d", "pattern"), "d", doUpdate = false)
   }
 
@@ -269,13 +256,8 @@ object Pipeline {
     * parquet reader, so the day path scanned the whole lake). */
   private def activityOf(spark: SparkSession, sfDir: String,
                          fromSec: Option[Long], untilSec: Option[Long]): DataFrame = {
-    val ev = (fromSec, untilSec) match {
-      case (Some(f), Some(u)) => Tables.eventsBetween(spark, sfDir, f, u)
-      case (Some(f), None)    => Tables.eventsFrom(spark, sfDir, f)
-      case (None, Some(u))    => Tables.eventsUntil(spark, sfDir, u)
-      case (None, None)       => Tables.events(spark, sfDir)
-    }
-    ev.filter(col("event_type").isin("click", "view"))
+    Tables.eventsIn(spark, sfDir, fromSec, untilSec)
+      .filter(col("event_type").isin("click", "view"))
       .groupBy(col("user_id"), col("event_date").as("d"))
       .agg(count(lit(1)).as("news_count"))
   }
@@ -293,13 +275,11 @@ object Pipeline {
 
   /** [[analyze]] for ONE day: the event scan prunes to the day AT THE
     * PARQUET READER (ts bounds, not the derived event_date), the
-    * history join reads the day's rows (from the shared `slice` when
-    * [[runDay]] provides it), the merge rewrites one partition. */
-  def analyzeDay(spark: SparkSession, sfDir: String, lake: LakePaths,
-                 day: java.sql.Date,
-                 slice: Option[DataFrame] = None): Unit = {
-    val hist = slice.getOrElse(spark.read.parquet(lake.history))
-      .filter(col("d") === lit(day))
+    * history join reads the day's rows from [[runDay]]'s `slice`, the
+    * merge rewrites one partition. */
+  private[graft] def analyzeDay(spark: SparkSession, sfDir: String, lake: LakePaths,
+                                day: java.sql.Date, slice: DataFrame): Unit = {
+    val hist = slice.filter(col("d") === lit(day))
     val activity = activityOf(spark, sfDir,
       Some(epochSec(day)), Some(epochSec(day) + 86400L))
     val joined = analysisOf(hist, activity)
@@ -324,7 +304,7 @@ object Pipeline {
     * this whole-history pass recomputes everything the table caches,
     * and a later [[runDay]] re-bootstraps it (maintaining it here
     * would tax every full replay for a table only the day path reads). */
-  def predict(spark: SparkSession, sfDir: String, lake: LakePaths): Unit = {
+  def predict(spark: SparkSession, lake: LakePaths): Unit = {
     // train from the MERGED history stage 2 just wrote — exactly the
     // reference, which trains from stock_price_history
     // (analyze_news_stock_patterns.py:76-111), and one raw-events
@@ -355,7 +335,7 @@ object Pipeline {
     * Derivation cost is day-proportional: each symbol needs its last
     * THREE rows ≤ `day` (fringe−1 feeds the fringe's prev_close/
     * pct_change, `day` feeds its label). Symbols with ≥3 rows inside
-    * the lookback take them from the shared partition-pruned slice; a
+    * the lookback take them from [[runDay]]'s shared slice; a
     * symbol with fewer (idle past the bound, or genuinely new) reads
     * its last three rows unbounded but symbol-filtered — rare by
     * construction, and skipped entirely when no such symbol exists.
@@ -365,12 +345,10 @@ object Pipeline {
     * label), which is what makes the witness fold and the standing
     * feature table exact, not approximate (PipelineSpec pins both). */
   private def dayFeatureDelta(spark: SparkSession, lake: LakePaths,
-                              day: java.sql.Date, lookbackDays: Int,
-                              slice: Option[DataFrame]): DataFrame = {
+                              day: java.sql.Date, slice: DataFrame): DataFrame = {
     // lazy: only the short-context fallback reads unbounded history
     def hist = spark.read.parquet(lake.history).drop("prev_close")
-    val lb = slice.map(_.drop("prev_close")).getOrElse(
-      lookbackSlice(spark, lake, day, lookbackDays).drop("prev_close"))
+    val lb = slice.drop("prev_close")
     val daySymbols = lb.filter(col("d") === lit(day)).select("user_id").distinct()
     val scope = lb.join(broadcast(daySymbols), Seq("user_id"))
     // ONE symbols-dimension collect decides the safe/unsafe split —
@@ -425,16 +403,15 @@ object Pipeline {
     *
     * Assumes the [[runDay]] append-only contract (`day` ≥ the standing
     * frontier) — that is precisely what makes the fringe rows the
-    * complete delta. */
-  def predictDay(spark: SparkSession, sfDir: String, lake: LakePaths,
-                 day: java.sql.Date,
-                 lookbackDays: Int = DayLookback,
-                 slice: Option[DataFrame] = None): Unit = {
+    * complete delta — and takes its [day − lookback, day] history
+    * `slice`. */
+  private[graft] def predictDay(spark: SparkSession, lake: LakePaths,
+                                day: java.sql.Date, slice: DataFrame): Unit = {
     graft.ml.ModelArtifact.init(spark, lake.models) // no-op once initialized
     val featP = new org.apache.hadoop.fs.Path(lake.features)
     val fs = featP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val delta = Checkpoints.pin(
-      dayFeatureDelta(spark, lake, day, lookbackDays, slice))
+      dayFeatureDelta(spark, lake, day, slice))
     val refit =
       if (!fs.exists(featP)) {
         // bootstrap: one full derivation stands the table up and one
@@ -469,13 +446,6 @@ object Pipeline {
     val preds = graft.ml.ModelArtifact.scoreServed(toScore, lake.models)
     Sinks.mergeIntoPartitioned(preds, lake.predictions, Seq("user_id", "d"), "d", doUpdate = true)
   }
-
-  /** The one partition-pruned standing-history read every post-merge
-    * day stage works from: [day − lookback, day]. */
-  private def lookbackSlice(spark: SparkSession, lake: LakePaths,
-                            day: java.sql.Date, lookbackDays: Int): DataFrame =
-    spark.read.parquet(lake.history)
-      .filter(col("d") >= date_sub(lit(day), lookbackDays) && col("d") <= lit(day))
 
   /** The [[runDay]] append-only guard: `day` must be ≥ every date
     * already in standing history (equality = the sanctioned re-run of
@@ -544,7 +514,7 @@ object Pipeline {
       "merge_history" -> (() => mergeHistory(spark, sfDir, lake, before)),
       "detect_patterns" -> (() => detectPatterns(spark, lake)),
       "analyze" -> (() => analyze(spark, sfDir, lake, before)),
-      "predict" -> (() => predict(spark, sfDir, lake))))
+      "predict" -> (() => predict(spark, lake))))
     lake
   }
 
@@ -594,16 +564,14 @@ object Pipeline {
             if (!fs.exists(new org.apache.hadoop.fs.Path(lake.history))) None
             else Some(Checkpoints.pin(spark.read.parquet(lake.history)
               .filter(col("d") >= date_sub(lit(day), lookbackDays) && col("d") < lit(day))))
-          mergeHistoryDay(spark, sfDir, lake, day, lookbackDays, pre)
+          mergeHistoryDay(spark, sfDir, lake, day, pre)
           val dayRows = spark.read.parquet(lake.history)
             .filter(col("d") === lit(day))
           slice = pre.fold(dayRows)(_.unionByName(dayRows)).cache()
         }),
-        "detect_patterns" -> (() =>
-          detectPatternsDay(spark, lake, day, lookbackDays, Some(slice))),
-        "analyze" -> (() => analyzeDay(spark, sfDir, lake, day, Some(slice))),
-        "predict" -> (() =>
-          predictDay(spark, sfDir, lake, day, lookbackDays, Some(slice)))))
+        "detect_patterns" -> (() => detectPatternsDay(lake, day, slice)),
+        "analyze" -> (() => analyzeDay(spark, sfDir, lake, day, slice)),
+        "predict" -> (() => predictDay(spark, lake, day, slice))))
     } finally if (slice != null) slice.unpersist()
     lake
   }

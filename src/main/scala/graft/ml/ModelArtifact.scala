@@ -41,7 +41,7 @@ import org.apache.spark.ml.PipelineModel
   *  - [[maybeRefresh]] is the drift loop: refit on growth past
   *    `growthPct`, on any non-growth content change (fingerprint),
   *    on an in-place change mid-growth-window (last-tick identity),
-  *    or on per-feature distribution drift past `psiBound` (the
+  *    or on per-feature distribution drift past [[DriftPsi]] (the
   *    served version's fit-time histogram vs the frame — re-running
   *    L-BFGS per unchanged day is wasted work; never refitting
   *    serves a model blind to new regimes). The tick costs ONE
@@ -94,6 +94,14 @@ object ModelArtifact {
     * shifted). */
   private val HistBuckets = 10
 
+  /** PSI past which a monitored column counts as drifted — the
+    * [[graft.operators.Profile.psi]] "shifted" band. */
+  private val DriftPsi = 0.25
+
+  /** Growth percent past the served version's `train_rows` that refits
+    * — [[maybeRefresh]]'s default and the folded tick's bound. */
+  private val GrowthPct = 10
+
   /** The training frame's identity in ONE aggregation: exact row
     * count plus the house count+XOR content fingerprint's XOR half
     * (order- and layout-independent). The count alone was the r18
@@ -101,10 +109,8 @@ object ModelArtifact {
     * without changing the count, which a count-only witness would
     * serve a superseded fit against forever (r18 review). */
   private[graft] def frameIdentity(feats: DataFrame): (Long, Long) = {
-    val fp = graft.operators.Profile.contentFingerprint(feats,
-      d => xxhash64(canonCols(d).map(col): _*))
-    val i = fp.indexOf('x')
-    (fp.substring(0, i).toLong, fp.substring(i + 1).toLong)
+    val w = witnessOf(feats, None, None)
+    (w.n, w.fp)
   }
 
   /** Finite view of a monitored column: null for NULL and NaN and
@@ -124,7 +130,7 @@ object ModelArtifact {
     * plus the null/NaN bucket. `sign` (the fold's ±1 column) weights
     * each indicator so replaced rows subtract and new rows add. */
   private def bucketCountCols(c: String, lo: Double, hi: Double,
-                              sign: Option[Column] = None): Seq[Column] = {
+                              sign: Column): Seq[Column] = {
     val d = finiteD(c)
     val b =
       if (!(lo < hi)) lit(0L)
@@ -133,34 +139,67 @@ object ModelArtifact {
         least(lit(HistBuckets - 1L), greatest(lit(0L),
           floor((d - lit(lo)) / lit(step)).cast("long")))
       }
-    val one = sign.getOrElse(lit(1L))
     (0 until HistBuckets).map(i =>
-      coalesce(sum(when(d.isNotNull && b === i, one).otherwise(0L)), lit(0L))) :+
-      coalesce(sum(when(d.isNull, one).otherwise(0L)), lit(0L))
+      coalesce(sum(when(d.isNotNull && b === i, sign).otherwise(0L)), lit(0L))) :+
+      coalesce(sum(when(d.isNull, sign).otherwise(0L)), lit(0L))
   }
 
-  /** Fit-time histogram meta fields for every monitored column:
-    * `h_<col>_lo` / `h_<col>_hi` (IEEE-754 bits of the observed
-    * finite range) and `h_<col>_b0..b<B-1>` / `h_<col>_bn` counts.
-    * Two aggregations over the pinned frame (edges, then counts) —
-    * fit-time cost beside the L-BFGS solves, not tick cost. */
-  private def histogramFields(feats: DataFrame): Seq[(String, Long)] = {
+  /** A frame's drift witness: exact row count, canonical XOR
+    * fingerprint, and per monitored column the bucket counts (the
+    * [[HistBuckets]] finite ones, then null/NaN) under a version's
+    * stored edges — empty when measured without edges. Every field is
+    * additive ([[+]]): the count and buckets sum, the XOR is
+    * self-inverse. */
+  private case class Witness(n: Long, fp: Long, buckets: Map[String, IndexedSeq[Long]]) {
+    def +(d: Witness): Witness = Witness(n + d.n, fp ^ d.fp,
+      buckets.map { case (c, b) => c -> b.zip(d.buckets(c)).map { case (x, y) => x + y } })
+  }
+
+  /** The ONE witness aggregation — the full tick, the fit, the fold
+    * and the fold-equality hook all measure through it, so no two can
+    * count differently. `newRows` count +1 and `oldRows` (the rows a
+    * merge replaced) −1; without `oldRows` no union is planned. The
+    * buckets count under the `h_<col>_lo/hi` edges of `edges`. */
+  private def witnessOf(newRows: DataFrame, oldRows: Option[DataFrame],
+                        edges: Option[Map[String, Long]]): Witness = {
+    val cols = canonCols(newRows).map(col)
+    val (rows, sign) = oldRows match {
+      case None => (newRows, lit(1L))
+      case Some(old) =>
+        (old.select(cols :+ lit(-1L).as("__sgn"): _*)
+          .unionByName(newRows.select(cols :+ lit(1L).as("__sgn"): _*)), col("__sgn"))
+    }
+    def edge(m: Map[String, Long], k: String) = java.lang.Double.longBitsToDouble(m(k))
+    val aggCols = Seq(coalesce(sum(sign), lit(0L)), coalesce(expr("bit_xor(__h)"), lit(0L))) ++
+      edges.toSeq.flatMap(m => HistCols.flatMap(c =>
+        bucketCountCols(c, edge(m, s"h_${c}_lo"), edge(m, s"h_${c}_hi"), sign)))
+    val row = rows.withColumn("__h", xxhash64(cols: _*))
+      .agg(aggCols.head, aggCols.tail: _*).head()
+    val buckets = edges.fold(Map.empty[String, IndexedSeq[Long]]) { _ =>
+      HistCols.zipWithIndex.map { case (c, ci) =>
+        c -> (0 to HistBuckets).map(b => row.getLong(2 + ci * (HistBuckets + 1) + b))
+      }.toMap
+    }
+    Witness(row.getLong(0), row.getLong(1), buckets)
+  }
+
+  /** The fit-time witness: `h_<col>_lo` / `h_<col>_hi` (IEEE-754 bits
+    * of the observed finite range) for every monitored column, then
+    * one [[witnessOf]] under those edges — the frame's exact count and
+    * fingerprint plus its `h_<col>_b0..b<B-1>` / `h_<col>_bn` counts.
+    * Returns the histogram meta fields and the witness. Two
+    * aggregations over the pinned frame — fit-time cost beside the
+    * L-BFGS solves, not tick cost. */
+  private def fitWitness(feats: DataFrame): (Seq[(String, Long)], Witness) = {
     val boundCols = HistCols.flatMap(c => Seq(min(finiteD(c)), max(finiteD(c))))
     val bounds = feats.agg(boundCols.head, boundCols.tail: _*).head()
+    def bits(i: Int) = java.lang.Double.doubleToLongBits(
+      if (bounds.isNullAt(i)) 0.0 else bounds.getDouble(i))
     val edges = HistCols.zipWithIndex.map { case (c, i) =>
-      val lo = if (bounds.isNullAt(2 * i)) 0.0 else bounds.getDouble(2 * i)
-      val hi = if (bounds.isNullAt(2 * i + 1)) 0.0 else bounds.getDouble(2 * i + 1)
-      (c, lo, hi)
+      c -> Seq(s"h_${c}_lo" -> bits(2 * i), s"h_${c}_hi" -> bits(2 * i + 1))
     }
-    val countCols = edges.flatMap { case (c, lo, hi) => bucketCountCols(c, lo, hi) }
-    val counts = feats.agg(countCols.head, countCols.tail: _*).head()
-    edges.zipWithIndex.flatMap { case ((c, lo, hi), ci) =>
-      val base = ci * (HistBuckets + 1)
-      Seq(s"h_${c}_lo" -> java.lang.Double.doubleToLongBits(lo),
-        s"h_${c}_hi" -> java.lang.Double.doubleToLongBits(hi)) ++
-        (0 until HistBuckets).map(b => s"h_${c}_b$b" -> counts.getLong(base + b)) :+
-        (s"h_${c}_bn" -> counts.getLong(base + HistBuckets))
-    }
+    val wit = witnessOf(feats, None, Some(edges.flatMap(_._2).toMap))
+    (edges.flatMap { case (c, e) => e ++ bucketFields(Map(c -> wit.buckets(c))) }, wit)
   }
 
   /** The fixed-bucketing PSI between a stored fit-time histogram and
@@ -178,14 +217,22 @@ object ModelArtifact {
     }.sum
   }
 
-  /** Does this version meta carry the full histogram tier for every
-    * monitored column? (Pre-r19 versions don't — the tick skips PSI
-    * until the next refit publishes one.) */
-  private def hasHistogram(vmeta: Map[String, Long]): Boolean =
-    HistCols.forall { c =>
-      vmeta.contains(s"h_${c}_lo") && vmeta.contains(s"h_${c}_hi") &&
-        (0 until HistBuckets).forall(b => vmeta.contains(s"h_${c}_b$b")) &&
-        vmeta.contains(s"h_${c}_bn")
+  /** The served version dir and its meta. Loud when that meta lacks
+    * the fit-time histogram the PSI rule compares against: [[refresh]]
+    * always writes one, so a version without it was not published by
+    * this artifact's refresh. */
+  private def servedVersion(spark: SparkSession, path: String)
+      : Option[(String, Map[String, Long])] =
+    graft.sources.VersionedRoot.resolve(spark, modelsRoot(path), What).map { r =>
+      val m = graft.sources.IndexMeta.read(spark, s"$r/meta.json", s"$What version")
+      val missing = HistCols.flatMap(c =>
+        Seq(s"h_${c}_lo", s"h_${c}_hi") ++ (0 to HistBuckets).map(bucketField(c, _)))
+        .filterNot(m.contains)
+      require(missing.isEmpty,
+        s"$What version $r has no fit-time histogram (${missing.size} field(s) " +
+          s"missing, e.g. ${missing.headOption.getOrElse("")}) — run refresh to " +
+          "publish a version the drift tick can compare against")
+      r -> m
     }
 
   /** Write the feature-schema version meta once — [[graft.operators
@@ -209,10 +256,10 @@ object ModelArtifact {
     val root = modelsRoot(path)
     val served = graft.sources.VersionedRoot.resolve(spark, root, What)
     val newName = graft.sources.VersionedRoot.nextVersion(spark, root)
-    // one materialization feeds the identity agg and both fits' passes
+    // one materialization feeds the witness aggs and both fits' passes
     val pinned = graft.operators.Checkpoints.pin(feats)
-    val (n, fp) = frameIdentity(pinned)
-    require(n > 0,
+    val (hist, wit) = fitWitness(pinned)
+    require(wit.n > 0,
       s"$What at $path: refusing to fit on an empty training frame")
     val primary = PricePredictor.fitPrimary(pinned)
     val residual = PricePredictor.fitResidual(primary, pinned)
@@ -224,15 +271,14 @@ object ModelArtifact {
     // advice: without a distribution witness, sub-bound growth mixed
     // with in-place corrections served a superseded fit with no bound
     // in time)
-    val hist = histogramFields(pinned)
     graft.sources.IndexMeta.write(spark, s"$root/$newName/meta.json",
-      Seq("feat_version" -> 1L, "train_rows" -> n, "train_fp" -> fp) ++ hist)
+      Seq("feat_version" -> 1L, "train_rows" -> wit.n, "train_fp" -> wit.fp) ++ hist)
     graft.sources.VersionedRoot.publish(spark, root, newName, served)
     // re-base the maintained witness for free: at fit time the frame's
     // current bucket counts under the new edges ARE the fit-time
     // histogram, and (n, fp) were just computed — no extra pass
-    writeWit(spark, path, newName.stripPrefix("v_").toLong, n, fp,
-      hist.filter { case (k, _) => k.contains("_b") })
+    writeWit(spark, path, newName.stripPrefix("v_").toLong, wit.n, wit.fp,
+      bucketFields(wit.buckets))
     newName
   }
 
@@ -260,73 +306,51 @@ object ModelArtifact {
     *  4. DISTRIBUTION DRIFT: PSI between the served version's
     *     fit-time per-feature histogram and the current frame's
     *     counts (same stored edges, fixed-bucket Laplace smoothing)
-    *     exceeds `psiBound` on ANY monitored column — the covariate/
+    *     exceeds [[DriftPsi]] on ANY monitored column — the covariate/
     *     label shift trigger that catches sub-bound growth whose DATA
     *     moved (the reference refits unconditionally every run; this
-    *     is the tick-cheap equivalent). Pre-r19 versions without a
-    *     stored histogram skip this rule until their next refit.
+    *     is the tick-cheap equivalent). A served version without a
+    *     stored histogram fails loudly ([[servedVersion]]).
     *
     * The remaining honest blind window: sub-bound net growth whose
     * in-place corrections arrive in the SAME tick as the growth and
-    * whose distributional shift stays under `psiBound` — it rides at
+    * whose distributional shift stays under [[DriftPsi]] — it rides at
     * most until the growth bound, the contract every artifact family
     * makes. Loud on a missing/invalid artifact; None only for "empty
     * training frame" or "fresh enough". Tick cost: ONE aggregation of
     * `feats` (count + XOR + all histogram buckets in the same pass)
     * plus the advisory tick-file write — never a fit. */
   def maybeRefresh(spark: SparkSession, path: String, feats: DataFrame,
-                   growthPct: Int = 10, psiBound: Double = 0.25): Option[String] = {
+                   growthPct: Int = GrowthPct): Option[String] = {
     require(growthPct >= 1 && growthPct <= 1000,
       s"growthPct must be in 1..1000, got $growthPct")
-    require(psiBound > 0, s"psiBound must be positive, got $psiBound")
     graft.sources.IndexMeta.read(spark, s"$path/meta.json", What)
     requireMonitored(feats, "tick")
-    val root = modelsRoot(path)
-    val served = graft.sources.VersionedRoot.resolve(spark, root, What)
-    val vmeta = served.map(r => graft.sources.IndexMeta
-      .read(spark, s"$r/meta.json", s"$What version"))
-    val histMeta = vmeta.filter(hasHistogram)
-    val (cur, fp, buckets) = measure(feats, histMeta)
-    if (cur == 0L) return None // nothing to fit — never publish from nothing
-    val prevTick = readTick(spark, path)
-    val stale = decideStale(vmeta, prevTick, cur, fp, buckets, growthPct, psiBound)
-    val out = if (stale) Some(refresh(spark, path, feats)) else None
-    if (!stale) served.foreach { r =>
-      // keep the maintained witness current (refresh re-bases it on
-      // the stale path): base version + this tick's full measurement,
-      // so a folded tick can pick up exactly where the full tick left
-      writeWit(spark, path, versionNum(r), cur, fp,
-        buckets.toSeq.flatMap(b => HistCols.flatMap(c =>
-          b(c).zipWithIndex.map { case (v, i) => bucketField(c, i) -> v })))
-    }
-    writeTick(spark, path, cur, fp)
-    out
+    val served = servedVersion(spark, path)
+    decideAndRecord(spark, path, served,
+      witnessOf(feats, None, served.map(_._2)), growthPct, () => feats, None)
   }
 
-  /** The frame's full witness in ONE aggregation: exact count, the
-    * canonical-column XOR fingerprint and — when the served version
-    * stored a histogram — every bucket re-count under the STORED
-    * edges. Shared by the full tick and the fold-equality hook. */
-  private def measure(feats: DataFrame, histMeta: Option[Map[String, Long]])
-      : (Long, Long, Option[Map[String, IndexedSeq[Long]]]) = {
-    val withH = feats.select(feats.columns.map(col) :+
-      xxhash64(canonCols(feats).map(col): _*).as("__h"): _*)
-    val aggCols = Seq(count(lit(1)), coalesce(expr("bit_xor(__h)"), lit(0L))) ++
-      histMeta.toSeq.flatMap { m =>
-        HistCols.flatMap { c =>
-          bucketCountCols(c,
-            java.lang.Double.longBitsToDouble(m(s"h_${c}_lo")),
-            java.lang.Double.longBitsToDouble(m(s"h_${c}_hi")))
-        }
-      }
-    val row = withH.agg(aggCols.head, aggCols.tail: _*).head()
-    val buckets = histMeta.map { _ =>
-      HistCols.zipWithIndex.map { case (c, ci) =>
-        c -> (0 to HistBuckets)
-          .map(b => row.getLong(2 + ci * (HistBuckets + 1) + b)).toIndexedSeq
-      }.toMap
+  /** The tick's tail, shared by [[maybeRefresh]] and
+    * [[maybeRefreshFolded]]: no-op on an empty frame, otherwise decide
+    * on `cur`, refit from `standing` when stale, else keep the
+    * maintained witness current (base version + `cur`, so a folded
+    * tick picks up exactly where this one left; refresh re-bases it on
+    * the stale path), then record the tick. `lastDay` stamps the
+    * witness with the day a folded tick measured. */
+  private def decideAndRecord(spark: SparkSession, path: String,
+                              served: Option[(String, Map[String, Long])], cur: Witness,
+                              growthPct: Int, standing: () => DataFrame,
+                              lastDay: Option[Long]): Option[String] = {
+    if (cur.n == 0L) return None // nothing to fit — never publish from nothing
+    val stale = decideStale(served.map(_._2), readTick(spark, path), cur, growthPct)
+    val out = if (stale) Some(refresh(spark, path, standing())) else None
+    if (!stale) served.foreach { case (r, _) =>
+      writeWit(spark, path, versionNum(r), cur.n, cur.fp, bucketFields(cur.buckets), lastDay)
     }
-    (row.getLong(0), row.getLong(1), buckets)
+    if (stale) lastDay.foreach(stampWitDay(spark, path, _))
+    writeTick(spark, path, cur.n, cur.fp)
+    out
   }
 
   /** The four-witness staleness decision — ONE definition consumed by
@@ -335,21 +359,15 @@ object ModelArtifact {
     * diverge on POLICY, only on how (cur, fp, buckets) were obtained
     * (and the fold-equality spec pins that those are equal too). */
   private def decideStale(vmeta: Option[Map[String, Long]],
-      prevTick: Option[(Long, Long)], cur: Long, fp: Long,
-      buckets: Option[Map[String, IndexedSeq[Long]]],
-      growthPct: Int, psiBound: Double): Boolean = vmeta match {
+      prevTick: Option[(Long, Long)], cur: Witness, growthPct: Int): Boolean = vmeta match {
     case None => true
     case Some(m) =>
       val fitRows = m.getOrElse("train_rows", 0L)
-      val psiStale = buckets.exists { curOf =>
-        HistCols.exists { c =>
-          val fit = (0 until HistBuckets).map(b => m(s"h_${c}_b$b")) :+ m(s"h_${c}_bn")
-          psiOf(fit, curOf(c)) > psiBound
-        }
-      }
-      graft.sources.VersionedRoot.grewPast(cur, fitRows, growthPct) ||
-        (cur <= fitRows && !m.get("train_fp").contains(fp)) ||
-        prevTick.exists { case (pn, pfp) => pn == cur && pfp != fp } ||
+      val fit = bucketsOf(m)
+      val psiStale = HistCols.exists(c => psiOf(fit(c), cur.buckets(c)) > DriftPsi)
+      graft.sources.VersionedRoot.grewPast(cur.n, fitRows, growthPct) ||
+        (cur.n <= fitRows && !m.get("train_fp").contains(cur.fp)) ||
+        prevTick.exists { case (pn, pfp) => pn == cur.n && pfp != cur.fp } ||
         psiStale
   }
 
@@ -394,27 +412,17 @@ object ModelArtifact {
     * its replacements are the legitimate both-sides delta. */
   def maybeRefreshFolded(spark: SparkSession, path: String, day: Long,
                          oldRows: DataFrame, newRows: DataFrame,
-                         standing: () => DataFrame,
-                         growthPct: Int = 10, psiBound: Double = 0.25): Option[String] = {
-    require(growthPct >= 1 && growthPct <= 1000,
-      s"growthPct must be in 1..1000, got $growthPct")
-    require(psiBound > 0, s"psiBound must be positive, got $psiBound")
+                         standing: () => DataFrame): Option[String] = {
     graft.sources.IndexMeta.read(spark, s"$path/meta.json", What)
     requireMonitored(newRows, "folded tick")
-    val root = modelsRoot(path)
-    val served = graft.sources.VersionedRoot.resolve(spark, root, What)
-    val vmeta = served.map(r => graft.sources.IndexMeta
-      .read(spark, s"$r/meta.json", s"$What version"))
-    val histMeta = vmeta.filter(hasHistogram)
+    val served = servedVersion(spark, path)
     val base = for {
-      r <- served
+      (r, _) <- served
       w <- readWit(spark, path)
       if w("base_v") == versionNum(r)
-      // a histogram-monitored serving version needs a bucket-complete
-      // witness to fold onto; n/fp-only witnesses (pre-histogram
-      // vintages) fold iff the served version has no histogram either
-      if histMeta.forall(_ => HistCols.forall(c =>
-        (0 to HistBuckets).forall(b => w.contains(bucketField(c, b)))))
+      // the witness is a file read from disk: fold only onto one that
+      // carries every bucket field
+      if HistCols.forall(c => (0 to HistBuckets).forall(b => w.contains(bucketField(c, b))))
       // the crash-window guard (scaladoc above): a first fold for a
       // NEW day must see only inserts; an old row at a delta key means
       // a prior attempt merged without its witness write — re-base
@@ -423,50 +431,14 @@ object ModelArtifact {
     base match {
       case None =>
         // no foldable base: one full measurement re-bases the witness
-        val out = maybeRefresh(spark, path, standing(), growthPct, psiBound)
+        val out = maybeRefresh(spark, path, standing())
         stampWitDay(spark, path, day)
         out
       case Some(w) =>
-        // ONE day-sized aggregation: signed count, XOR over BOTH sides
-        // (self-inverse), signed bucket counts under the stored edges
-        val cols = canonCols(newRows)
-        val tagged = oldRows.select(cols.map(col): _*).withColumn("__sgn", lit(-1L))
-          .unionByName(newRows.select(cols.map(col): _*).withColumn("__sgn", lit(1L)))
-          .withColumn("__h", xxhash64(cols.map(col): _*))
-        val aggCols = Seq(
-          coalesce(sum(col("__sgn")), lit(0L)),
-          coalesce(expr("bit_xor(__h)"), lit(0L))) ++
-          histMeta.toSeq.flatMap { m =>
-            HistCols.flatMap { c =>
-              bucketCountCols(c,
-                java.lang.Double.longBitsToDouble(m(s"h_${c}_lo")),
-                java.lang.Double.longBitsToDouble(m(s"h_${c}_hi")),
-                sign = Some(col("__sgn")))
-            }
-          }
-        val row = tagged.agg(aggCols.head, aggCols.tail: _*).head()
-        val cur = w("n") + row.getLong(0)
-        val fp = w("fp") ^ row.getLong(1)
-        val buckets = histMeta.map { _ =>
-          HistCols.zipWithIndex.map { case (c, ci) =>
-            c -> (0 to HistBuckets).map(b =>
-              w(bucketField(c, b)) + row.getLong(2 + ci * (HistBuckets + 1) + b))
-              .toIndexedSeq
-          }.toMap
-        }
-        if (cur == 0L) return None
-        val prevTick = readTick(spark, path)
-        val stale = decideStale(vmeta, prevTick, cur, fp, buckets, growthPct, psiBound)
-        val out = if (stale) Some(refresh(spark, path, standing())) else None
-        if (!stale) served.foreach { r =>
-          writeWit(spark, path, versionNum(r), cur, fp,
-            buckets.toSeq.flatMap(b => HistCols.flatMap(c =>
-              b(c).zipWithIndex.map { case (v, i) => bucketField(c, i) -> v })),
-            lastDay = Some(day))
-        }
-        if (stale) stampWitDay(spark, path, day)
-        writeTick(spark, path, cur, fp)
-        out
+        // ONE day-sized signed aggregation added onto the maintained base
+        val cur = Witness(w("n"), w("fp"), bucketsOf(w)) +
+          witnessOf(newRows, Some(oldRows), served.map(_._2))
+        decideAndRecord(spark, path, served, cur, GrowthPct, standing, Some(day))
     }
   }
 
@@ -489,13 +461,10 @@ object ModelArtifact {
     * the standing frame (PipelineSpec pins adds AND in-place updates). */
   private[graft] def fullWitnessFields(spark: SparkSession, path: String,
                                        feats: DataFrame): Map[String, Long] = {
-    val served = graft.sources.VersionedRoot.resolve(spark, modelsRoot(path), What)
-    val vmeta = served.map(r => graft.sources.IndexMeta
-      .read(spark, s"$r/meta.json", s"$What version"))
-    val (cur, fp, buckets) = measure(feats, vmeta.filter(hasHistogram))
-    (Seq("base_v" -> served.map(versionNum).getOrElse(0L), "n" -> cur, "fp" -> fp) ++
-      buckets.toSeq.flatMap(b => HistCols.flatMap(c =>
-        b(c).zipWithIndex.map { case (v, i) => bucketField(c, i) -> v }))).toMap
+    val served = servedVersion(spark, path)
+    val w = witnessOf(feats, None, served.map(_._2))
+    (Seq("base_v" -> served.map(s => versionNum(s._1)).getOrElse(0L), "n" -> w.n, "fp" -> w.fp) ++
+      bucketFields(w.buckets)).toMap
   }
 
   private[graft] def readWitFields(spark: SparkSession, path: String): Option[Map[String, Long]] =
@@ -506,6 +475,20 @@ object ModelArtifact {
 
   private def bucketField(c: String, i: Int): String =
     if (i == HistBuckets) s"h_${c}_bn" else s"h_${c}_b$i"
+
+  /** The bucket map stored in meta fields — the inverse of
+    * [[bucketFields]]. */
+  private def bucketsOf(fields: Map[String, Long]): Map[String, IndexedSeq[Long]] =
+    HistCols.map(c => c -> (0 to HistBuckets).map(b => fields(bucketField(c, b)))).toMap
+
+  /** A witness's bucket map as `h_<col>_b<i>` / `h_<col>_bn` meta
+    * fields, in monitored-column order. */
+  private def bucketFields(buckets: Map[String, IndexedSeq[Long]]): Seq[(String, Long)] =
+    for {
+      c <- HistCols
+      b <- buckets.get(c).toSeq
+      (v, i) <- b.zipWithIndex
+    } yield bucketField(c, i) -> v
 
   /** Last tick's (count, fp) — advisory: a missing or torn tick file
     * (crash mid-write) reads as absent and the next tick rewrites it;

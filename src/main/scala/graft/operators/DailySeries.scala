@@ -30,7 +30,7 @@ object DailySeries {
     series(Tables.events(spark, dir))
 
   /** [[apply]] over a RAW-pushdown-bounded events scan
-    * ([[Tables.eventsBetween]] family): a filter on the DERIVED
+    * ([[Tables.eventsIn]]): a filter on the DERIVED
     * `d`/`event_date` column never reaches the parquet reader, so the
     * day-scoped pipeline stages were reading the full events lake to
     * derive one day's bars (invisible at sf0.1's one row group; the
@@ -40,12 +40,7 @@ object DailySeries {
     * the q_e1_day oracle hash-gates. */
   def between(spark: SparkSession, dir: String,
               fromSec: Option[Long], untilSec: Option[Long]): DataFrame =
-    series((fromSec, untilSec) match {
-      case (Some(f), Some(u)) => Tables.eventsBetween(spark, dir, f, u)
-      case (Some(f), None)    => Tables.eventsFrom(spark, dir, f)
-      case (None, Some(u))    => Tables.eventsUntil(spark, dir, u)
-      case (None, None)       => Tables.events(spark, dir)
-    })
+    series(Tables.eventsIn(spark, dir, fromSec, untilSec))
 
   private def series(events: DataFrame): DataFrame =
     events

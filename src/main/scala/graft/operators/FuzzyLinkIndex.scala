@@ -103,20 +103,12 @@ object FuzzyLinkIndex {
     spark.read.parquet(committed: _*).select(col("id"), col("s"))
   }
 
-  /** Small-files / dir-count maintenance for the standing catalog
-    * batches — the hoisted house protocols ([[Profile
-    * .compactBatchParts]] / [[Profile.mergeBatchParts]]): per-dir
-    * rewrites and batch merges both travel the `_fp` inside the
-    * staged dir, re-derive + refuse on corruption, and keep
-    * redeliveries of merged-away batch keys no-ops via tombstoned
-    * fingerprints. Single-writer maintenance entries, like refresh. */
-  def compactCatalogBatches(spark: SparkSession, path: String,
-                            targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    graft.sources.IndexMeta.read(spark, s"$path/meta.json", "fuzzy-link index")
-    Profile.compactBatchParts(spark, path, "fuzzy-link index",
-      targetFileBytes = targetFileBytes)
-  }
-
+  /** Dir-count maintenance for the standing catalog batches — the
+    * hoisted house protocol ([[Profile.mergeBatchParts]]): batch
+    * merges travel the `_fp` inside the staged dir, re-derive + refuse
+    * on corruption, and keep redeliveries of merged-away batch keys
+    * no-ops via tombstoned fingerprints. Single-writer maintenance
+    * entry, like refresh. */
   def mergeCatalogBatches(spark: SparkSession, path: String,
                           maxDirs: Int = 64): Unit = {
     graft.sources.IndexMeta.read(spark, s"$path/meta.json", "fuzzy-link index")

@@ -36,21 +36,22 @@ object Sinks {
   def overwriteStaging(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
+  /** Files per partition dir of every [[mergeIntoPartitioned]] write. */
+  private val PartitionFiles = 4
+
   /** Bound a partitioned write's files-per-partition-dir: cluster the
     * rows by (partition value, a deterministic key-hash bucket in
-    * [0, filesPerPartition)) so each partition dir receives at most
-    * `filesPerPartition` files, whatever `spark.sql.shuffle.partitions`
+    * [0, PartitionFiles)) so each partition dir receives at most
+    * [[PartitionFiles]] files, whatever `spark.sql.shuffle.partitions`
     * the merge plan ran at. Without this every merged partition dir
     * collected one file per shuffle task (32 here), and the standing
     * table's reads paid ~files × open-latency forever — the classic
     * lake small-files leak, measured as the dominant fixed cost of the
     * day-grain pipeline reads (r19). The bucket is a hash of the merge
     * KEYS (never rand()) so retries and replays lay out identically;
-    * parallelism per partition stays `filesPerPartition` tasks, which
-    * a 100 TB deployment tunes up per its day size. */
+    * parallelism per partition stays [[PartitionFiles]] tasks. */
   private def boundedPartitionLayout(df: DataFrame, keys: Seq[String],
-                                     partitionCol: String,
-                                     filesPerPartition: Int): DataFrame = {
+                                     partitionCol: String): DataFrame = {
     // Explicit width (r22, guide §2.5): without it AQE coalesces this
     // byte-light exchange to ONE task, and that task then writes every
     // `col=value` dir of the staged output serially — measured as four
@@ -61,7 +62,7 @@ object Sinks {
     // count), so the layout contract is unchanged.
     val nW = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.repartition(nW, col(partitionCol),
-      pmod(xxhash64(keys.map(col): _*), lit(filesPerPartition)))
+      pmod(xxhash64(keys.map(col): _*), lit(PartitionFiles)))
   }
 
   /** S8/U* — keyed merge into a partitioned parquet target that only
@@ -72,13 +73,11 @@ object Sinks {
     * day's partition, not the table. Requires every merge key group to
     * live in one partition (true when partitionCol is derived from the
     * key, as with date-keyed facts). Written partitions carry at most
-    * `filesPerPartition` files ([[boundedPartitionLayout]]). */
+    * [[PartitionFiles]] files ([[boundedPartitionLayout]]). */
   def mergeIntoPartitioned(updates: DataFrame, targetPath: String, keys: Seq[String],
-                           partitionCol: String, doUpdate: Boolean,
-                           filesPerPartition: Int = 4): Unit = {
+                           partitionCol: String, doUpdate: Boolean): Unit = {
     require(keys.contains(partitionCol),
       s"partition column $partitionCol must be part of the merge key")
-    require(filesPerPartition >= 1, s"filesPerPartition must be >= 1, got $filesPerPartition")
     val spark = updates.sparkSession
     val targetP = new org.apache.hadoop.fs.Path(targetPath)
     val fs = targetP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -95,7 +94,7 @@ object Sinks {
       // [[recoverPartitionedMergeTarget]] on retry) and existence of
       // the target is a completeness guarantee.
       val staged = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
-      boundedPartitionLayout(Merge.overwrite(updates, keys), keys, partitionCol, filesPerPartition)
+      boundedPartitionLayout(Merge.overwrite(updates, keys), keys, partitionCol)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(staged.toString)
       if (!fs.rename(staged, targetP))
@@ -121,7 +120,7 @@ object Sinks {
     // retry converges.
     val staged = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
     val old = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__old")
-    boundedPartitionLayout(merged, keys, partitionCol, filesPerPartition)
+    boundedPartitionLayout(merged, keys, partitionCol)
       .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged.toString)
     fs.mkdirs(old)
     for (sp <- fs.listStatus(staged) if sp.isDirectory) {

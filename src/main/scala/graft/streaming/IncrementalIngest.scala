@@ -1,8 +1,6 @@
 package graft.streaming
 
-import graft.operators.Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -43,13 +41,4 @@ object IncrementalIngest {
       }
       .start()
   }
-
-  /** Windowed streaming aggregation (event-time tumbling window +
-    * watermark) — the standard incremental rollup shape. */
-  def windowedCounts(stream: DataFrame, tsCol: String, keyCol: String,
-                     window_ : String, delay: String): DataFrame =
-    stream
-      .withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), window_), col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 }

@@ -147,6 +147,28 @@ class MlSpec extends SparkSpec {
     } finally feats.unpersist()
   }
 
+  test("model artifact: a served version without its fit-time histogram fails the tick loudly") {
+    import graft.ml.ModelArtifact
+    import graft.sources.IndexMeta
+    // refresh always writes the histogram the PSI rule compares
+    // against; a served version whose meta lacks it must fail the tick
+    // by name, never skip the drift rule silently
+    val path = java.nio.file.Files.createTempDirectory("graft-mlnohist").toString
+    ModelArtifact.init(spark, path)
+    val feats = PricePredictor.features(spark, dir).cache()
+    try {
+      val v = ModelArtifact.refresh(spark, path, feats)
+      val vmeta = s"$path/models/$v/meta.json"
+      IndexMeta.write(spark, vmeta, IndexMeta.read(spark, vmeta, "model version")
+        .filterNot(_._1.startsWith("h_")).toSeq)
+      val e = intercept[IllegalArgumentException] {
+        ModelArtifact.maybeRefresh(spark, path, feats)
+      }
+      assert(e.getMessage.contains(s"models/$v has no fit-time histogram"), e.getMessage)
+      assert(e.getMessage.contains("run refresh"), e.getMessage)
+    } finally feats.unpersist()
+  }
+
   test("drift monitor derives from the one feature recipe; a frame missing a monitored column is loud") {
     import graft.ml.ModelArtifact
     // ONE source of truth (r19 verdict #1): the fitted assembler's

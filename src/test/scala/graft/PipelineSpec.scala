@@ -12,6 +12,13 @@ import java.nio.file.Files
 class PipelineSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** The [day − lookbackDays, day] history slice [[Pipeline.runDay]]
+    * hands its post-merge stages. */
+  private def daySlice(lake: Pipeline.LakePaths, day: java.sql.Date,
+                       lookbackDays: Int) =
+    spark.read.parquet(lake.history)
+      .filter(col("d") >= date_sub(lit(day), lookbackDays) && col("d") <= lit(day))
+
   test("full E1 run produces keyed tables; rerun is idempotent") {
     val lakeRoot = Files.createTempDirectory("graft-lake").toString
     val lake = Pipeline.run(spark, sfDir, lakeRoot)
@@ -116,7 +123,7 @@ class PipelineSpec extends SparkSpec {
     graft.ml.ModelArtifact.init(spark, lake.models)
     graft.ml.ModelArtifact.refresh(spark, lake.models,
       graft.ml.PricePredictor.featuresOf(spark.read.parquet(lake.history)))
-    Pipeline.predictDay(spark, "unused-src-dir", lake, day, lookbackDays = 5)
+    Pipeline.predictDay(spark, lake, day, daySlice(lake, day, 5))
     val preds = spark.read.parquet(lake.predictions)
       .select("user_id", "d").as[(Long, java.sql.Date)].collect().toSet
     assert(preds.contains((1L, d("2024-02-10"))),
@@ -181,13 +188,13 @@ class PipelineSpec extends SparkSpec {
     // day 32: bootstrap (stands the table up, full tick bases the wit)
     bars(Seq(32), (u, _) => 20.0 + u)
       .write.mode("append").partitionBy("d").parquet(lake.history)
-    Pipeline.predictDay(spark, "unused-src-dir", lake, dayN(32), lookbackDays = 60)
+    Pipeline.predictDay(spark, lake, dayN(32), daySlice(lake, dayN(32), 60))
     assertConverged("bootstrap day")
     // day 33: the FOLD path, pure adds (each symbol's fringe row is an
     // insert — its label just arrived)
     bars(Seq(33), (u, _) => 21.0 + u)
       .write.mode("append").partitionBy("d").parquet(lake.history)
-    Pipeline.predictDay(spark, "unused-src-dir", lake, dayN(33), lookbackDays = 60)
+    Pipeline.predictDay(spark, lake, dayN(33), daySlice(lake, dayN(33), 60))
     assertConverged("fold day (adds)")
     assert(ModelArtifact.servedVersionMeta(spark, lake.models)("train_rows") === served,
       "sub-bound adds must ride — the fixture's fold path, not a refit, produced the witness")
@@ -204,7 +211,7 @@ class PipelineSpec extends SparkSpec {
     rmTree(lake.history)
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/h"),
       java.nio.file.Paths.get(lake.history))
-    Pipeline.predictDay(spark, "unused-src-dir", lake, dayN(33), lookbackDays = 60)
+    Pipeline.predictDay(spark, lake, dayN(33), daySlice(lake, dayN(33), 60))
     assertConverged("fold day (in-place update)")
     // the folded fingerprint must have DETECTED the correction: same
     // count as the previous tick + different content is exactly rule 3
@@ -229,9 +236,9 @@ class PipelineSpec extends SparkSpec {
       .write.mode("append").partitionBy("d").parquet(lake.history)
     val witPath = java.nio.file.Paths.get(s"${lake.models}/wit.json")
     val staleWit = java.nio.file.Files.readAllBytes(witPath)
-    Pipeline.predictDay(spark, "unused-src-dir", lake, dayN(34), lookbackDays = 60)
+    Pipeline.predictDay(spark, lake, dayN(34), daySlice(lake, dayN(34), 60))
     java.nio.file.Files.write(witPath, staleWit)
-    Pipeline.predictDay(spark, "unused-src-dir", lake, dayN(34), lookbackDays = 60)
+    Pipeline.predictDay(spark, lake, dayN(34), daySlice(lake, dayN(34), 60))
     assertConverged("crash-window retry (stale witness re-based, not folded onto)")
   }
 

@@ -106,7 +106,7 @@ class TablesSpec extends SparkSpec {
     for (vintage <- Seq("micros", "ntz", "long")) {
       val dir = writeVintage(vintage)
       // [1700000000, 1700000300) keeps only event 1 of the two rows
-      val df = Tables.eventsBetween(spark, dir, 1700000000L, 1700000300L)
+      val df = Tables.eventsIn(spark, dir, Some(1700000000L), Some(1700000300L))
       val rows = df.select("event_id", "ts").collect()
       assert(rows.map(_.getLong(0)).toSeq === Seq(1L), s"vintage=$vintage")
       assert(rows.head.getLong(1) === 1700000000123456000L, s"vintage=$vintage")
@@ -119,11 +119,11 @@ class TablesSpec extends SparkSpec {
   test("eventsFrom / eventsUntil push their single bound for every vintage") {
     for (vintage <- Seq("micros", "ntz", "long")) {
       val dir = writeVintage(vintage)
-      val from = Tables.eventsFrom(spark, dir, 1700000300L)
+      val from = Tables.eventsIn(spark, dir, Some(1700000300L), None)
       assert(from.select("event_id").collect().map(_.getLong(0)).toSeq === Seq(2L),
         s"vintage=$vintage")
       assert(pushedFilters(from).contains("GreaterThanOrEqual(ts"), s"vintage=$vintage")
-      val until = Tables.eventsUntil(spark, dir, 1700000300L)
+      val until = Tables.eventsIn(spark, dir, None, Some(1700000300L))
       assert(until.select("event_id").collect().map(_.getLong(0)).toSeq === Seq(1L),
         s"vintage=$vintage")
       assert(pushedFilters(until).contains("LessThan(ts"), s"vintage=$vintage")
