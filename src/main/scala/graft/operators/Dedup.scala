@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextStats
+import graft.sources.StagedCommit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -189,8 +190,9 @@ object Dedup {
     * at scale grows with FILE count (task scheduling, footer reads) on
     * top of data size — the standard operational debt of any
     * append-only index. Crash-safe staged rewrite of both tables
-    * (Sinks.compact promotes a staging dir, so a killed compaction
-    * leaves the old index intact) to ~targetFileBytes files; contents
+    * (Sinks.compact commits a staged copy, so a killed compaction
+    * leaves the old table or a commit its next run rolls forward) to
+    * ~targetFileBytes files; contents
     * are row-identical and `meta.json` is untouched, so probes before
     * and after agree exactly. */
   def compactLshIndex(spark: SparkSession, path: String,
@@ -881,7 +883,7 @@ object Dedup {
     * DOC so the endpoint→root probe reads only the batch's doc
     * buckets instead of streaming the whole state through a hash join
     * (the r13 honest-cost residual, now closed). Both are rewritten
-    * per merge behind ONE commit marker ([[applyStateCommit]]), so a
+    * per merge behind ONE commit marker ([[stateMarker]]), so a
     * crash at any point either replays the whole commit forward at
     * the next merge or leaves nothing visible — the projections can
     * never diverge, which step (1)'s correctness requires (a probe
@@ -961,9 +963,9 @@ object Dedup {
     graft.sources.IndexMeta.read(spark, s"$statePath/meta.json", "component state")
     val root = new org.apache.hadoop.fs.Path(s"$statePath/components")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$CommitMarker")),
-      s"component state at $statePath has an unfinished merge commit — " +
-        "re-run the failed mergeComponentState to roll it forward")
+    require(!StagedCommit.pending(fs, stateMarker(statePath)),
+      s"component state at $statePath has an unfinished merge commit or compaction — " +
+        "re-run the failed mergeComponentState or compactComponentState to roll it forward")
     if (fs.exists(root)) fs.listStatus(root).filter(_.isDirectory).foreach { st =>
       require(st.getPath.getName.matches("gb=\\d+"),
         s"component state at $statePath holds a non-bucket directory " +
@@ -985,9 +987,9 @@ object Dedup {
     graft.sources.IndexMeta.read(spark, s"$statePath/meta.json", "component state")
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$CommitMarker")),
-      s"component state at $statePath has an unfinished merge commit — " +
-        "re-run the failed mergeComponentState to roll it forward")
+    require(!StagedCommit.pending(fs, stateMarker(statePath)),
+      s"component state at $statePath has an unfinished merge commit or compaction — " +
+        "re-run the failed mergeComponentState or compactComponentState to roll it forward")
     val root = new org.apache.hadoop.fs.Path(s"$statePath/components_by_doc")
     if (fs.exists(root)) fs.listStatus(root).filter(_.isDirectory).foreach { st =>
       require(st.getPath.getName.matches("db=\\d+"),
@@ -1043,10 +1045,10 @@ object Dedup {
       sys.error(s"component state meta at $statePath lacks stateBuckets")).toInt
     def bucketOf(c: org.apache.spark.sql.Column) =
       pmod(xxhash64(c), lit(stateBuckets.toLong)).cast("int")
-    recoverComponentState(spark, statePath)
-    requireProjectionConsistent(spark, statePath)
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StagedCommit.recover(fs, stateMarker(statePath))
+    requireProjectionConsistent(spark, statePath)
     val Array(ca, cb) = newPairs.columns.take(2)
     val edges = newPairs.select(col(ca).as("u"), col(cb).as("v"))
       .where(col("u") =!= col("v")).distinct().localCheckpoint(true)
@@ -1105,17 +1107,17 @@ object Dedup {
         // collapse to one row before the bucket write
         .groupBy(col("doc_id")).agg(min(col("group_id")).as("group_id"))
         .withColumn("gb", bucketOf(col("group_id")))
-      // Stage BOTH tables, then commit behind ONE marker: gb staging
-      // first (read back as the upsert set for the doc projection so
-      // the two stagings can never disagree), then the marker — an
-      // atomic rename — then per-bucket promotes. A crash before the
-      // marker leaves nothing visible; a crash after it is rolled
-      // FORWARD by [[recoverComponentState]] at the next merge, so
-      // the retried batch never re-merges against a half-promoted
-      // state (the r13 advisor's duplicate-row window). NOT dynamic
+      // Stage BOTH tables, then commit behind ONE [[StagedCommit]]
+      // marker: gb staging first (read back as the upsert set for the
+      // doc projection so the two stagings can never disagree), then
+      // per-bucket replaces. A crash before the marker leaves nothing
+      // visible; a crash after it is rolled FORWARD at the next
+      // merge ([[stateMarker]]), so the retried batch never re-merges
+      // against a half-promoted state (the r13 advisor's duplicate-row
+      // window). NOT dynamic
       // partition overwrite: a bucket whose every group relabeled
       // away produces zero output rows and must be REPLACED by
-      // nothing — those buckets ride in the marker as deletes.
+      // nothing — those buckets ride in the marker as drops.
       val gbStaging = s"$statePath/components__staged"
       rewritten.write.mode("overwrite").partitionBy("gb").parquet(gbStaging)
       val rewrittenRows = spark.read.parquet(gbStaging).select("doc_id", "group_id")
@@ -1129,119 +1131,57 @@ object Dedup {
         .unionByName(rewrittenRows)
         .withColumn("db", bucketOf(col("doc_id")))
         .write.mode("overwrite").partitionBy("db").parquet(dbStaging)
-      writeStateCommit(fs, statePath, Seq(
-        ("components", "gb", touched),
-        ("components_by_doc", "db", touchedDb)))
-      applyStateCommit(spark, statePath)
-    }
-  }
-
-  /** Marker file naming the buckets of an in-flight merge commit.
-    * Present ⇒ the commit must be rolled forward before any read or
-    * further merge; absent ⇒ the state and its doc projection agree. */
-  private val CommitMarker = "commit.plan"
-
-  /** Write the commit marker ATOMICALLY (temp file + rename) after all
-    * staging is on disk. One line per touched bucket:
-    * `table<TAB>action<TAB>partitionDir`, action = `promote` when the
-    * staging holds a replacement, `delete` when the bucket emptied
-    * (every row relabeled away) and the live dir must go. Actions are
-    * fixed at marker time — staging is complete, so stg-existence is
-    * final — which is what lets recovery distinguish "promote not yet
-    * applied" from "bucket legitimately replaced by nothing". */
-  private def writeStateCommit(fs: org.apache.hadoop.fs.FileSystem, statePath: String,
-                               tables: Seq[(String, String, Seq[Int])]): Unit = {
-    val lines = tables.flatMap { case (table, pcol, touched) =>
-      touched.sorted.map { b =>
-        val part = s"$pcol=$b"
-        val stg = new org.apache.hadoop.fs.Path(s"$statePath/${table}__staged/$part")
-        val action = if (fs.exists(stg)) "promote" else "delete"
-        s"$table\t$action\t$part"
-      }
-    }
-    val tmp = new org.apache.hadoop.fs.Path(s"$statePath/$CommitMarker.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
-    val marker = new org.apache.hadoop.fs.Path(s"$statePath/$CommitMarker")
-    fs.delete(marker, false) // only reachable if a previous apply died pre-promote
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"merge: could not publish commit marker $marker")
-  }
-
-  /** Roll the marked commit FORWARD: apply every bucket action
-    * (idempotently — a promote whose staging is gone checks the
-    * target is live; a delete re-deletes nothing), then drop the
-    * marker and staging. Callable any number of times from any crash
-    * point at or after marker publication. */
-  private def applyStateCommit(spark: SparkSession, statePath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$statePath/$CommitMarker")
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    lines.filter(_.nonEmpty).foreach { line =>
-      line.split("\t") match {
-        case Array(table, action, part) =>
-          val tgt = new org.apache.hadoop.fs.Path(s"$statePath/$table/$part")
-          val stg = new org.apache.hadoop.fs.Path(s"$statePath/${table}__staged/$part")
-          action match {
-            case "promote" =>
-              if (fs.exists(stg)) {
-                if (fs.exists(tgt) && !fs.delete(tgt, true))
-                  throw new java.io.IOException(s"commit: could not drop $tgt for promote")
-                if (!fs.rename(stg, tgt))
-                  throw new java.io.IOException(s"commit: could not promote $stg")
-              } else require(fs.exists(tgt),
-                s"corrupt state commit at $statePath: $part has neither staging nor target")
-            case "delete" => fs.delete(tgt, true)
-            case other => sys.error(s"corrupt commit marker line action '$other' at $statePath")
+      val steps = Seq(("components", "gb", touched), ("components_by_doc", "db", touchedDb))
+        .flatMap { case (table, pcol, buckets) =>
+          buckets.sorted.map { b =>
+            val part = s"$pcol=$b"
+            if (fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/${table}__staged/$part")))
+              StagedCommit.Replace(s"${table}__staged/$part", s"$table/$part")
+            else StagedCommit.Drop(s"$table/$part") // every row relabeled away
           }
-        case _ => sys.error(s"corrupt commit marker line '$line' at $statePath")
-      }
+        }
+      StagedCommit.commit(fs, stateMarker(statePath), steps ++ Seq(
+        StagedCommit.Drop("components__staged"), StagedCommit.Drop("components_by_doc__staged")))
     }
-    if (!fs.delete(marker, false))
-      throw new java.io.IOException(s"commit: could not retire marker $marker")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/components__staged"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/components_by_doc__staged"), true)
   }
+
+  /** The state's one [[StagedCommit]] marker, shared by a merge and a
+    * compaction. Present ⇒ the crashed write had staged everything,
+    * and the single-writer entries (merge, compaction) roll it
+    * FORWARD first, bringing state and doc projection to the same
+    * snapshot; reads never mutate and fail loudly instead. Absent ⇒
+    * the state and its doc projection agree. Marker-less staging
+    * debris (a crash before the marker) is replaced by the next
+    * write's overwrite staging. Concurrent writes to one statePath
+    * are not supported. */
+  private def stateMarker(statePath: String) =
+    new org.apache.hadoop.fs.Path(s"$statePath/commit.plan")
 
   /** Compact the component state's merge-accumulated small files —
     * the standing-maintenance parity every persisted artifact here
     * has: each [[mergeComponentState]] rewrites its touched buckets
     * with one file per (task × bucket), so file count grows with merge
-    * cadence. Compacts BOTH projections, each with a crash-safe staged
-    * rewrite PRESERVING its bucket layout (the partition pruning IS
-    * the state's structure); contents are row-identical and
+    * cadence. Compacts BOTH projections, each with a staged rewrite
+    * PRESERVING its bucket layout (the partition pruning IS the
+    * state's structure), committed together under the state's one
+    * marker ([[stateMarker]]); contents are row-identical and
     * `meta.json` untouched, so reads and merges before/after agree
     * exactly (IncrementalCcSpec). Single-writer: do not compact
     * concurrently with a merge. */
   def compactComponentState(spark: SparkSession, statePath: String,
                             targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     graft.sources.IndexMeta.read(spark, s"$statePath/meta.json", "component state")
-    recoverComponentState(spark, statePath)
-    graft.sources.Sinks.compactPartitioned(
-      spark, s"$statePath/components", "gb", targetFileBytes)
-    graft.sources.Sinks.compactPartitioned(
-      spark, s"$statePath/components_by_doc", "db", targetFileBytes)
+    val fs = new org.apache.hadoop.fs.Path(statePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StagedCommit.recover(fs, stateMarker(statePath))
+    // both rewrites commit under the merge's own marker, so the next
+    // merge (or compaction) heals a crash in either
+    StagedCommit.commit(fs, stateMarker(statePath), Seq(
+      graft.sources.Sinks.stageCompaction(
+        spark, s"$statePath/components", Seq("gb"), targetFileBytes),
+      graft.sources.Sinks.stageCompaction(
+        spark, s"$statePath/components_by_doc", Seq("db"), targetFileBytes)))
   }
-
-  /** Heal the component-state crash windows of [[mergeComponentState]]:
-    * if a commit marker is present, the crashed merge had already
-    * staged everything — roll the whole commit FORWARD
-    * ([[applyStateCommit]]), bringing state and doc projection to the
-    * same post-merge snapshot. Runs ONLY at the start of a merge —
-    * the single-writer entry point, same placement as
-    * Sinks.recoverMergeTarget; the read path never mutates (a reader
-    * racing a live merge must not replay its marker). Marker-less
-    * staging debris (a crash before publication) needs no cleanup:
-    * the next merge's mode("overwrite") staging write replaces it.
-    * Concurrent merges to one statePath are not supported (the same
-    * single-writer contract as every persisted artifact here).
-    * Idempotent. */
-  private def recoverComponentState(spark: SparkSession, statePath: String): Unit =
-    applyStateCommit(spark, statePath)
 
   /** Canonical-document selection over resolved duplicate groups: keep
     * ONE survivor per group — the highest-scoring member (ties broken

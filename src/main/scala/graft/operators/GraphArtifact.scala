@@ -78,8 +78,8 @@ object GraphArtifact {
 
   /** The union edge set of every COMMITTED batch — singles AND merged
     * dirs carrying the `_fp` marker ([[Profile.committedPartDirs]]:
-    * mid-crash debris, `__old`/`__staged` maintenance twins and
-    * merged-away tombstones are all invisible). */
+    * mid-crash debris, `__staged` maintenance twins and merged-away
+    * tombstones are all invisible). */
   private def committedEdges(spark: SparkSession, path: String): DataFrame = {
     val committed = Profile.committedPartDirs(spark, path)
     require(committed.nonEmpty,
@@ -87,8 +87,8 @@ object GraphArtifact {
     spark.read.parquet(committed: _*).select(col("src"), col("dst"))
   }
 
-  /** Heal any crashed maintenance window — compaction twins and
-    * pending merges ([[Profile.recoverParts]]). Runs ONLY at
+  /** Heal any crashed maintenance window — pending compaction
+    * commits and merges ([[Profile.recoverParts]]). Runs ONLY at
     * single-writer entry points (compaction, merge and refresh) —
     * the read path never mutates. */
   private def recoverEdgeBatches(spark: SparkSession, path: String): Unit =
@@ -107,11 +107,10 @@ object GraphArtifact {
     * [[recoverEdgeBatches]]; replay semantics are untouched — a
     * redelivered batch still fingerprint-matches the compacted dir.
     *
-    * Concurrency caveat (r16 advice): between parking `b=<k>` aside
-    * and promoting its staged twin, that batch matches neither the
-    * committed pattern nor carries a visible `_fp` — a
-    * [[standingEdges]] read STARTED in that window sees an edge set
-    * missing one committed batch. The versioned RANKS surface is
+    * Concurrency caveat (r16 advice): a [[standingEdges]] read that
+    * starts while the compaction commit is pending fails loudly, but
+    * one that listed the parts just BEFORE the commit can open a
+    * batch dir the commit is replacing. The versioned RANKS surface is
     * immune (readers resolve `CURRENT`); the raw standing-edge
     * surface is not versioned, so compaction extends the single-
     * writer contract: schedule it when no standing-edge read (e.g.
@@ -218,9 +217,9 @@ object GraphArtifact {
     * off the standing state without re-deriving edges from raw text.
     *
     * Safe concurrent with ingest and rank refreshes, NOT with
-    * [[compactEdgeBatches]] (whose park-then-promote window briefly
-    * hides one committed batch — see its scaladoc): pace compaction
-    * outside standing-edge reads. */
+    * [[compactEdgeBatches]] (a read that listed the parts just
+    * before its commit can open a batch dir the commit replaces — see
+    * its scaladoc): pace compaction outside standing-edge reads. */
   def standingEdges(spark: SparkSession, path: String): DataFrame = {
     graft.sources.IndexMeta.read(spark, s"$path/meta.json", "rank artifact")
     committedEdges(spark, path)

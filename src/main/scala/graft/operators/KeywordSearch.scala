@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.functions.TextStats
+import graft.sources.StagedCommit
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -135,12 +137,13 @@ object KeywordSearch {
   def updateInvertedIndex(newDocs: DataFrame, indexPath: String): Unit =
     ingestIntoInvertedIndex(newDocs, indexPath)
 
-  /** Marker naming an in-flight ingest commit ([[ingestIntoInvertedIndex]]):
-    * present ⇒ staging is complete and the commit must roll FORWARD
-    * before any read or further write; absent ⇒ postings, dfreq and
-    * stats agree. Same protocol family as Dedup's component-state
-    * commit. */
-  private val IngestMarker = "commit.plan"
+  /** The index's one [[StagedCommit]] marker, shared by an ingest and a
+    * compaction. Present ⇒ staging is complete and the commit must
+    * roll FORWARD before any read or further write; absent ⇒
+    * postings, dfreq and stats agree. Both single-writer entries
+    * recover it first; [[bm25TopKIndexed]] never mutates and fails
+    * loudly while it is pending. */
+  private def markerOf(indexPath: String) = new Path(s"$indexPath/commit.plan")
 
   /** Crash-safe, replay-safe incremental indexing — the ONE
     * incremental write path ([[updateInvertedIndex]] routes here
@@ -153,13 +156,13 @@ object KeywordSearch {
     *     [[Similarity.appendToIvfIndex]]), so a crash-retried batch
     *     never double-counts a document in postings, dfreq OR stats.
     *  2. ONE-MARKER commit: the postings delta, the doc_id delta, the
-    *     merged dfreq and the merged stats are all staged aside, then a single
-    *     atomically-renamed marker flips the commit on; per-file
-    *     promotion is idempotent and [[recoverInvertedIndex]] rolls a
-    *     marked commit forward from ANY crash point. Without this, a
-    *     crash after the postings append but before the dfreq write
-    *     would leave the tables disagreeing forever — the retried
-    *     batch's anti-join would skip its docs and never heal them.
+    *     merged dfreq and the merged stats are all staged aside, then
+    *     one [[StagedCommit]] promotes them; every step is idempotent
+    *     and the next entry rolls a marked commit forward from ANY
+    *     crash point. Without this, a crash after the postings append
+    *     but before the dfreq write would leave the tables disagreeing
+    *     forever — the retried batch's anti-join would skip its docs
+    *     and never heal them.
     *  3. Within-batch duplicate doc_ids collapse to a deterministic
     *     survivor (max text fingerprint), so a replayed batch stages
     *     byte-identical deltas.
@@ -170,9 +173,8 @@ object KeywordSearch {
     * rebuild row-identically, including stats' exact avgdl. */
   def ingestIntoInvertedIndex(newDocs: DataFrame, indexPath: String): Unit = {
     val spark = newDocs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverInvertedIndex(spark, indexPath)
+    val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StagedCommit.recover(fs, markerOf(indexPath))
     val stats = spark.read.parquet(s"$indexPath/stats")
     val termBuckets = stats.select(col("term_buckets")).head().getInt(0)
     // replay anti-join reads the slim doc_id side table, NOT the
@@ -213,85 +215,19 @@ object KeywordSearch {
     Seq((nDocs, totalDl.toDouble / nDocs, termBuckets))
       .toDF("n_docs", "avgdl", "term_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats__staged")
-    // staging complete → publish the marker atomically, then apply
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexPath/$IngestMarker.tmp")
-    val out = fs.create(tmp, true)
-    try out.write("ingest\n".getBytes("UTF-8")) finally out.close()
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$IngestMarker")
-    fs.delete(marker, false) // only reachable if a previous apply died pre-promote
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"ingest: could not publish commit marker $marker")
-    applyIngestCommit(spark, indexPath)
+    // staging complete → one commit promotes all four tables: the
+    // append-shaped postings partitions and docs move in, dfreq and
+    // stats are replaced whole, then the staging roots go
+    val postingsMoves = fs.listStatus(new Path(s"$indexPath/postings__staged"))
+      .map(_.getPath.getName).filter(_.startsWith("tb="))
+      .map(tb => StagedCommit.MoveIn(s"postings__staged/$tb", s"postings/$tb"))
+    StagedCommit.commit(fs, markerOf(indexPath), postingsMoves.toSeq ++ Seq(
+      StagedCommit.MoveIn("docs__staged", "docs"),
+      StagedCommit.Replace("dfreq__staged", "dfreq"),
+      StagedCommit.Replace("stats__staged", "stats"),
+      StagedCommit.Drop("postings__staged"),
+      StagedCommit.Drop("docs__staged")))
   }
-
-  /** Roll a marked ingest commit FORWARD — callable any number of
-    * times from any crash point at or after marker publication:
-    * remaining staged postings files MOVE into their live partitions
-    * (file rename is atomic, so each file lives on exactly one side;
-    * a name already moved is skipped), then dfreq and stats promote
-    * wholesale (staging gone ⇒ verify the live table exists), then
-    * the marker retires and staging debris is dropped. Marker-less
-    * staging debris (a crash BEFORE publication) needs no cleanup:
-    * the next ingest's mode("overwrite") staging replaces it, and
-    * nothing ever promotes it. */
-  private def applyIngestCommit(spark: org.apache.spark.sql.SparkSession,
-                                indexPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$IngestMarker")
-    if (!fs.exists(marker)) return
-    // move-in promotion shared by the append-shaped tables (postings
-    // partitions, the flat docs id table): file rename is atomic, a
-    // name already moved is skipped, so any replay point is safe
-    def moveIn(srcDir: org.apache.hadoop.fs.Path,
-               tgtDir: org.apache.hadoop.fs.Path): Unit = {
-      fs.mkdirs(tgtDir)
-      fs.listStatus(srcDir).filter(_.isFile)
-        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
-        .foreach { f =>
-          val tgt = new org.apache.hadoop.fs.Path(tgtDir, f.getPath.getName)
-          if (fs.exists(tgt)) { // already moved by a previous apply
-            if (!fs.delete(f.getPath, false))
-              throw new java.io.IOException(s"ingest commit: could not drop re-staged ${f.getPath}")
-          } else if (!fs.rename(f.getPath, tgt))
-            throw new java.io.IOException(s"ingest commit: could not move ${f.getPath}")
-        }
-    }
-    val stg = new org.apache.hadoop.fs.Path(s"$indexPath/postings__staged")
-    if (fs.exists(stg)) {
-      fs.listStatus(stg).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("tb=")).foreach { part =>
-          moveIn(part.getPath,
-            new org.apache.hadoop.fs.Path(s"$indexPath/postings/${part.getPath.getName}"))
-        }
-    }
-    val docsStg = new org.apache.hadoop.fs.Path(s"$indexPath/docs__staged")
-    if (fs.exists(docsStg))
-      moveIn(docsStg, new org.apache.hadoop.fs.Path(s"$indexPath/docs"))
-    Seq("dfreq", "stats").foreach { table =>
-      val staged = new org.apache.hadoop.fs.Path(s"$indexPath/${table}__staged")
-      val live = new org.apache.hadoop.fs.Path(s"$indexPath/$table")
-      if (fs.exists(staged)) {
-        if (fs.exists(live) && !fs.delete(live, true))
-          throw new java.io.IOException(s"ingest commit: could not drop $live for promote")
-        if (!fs.rename(staged, live))
-          throw new java.io.IOException(s"ingest commit: could not promote $staged")
-      } else require(fs.exists(live),
-        s"corrupt ingest commit at $indexPath: $table has neither staging nor live table")
-    }
-    if (!fs.delete(marker, false))
-      throw new java.io.IOException(s"ingest commit: could not retire marker $marker")
-    fs.delete(stg, true)
-    fs.delete(docsStg, true)
-  }
-
-  /** Heal the ingest crash windows — runs at every single-writer
-    * entry point ([[ingestIntoInvertedIndex]], [[compactInvertedIndex]]);
-    * the read path ([[bm25TopKIndexed]]) never mutates and instead
-    * fails loudly on a marker, exactly like Dedup's state reads. */
-  private def recoverInvertedIndex(spark: org.apache.spark.sql.SparkSession,
-                                   indexPath: String): Unit =
-    applyIngestCommit(spark, indexPath)
 
   /** Compact the persisted inverted index's small files — operational
     * parity with [[graft.operators.Dedup.compactLshIndex]]: every
@@ -299,28 +235,32 @@ object KeywordSearch {
     * files into the postings' term-bucket partitions (and rewrites
     * dfreq at shuffle-partition granularity), so file count — which
     * dominates scan setup cost at scale — grows with update cadence.
-    * Rolls any marked ingest commit forward first (single-writer
+    * Rolls any marked commit forward first (single-writer
     * maintenance entry point). Crash-safe staged rewrite of both
-    * bucketed tables PRESERVING the `tb=` partition layout; contents
+    * bucketed tables PRESERVING the `tb=` partition layout, committed
+    * with the docs table under the index's one marker; contents
     * are row-identical and `stats` (one coalesced file) is untouched,
     * so [[bm25TopKIndexed]] scores before and after agree exactly
     * (KeywordSearchSpec). */
   def compactInvertedIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                            targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/stats")
+    val p = new Path(s"$indexPath/stats")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recover FIRST: the commit protocol's stats promote has a window
-    // where live stats is deleted and only stats__staged exists — the
+    // recover FIRST: the commit's stats replace has a window where
+    // live stats has moved aside and only stats__staged exists — the
     // existence check before recovery would mistake that exact crash
     // point (the one this entry is documented to heal) for "not an
     // index" (r15 review finding)
-    recoverInvertedIndex(spark, indexPath)
+    StagedCommit.recover(fs, markerOf(indexPath))
     require(fs.exists(p),
       s"no inverted index at $indexPath — only compact directories built by buildInvertedIndex")
-    graft.sources.Sinks.compactPartitioned(spark, s"$indexPath/postings", "tb", targetFileBytes)
-    graft.sources.Sinks.compactPartitioned(spark, s"$indexPath/dfreq", "tb", targetFileBytes)
-    // the docs id table accretes one small delta per ingest batch too
-    graft.sources.Sinks.compact(spark, s"$indexPath/docs", targetFileBytes)
+    // the docs id table accretes one small delta per ingest batch too;
+    // all three rewrites commit under the ingest's own marker, so one
+    // recovery heals either kind of crash
+    def staged(table: String, partitionCols: String*) = graft.sources.Sinks
+      .stageCompaction(spark, s"$indexPath/$table", partitionCols, targetFileBytes)
+    StagedCommit.commit(fs, markerOf(indexPath),
+      Seq(staged("postings", "tb"), staged("dfreq", "tb"), staged("docs")))
   }
 
   /** BM25 top-k against a persisted inverted index. Identical results
@@ -331,13 +271,13 @@ object KeywordSearch {
                       terms: Seq[String], k: Int,
                       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
-    // a present ingest marker means postings/dfreq/stats may disagree
+    // a present marker means postings/dfreq/stats may disagree
     // mid-promote: fail loudly (the single WRITER rolls it forward —
     // a reader racing a live ingest must not mutate the index)
-    val mp = new org.apache.hadoop.fs.Path(s"$indexPath/$IngestMarker")
-    require(!mp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mp),
-      s"inverted index at $indexPath has an unfinished ingest commit — " +
-        "re-run the failed ingestIntoInvertedIndex to roll it forward")
+    val mp = markerOf(indexPath)
+    require(!StagedCommit.pending(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp),
+      s"inverted index at $indexPath has an unfinished ingest commit or compaction — " +
+        "re-run the failed ingestIntoInvertedIndex or compactInvertedIndex to roll it forward")
     val stats = spark.read.parquet(s"$indexPath/stats")
     val termBuckets = stats.select(col("term_buckets")).head().getInt(0)
     // bucket ids via the exact expression the writer used (local

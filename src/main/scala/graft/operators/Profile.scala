@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.StagedCommit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -457,7 +458,7 @@ object Profile {
 
   /** The COMMITTED part-dir names under `path/parts` for `prefix`
     * (e.g. "b="): single batch dirs `<prefix><key>` and merged dirs
-    * `<prefix><lo>_<hi>` carrying the `_fp` marker; `__old`/`__staged`
+    * `<prefix><lo>_<hi>` carrying the `_fp` marker; `__staged`
     * maintenance twins never match (name match is EXACT), and
     * merged-away batches have no dir at all — their replay
     * fingerprints live in the `_tombstones` ledger, so the listing
@@ -466,9 +467,10 @@ object Profile {
     * O(batches) listing the merge exists to remove).
     *
     * LOUD when a pending merge is visible (a `__staged` twin carrying
-    * a `_sources` manifest): mid-merge the part set is transiently
-    * partial, and a silent read of it would serve wrong folds — the
-    * [[graft.operators.KeywordSearch]] ingest-marker discipline.
+    * a `_sources` manifest) or a compaction commit is pending: either
+    * way the part set is transiently partial, and a silent read of it
+    * would serve wrong folds — the [[graft.operators.KeywordSearch]]
+    * ingest-marker discipline.
     * Single-writer entries heal first ([[recoverParts]]) and never
     * see this. */
   private[operators] def committedPartDirs(spark: org.apache.spark.sql.SparkSession,
@@ -483,8 +485,8 @@ object Profile {
         s.getPath.getName.matches(s"$p-?\\d+(_-?\\d+)?__staged") &&
           fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_sources"))
       }
-      require(pending.isEmpty,
-        s"artifact at $path has a merge in progress or crashed " +
+      require(pending.isEmpty && !StagedCommit.pending(fs, compactMarker(parts)),
+        s"artifact at $path has a merge or compaction in progress or crashed " +
           s"(${pending.map(_.getPath.getName).mkString(", ")}) — the part set is " +
           "transiently partial; a single-writer entry (refresh/compact/merge) heals it")
       listed.filter { s =>
@@ -617,17 +619,12 @@ object Profile {
   }
 
   private def writeTombstones(fs: org.apache.hadoop.fs.FileSystem,
-      parts: org.apache.hadoop.fs.Path, entries: Map[String, String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(parts, "_tombstones.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((entries.toSeq.sorted.map { case (k, v) => s"$k $v\n" }
-      .mkString + s"#end ${entries.size}\n").getBytes("UTF-8"))
-    finally out.close()
-    val ledger = new org.apache.hadoop.fs.Path(parts, "_tombstones")
-    fs.delete(ledger, false) // entries only grow: tmp ⊇ ledger, and
-    if (!fs.rename(tmp, ledger)) // readTombstones falls back to tmp
-      throw new java.io.IOException(s"could not publish tombstone ledger $ledger")
-  }
+      parts: org.apache.hadoop.fs.Path, entries: Map[String, String]): Unit =
+    // entries only grow: the tmp ⊇ the ledger, and readTombstones
+    // falls back to the tmp inside the delete→rename window
+    StagedCommit.writeAtomic(fs, new org.apache.hadoop.fs.Path(parts, "_tombstones"),
+      (entries.toSeq.sorted.map { case (k, v) => s"$k $v\n" }
+        .mkString + s"#end ${entries.size}\n").getBytes("UTF-8"))
 
   /** Fold scaffolding shared by the artifact readers: meta-free —
     * public readers check the meta themselves (once). Reads ONLY
@@ -661,20 +658,23 @@ object Profile {
 
   /** Heal every maintenance crash window under `path/parts` — runs
     * ONLY at single-writer entry points (ingest-side maintenance,
-    * refresh); read paths never mutate. Two protocols:
+    * refresh); read paths never mutate. In order:
+    *  - a pending COMPACTION commit ([[compactBatchParts]]'s
+    *    [[StagedCommit]] marker): rolled FORWARD first, so no later
+    *    step mistakes its staged twins for debris;
     *  - a PENDING MERGE (`__staged` dir carrying a `_sources`
     *    manifest): rolled FORWARD when any evidence of tombstoning
     *    exists (a listed single already `_merged`, or a listed merged
     *    source already deleted) — finish tombstoning, promote —
     *    else rolled back (sources intact, staged is debris);
-    *  - per-dir COMPACTION twins (`__old`/`__staged` without a
-    *    manifest): [[graft.sources.Sinks.recoverMergeTarget]] per
-    *    target, the [[GraphArtifact]] protocol hoisted. */
+    *  - any other `__staged` twin is staging from before its manifest
+    *    or marker: debris, dropped. */
   private[operators] def recoverParts(spark: org.apache.spark.sql.SparkSession,
       path: String, prefix: String = "b="): Unit = {
     val parts = new org.apache.hadoop.fs.Path(s"$path/parts")
     val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(parts)) return
+    StagedCommit.recover(fs, compactMarker(parts))
     // ledger publish window: a tmp with no ledger is either the
     // delete→rename crash (tmp complete — the newer superset) or a
     // crash MID-WRITE of the first-ever merge's tmp (tmp truncated).
@@ -693,9 +693,10 @@ object Profile {
       writeTombstones(fs, parts, readTombstones(fs, parts))
     val p = java.util.regex.Pattern.quote(prefix)
     val names = fs.listStatus(parts).map(_.getPath.getName)
-    // pending merges first: their __staged must not be mistaken for
-    // compaction debris (a rollback after tombstoning would lose data)
-    names.filter(_.matches(s"$p-?\\d+_-?\\d+__staged")).foreach { n =>
+    // a __staged dir carrying a `_sources` manifest is a pending merge
+    // (a rollback after tombstoning would lose data); any other is
+    // staging from before its merge manifest or compaction marker
+    names.filter(_.matches(s"$p-?\\d+(_-?\\d+)?__staged")).foreach { n =>
       val staged = new org.apache.hadoop.fs.Path(parts, n)
       val manifest = new org.apache.hadoop.fs.Path(staged, "_sources")
       if (fs.exists(manifest)) {
@@ -711,12 +712,8 @@ object Profile {
         }
         if (tombstoned) finishMerge(fs, parts, n.stripSuffix("__staged"), sources)
         else fs.delete(staged, true) // nothing consumed yet: pure debris
-      } else fs.delete(staged, true) // crashed before the manifest: debris
+      } else fs.delete(staged, true) // crashed before a manifest or marker: debris
     }
-    // then the per-dir compaction twins
-    names.filter(_.matches(s"$p-?\\d+(_-?\\d+)?__(old|staged)"))
-      .map(_.replaceAll("__(old|staged)$", "")).distinct
-      .foreach(b => graft.sources.Sinks.recoverMergeTarget(fs, s"$path/parts/$b"))
   }
 
   /** The forward half of a merge — callable from the merge itself or
@@ -766,14 +763,21 @@ object Profile {
     }
   }
 
+  /** The [[StagedCommit]] marker of an in-flight [[compactBatchParts]]
+    * run: one per `parts` dir, recovered first by [[recoverParts]]. */
+  private def compactMarker(parts: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(parts, "_compact.plan")
+
   /** Small-files maintenance, hoisted from [[GraphArtifact]] (r16
     * verdict #4): each committed part dir above the file-count target
-    * is rewritten in place — the `_fp` travels INSIDE the staged dir
-    * so the promoted dir is committed-with-marker atomically, and the
+    * is rewritten — the `_fp` travels INSIDE the staged dir so the
+    * promoted dir is committed-with-marker atomically, and the
     * fingerprint is RE-DERIVED from the rows and required equal
-    * first ([[verifiedFingerprint]]). Crash windows heal at the next
-    * single-writer entry via [[recoverParts]]; replay semantics are
-    * untouched. */
+    * first ([[verifiedFingerprint]]). Every rewritten dir is then
+    * replaced under ONE [[StagedCommit]] per run; a crash rolls it
+    * forward at the next single-writer entry via [[recoverParts]], and
+    * readers fail loudly while it is pending ([[committedPartDirs]]).
+    * Replay semantics are untouched. */
   private[operators] def compactBatchParts(spark: org.apache.spark.sql.SparkSession,
       path: String, what: String, prefix: String = "b=",
       targetFileBytes: Long = 128L * 1024 * 1024,
@@ -782,28 +786,25 @@ object Profile {
     recoverParts(spark, path, prefix)
     val parts = new org.apache.hadoop.fs.Path(s"$path/parts")
     val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedPartDirs(spark, path, prefix).foreach { dir =>
+    val steps = committedPartDirs(spark, path, prefix).flatMap { dir =>
       val d = new org.apache.hadoop.fs.Path(dir)
       val dataFiles = fs.listStatus(d).filter(_.isFile)
         .filterNot(f => f.getPath.getName.startsWith("_") ||
           f.getPath.getName.startsWith("."))
       val nTarget = math.max(1, math.ceil(
         dataFiles.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-      if (dataFiles.length > nTarget) {
+      if (dataFiles.length <= nTarget) None
+      else {
         val stored = verifiedFingerprint(spark, fs, dir, what, fpRow)
         val staged = new org.apache.hadoop.fs.Path(s"${dir}__staged")
         spark.read.parquet(dir).coalesce(nTarget)
           .write.mode("overwrite").parquet(staged.toString)
         val out = fs.create(new org.apache.hadoop.fs.Path(staged, "_fp"), true)
         try out.write(stored.getBytes("UTF-8")) finally out.close()
-        val old = new org.apache.hadoop.fs.Path(s"${dir}__old")
-        if (!fs.rename(d, old))
-          throw new java.io.IOException(s"compact: could not park $dir aside")
-        if (!fs.rename(staged, d))
-          throw new java.io.IOException(s"compact: could not promote $staged")
-        fs.delete(old, true)
+        Some(StagedCommit.Replace(staged.getName, d.getName))
       }
     }
+    if (steps.nonEmpty) StagedCommit.commit(fs, compactMarker(parts), steps)
   }
 
   /** Dir-count maintenance (r16 verdict #7): when committed part dirs

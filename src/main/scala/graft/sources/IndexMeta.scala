@@ -15,35 +15,27 @@ import org.apache.spark.sql.SparkSession
   */
 object IndexMeta {
 
+  private def json(fields: Seq[(String, Long)]): Array[Byte] =
+    fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}").getBytes("UTF-8")
+
   /** Overwrite `path` with `{"k1":v1,...}`. */
   def write(spark: SparkSession, path: String, fields: Seq[(String, Long)]): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(fields.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}").getBytes("UTF-8"))
-    finally out.close()
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(json(fields)) finally out.close()
   }
 
-  /** [[write]] via temp + rename, for meta files that are REWRITTEN
-    * over their lifetime (advisory tick/witness state) rather than
-    * written once: a concurrent reader never sees a torn or
-    * half-written file — it sees the old content, the new content, or
-    * (inside the delete→rename window) no file, and every such caller
-    * already treats "missing" as "absent state". Write-once markers
-    * ([[write]] at publish time) don't need this: they are created
-    * complete before anything points at them. */
+  /** [[write]] via [[StagedCommit.writeAtomic]], for meta files that
+    * are REWRITTEN over their lifetime (advisory tick/witness state)
+    * rather than written once: a concurrent reader never sees a torn
+    * or half-written file — it sees the old content, the new content,
+    * or (inside the delete→rename window) no file, and every such
+    * caller already treats "missing" as "absent state". Write-once
+    * markers ([[write]] at publish time) don't need this: they are
+    * created complete before anything points at them. */
   def writeAtomic(spark: SparkSession, path: String, fields: Seq[(String, Long)]): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(fields.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"writeAtomic: could not swap $p")
+    StagedCommit.writeAtomic(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, json(fields))
   }
 
   /** Read all integer fields; `what` names the index family in errors. */

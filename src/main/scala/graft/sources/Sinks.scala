@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.Merge
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,27 +80,20 @@ object Sinks {
     require(keys.contains(partitionCol),
       s"partition column $partitionCol must be part of the merge key")
     val spark = updates.sparkSession
-    val targetP = new org.apache.hadoop.fs.Path(targetPath)
+    val targetP = new Path(targetPath)
     val fs = targetP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverPartitionedMergeTarget(fs, targetPath)
+    StagedCommit.recover(fs, markerOf(targetP))
     if (!fs.exists(targetP)) {
       // Crash-atomic bootstrap (ADVICE r20 medium): the first write is
-      // staged and RENAMED into place, never written live. A direct
-      // write crashing midway leaves a partial-but-existing target dir,
-      // and every caller that gates an incremental path on
-      // fs.exists(target) — Pipeline.predictDay's witness fold above
-      // all — would then take the delta path against a silently
-      // incomplete table forever. With the rename, a mid-bootstrap
-      // crash leaves only `__staged` (dropped by
-      // [[recoverPartitionedMergeTarget]] on retry) and existence of
-      // the target is a completeness guarantee.
-      val staged = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
-      boundedPartitionLayout(Merge.overwrite(updates, keys), keys, partitionCol)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCol).parquet(staged.toString)
-      if (!fs.rename(staged, targetP))
-        throw new java.io.IOException(
-          s"bootstrap promote: could not rename $staged to $targetP")
+      // staged and committed as ONE whole-dir replace, never written
+      // live. A direct write crashing midway would leave a
+      // partial-but-existing target dir, and every caller that gates an
+      // incremental path on fs.exists(target) — Pipeline.predictDay's
+      // witness fold above all — would then take the delta path against
+      // a silently incomplete table forever. With the replace, existence
+      // of the target is a completeness guarantee.
+      StagedCommit.commit(fs, markerOf(targetP), Seq(stage(
+        boundedPartitionLayout(Merge.overwrite(updates, keys), keys, partitionCol), targetP, Seq(partitionCol))))
       return
     }
     val touched = updates.select(partitionCol).distinct().collect()
@@ -108,124 +102,73 @@ object Sinks {
       .filter(col(partitionCol).isInCollection(touched))
     val merged = if (doUpdate) Merge.upsert(slice, updates, keys)
                  else Merge.insertIgnore(slice, updates, keys)
-    // Same staged-promote protocol as [[mergeInto]], at PARTITION
-    // granularity: the merged slice is written to `__staged` (so the
-    // plan never overwrites files it is scanning — no lineage
-    // truncation, no executor-memory materialization), then each
-    // touched partition dir is renamed aside and the staged dir
-    // promoted in its place. Renames are per-partition atomic: after a
-    // crash every partition is either fully old or fully new, and
-    // [[recoverPartitionedMergeTarget]] (run on entry) rolls the
-    // interrupted ones back. The merge itself is idempotent, so a
-    // retry converges.
-    val staged = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
-    val old = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__old")
+    // The merged slice is staged (so the plan never overwrites files
+    // it is scanning — no lineage truncation, no executor-memory
+    // materialization), then ONE commit replaces each touched
+    // partition dir with its staged twin. After a crash the commit
+    // rolls forward on the next entry; the merge itself is idempotent,
+    // so a retry converges.
+    val staged = stagedOf(targetP)
     boundedPartitionLayout(merged, keys, partitionCol)
       .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged.toString)
-    fs.mkdirs(old)
-    for (sp <- fs.listStatus(staged) if sp.isDirectory) {
-      val name = sp.getPath.getName // hive-style "col=value"
-      val live = new org.apache.hadoop.fs.Path(targetP, name)
-      if (fs.exists(live) && !fs.rename(live, new org.apache.hadoop.fs.Path(old, name)))
-        throw new java.io.IOException(s"promote: could not rename $live aside")
-      if (!fs.rename(sp.getPath, live))
-        throw new java.io.IOException(s"promote: could not promote ${sp.getPath} to $live")
-    }
-    fs.delete(old, true)
-    fs.delete(staged, true)
+    val steps = fs.listStatus(staged).filter(_.isDirectory)
+      .map(_.getPath.getName) // hive-style "col=value"
+      .map(n => StagedCommit.Replace(s"${staged.getName}/$n", s"${targetP.getName}/$n"))
+    StagedCommit.commit(fs, markerOf(targetP), steps.toSeq :+ StagedCommit.Drop(staged.getName))
   }
 
-  /** Recovery for an interrupted [[mergeIntoPartitioned]] promote.
-    * Idempotent, per partition: a dir under `__old` whose live twin is
-    * missing marks a crash between rename-aside and promote → restore
-    * it; one whose live twin exists means the promote completed →
-    * drop it. A `__staged` dir is always safe to drop (promotes are
-    * renames, never partial). */
-  def recoverPartitionedMergeTarget(fs: org.apache.hadoop.fs.FileSystem,
-                                    targetPath: String): Unit = {
-    val targetP = new org.apache.hadoop.fs.Path(targetPath)
-    val staged = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
-    val old = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__old")
-    if (fs.exists(old)) {
-      for (op <- fs.listStatus(old) if op.isDirectory) {
-        val live = new org.apache.hadoop.fs.Path(targetP, op.getPath.getName)
-        if (!fs.exists(live)) {
-          if (!fs.rename(op.getPath, live))
-            throw new java.io.IOException(
-              s"partitioned-merge recovery: could not restore ${op.getPath} to $live")
-        }
-      }
-      fs.delete(old, true)
-    }
-    if (fs.exists(staged)) fs.delete(staged, true)
+  /** The staging dir and the commit marker of the table at `target`:
+    * siblings, so a bootstrap's staging never makes `target` exist. */
+  private def stagedOf(target: Path) = new Path(target.getParent, target.getName + "__staged")
+  private def markerOf(target: Path) = new Path(target.getParent, target.getName + "__commit")
+
+  /** Write `df` whole to the staging dir and return the whole-dir
+    * [[StagedCommit.Replace]] that promotes it over `target`, relative
+    * to `target`'s parent dir, where every marker that commits it
+    * lives. */
+  private def stage(df: DataFrame, target: Path, partitionCols: Seq[String] = Nil): StagedCommit.Step = {
+    val staged = stagedOf(target)
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+      .parquet(staged.toString)
+    StagedCommit.Replace(staged.getName, target.getName)
   }
 
   /** S8/U* — keyed merge into an unpartitioned parquet target: read
     * target ∪ updates, resolve by key, rewrite. Prefer
     * [[mergeIntoPartitioned]] for lake-scale targets.
     *
-    * Crash-safe promote: the merged result is staged to `__staged`,
-    * the live target is renamed aside to `__old`, the staged dir is
-    * renamed into place, and only then is `__old` deleted. At every
-    * instant either the old or the new table exists at a recoverable
-    * location; [[recoverMergeTarget]] (run on entry) rolls an
-    * interrupted promote back or forward, so a retry after a crash
-    * never rebuilds the table from the current batch alone.
+    * Crash-safe: the merged result is staged and committed over the
+    * target as one whole-dir replace; a commit a crash left pending is
+    * rolled forward on entry, so a retry after a crash never rebuilds
+    * the table from the current batch alone.
     */
   def mergeInto(updates: DataFrame, targetPath: String, keys: Seq[String],
                 doUpdate: Boolean): Unit = {
     val spark = updates.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val targetP = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = targetP.getFileSystem(conf)
-    recoverMergeTarget(fs, targetPath)
-    val targetExists = fs.exists(targetP)
+    val targetP = new Path(targetPath)
+    val fs = targetP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StagedCommit.recover(fs, markerOf(targetP))
     val merged =
-      if (!targetExists) Merge.overwrite(updates, keys)
+      if (!fs.exists(targetP)) Merge.overwrite(updates, keys)
       else {
         val target = spark.read.parquet(targetPath)
         if (doUpdate) Merge.upsert(target, updates, keys)
         else Merge.insertIgnore(target, updates, keys)
       }
-    // rewrite via a temp path: the source scan and the overwrite target
-    // must not be the same files
-    promoteStaged(fs, merged, targetPath, targetExists)
-  }
-
-  /** Crash-safe replace: write `df` to `target__staged`, rename the
-    * live target aside to `target__old`, promote, drop the old copy.
-    * Recovery for every intermediate state is [[recoverMergeTarget]]. */
-  private def promoteStaged(fs: org.apache.hadoop.fs.FileSystem, df: DataFrame,
-                            targetPath: String, targetExists: Boolean,
-                            partitionCols: Seq[String] = Nil): Unit = {
-    val targetP = new org.apache.hadoop.fs.Path(targetPath)
-    val tmp = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
-    val old = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__old")
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    if (targetExists && !fs.rename(targetP, old))
-      throw new java.io.IOException(s"promote: could not rename $targetP aside to $old")
-    if (!fs.rename(tmp, targetP))
-      throw new java.io.IOException(s"promote: could not promote $tmp to $targetP")
-    fs.delete(old, true)
+    // rewrite via the staging dir: the source scan and the overwrite
+    // target must not be the same files
+    StagedCommit.commit(fs, markerOf(targetP), Seq(stage(merged, targetP)))
   }
 
   /** Small-files compaction: rewrite the parquet table at `path` into
-    * ceil(bytes / targetFileBytes) files (crash-safe promote, same
-    * recovery protocol as [[mergeInto]]). The lake's standing
+    * ceil(bytes / targetFileBytes) files (crash-safe staged replace,
+    * same recovery as [[mergeInto]]). The lake's standing
     * maintenance job — streaming ingest and per-day merges accrete
     * small files; scan cost at 100 TB is dominated by file count. */
   def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverMergeTarget(fs, path)
-    val bytes = fs.getContentSummary(p).getLength
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val compacted = spark.read.parquet(path).repartition(nFiles)
-    promoteStaged(fs, compacted, path, targetExists = true)
-  }
+              targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    compactUnder(spark, path, Nil, targetFileBytes)
 
   /** [[compact]] for a hive-partitioned table, PRESERVING the partition
     * layout (a plain compact would flatten `col=value` dirs and destroy
@@ -235,20 +178,38 @@ object Sinks {
     * each task writes at most one file per partition value it holds:
     * small partitions compact to one file, and per-partition file count
     * is bounded by the task count instead of the append history. Same
-    * crash-safe staged promote + [[recoverMergeTarget]] recovery as
-    * [[compact]]. */
+    * crash-safe staged replace and recovery as [[compact]]. */
   def compactPartitioned(spark: SparkSession, path: String, partitionCol: String,
-                         targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+                         targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    compactUnder(spark, path, Seq(partitionCol), targetFileBytes)
+
+  private def compactUnder(spark: SparkSession, path: String, partitionCols: Seq[String],
+                           targetFileBytes: Long): Unit = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverMergeTarget(fs, path)
+    StagedCommit.recover(fs, markerOf(p))
+    StagedCommit.commit(fs, markerOf(p), Seq(stageCompaction(spark, path, partitionCols, targetFileBytes)))
+  }
+
+  /** Stage the compaction of the table at `path` (the rewrite of
+    * [[compact]], or of [[compactPartitioned]] when `partitionCols`
+    * names its partition column) and return the step that promotes
+    * it, for an artifact that commits several tables under its own
+    * marker beside them. The artifact recovers that marker first: the
+    * staging dir is `<table>__staged`, the name its own writes stage
+    * into. */
+  private[graft] def stageCompaction(spark: SparkSession, path: String,
+                                     partitionCols: Seq[String],
+                                     targetFileBytes: Long): StagedCommit.Step = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val df = spark.read.parquet(path)
-    require(df.columns.contains(partitionCol),
-      s"compactPartitioned: $path has no column $partitionCol")
-    val compacted = df.repartition(nFiles, col(partitionCol))
-    promoteStaged(fs, compacted, path, targetExists = true, Seq(partitionCol))
+    require(partitionCols.forall(df.columns.contains),
+      s"compactPartitioned: $path has no column ${partitionCols.mkString(", ")}")
+    stage(if (partitionCols.isEmpty) df.repartition(nFiles)
+          else df.repartition(nFiles, partitionCols.map(col): _*), p, partitionCols)
   }
 
   /** S8 over JDBC — the reference's serving-store upsert
@@ -279,7 +240,7 @@ object Sinks {
     *
     * Idempotent by construction (re-running a batch converges), which
     * is the crash story: JDBC targets get at-least-once + idempotence
-    * rather than the staged-rename protocol of the file sinks. */
+    * rather than the staged commit of the file sinks. */
   def jdbcUpsert(df0: DataFrame, url: String, table: String, keys: Seq[String],
                  doUpdate: Boolean, batchSize: Int = 1000): Unit = {
     val cols = df0.columns.toSeq
@@ -346,26 +307,5 @@ object Sinks {
         } finally conn.close()
       }
     }
-  }
-
-  /** Recovery for an interrupted [[mergeInto]] promote. Idempotent.
-    *  - `__old` exists and the target is missing → the crash hit between
-    *    rename-aside and promote: roll back (`__old` → target).
-    *  - `__old` exists alongside the target → the promote completed but
-    *    cleanup didn't: the new table already contains the old rows,
-    *    drop `__old`.
-    *  - a `__staged` dir is always stale (promotes are renames, never
-    *    partial) → drop it. */
-  def recoverMergeTarget(fs: org.apache.hadoop.fs.FileSystem, targetPath: String): Unit = {
-    val targetP = new org.apache.hadoop.fs.Path(targetPath)
-    val tmp = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__staged")
-    val old = new org.apache.hadoop.fs.Path(targetPath.stripSuffix("/") + "__old")
-    if (fs.exists(old)) {
-      if (!fs.exists(targetP)) {
-        if (!fs.rename(old, targetP))
-          throw new java.io.IOException(s"mergeInto recovery: could not restore $old to $targetP")
-      } else fs.delete(old, true)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
   }
 }

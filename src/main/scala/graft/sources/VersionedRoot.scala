@@ -92,19 +92,14 @@ object VersionedRoot {
     }
   }
 
-  /** Point `CURRENT` at `newName` (temp + rename) and GC by served
-    * identity: everything but {newName, the dir `servedBefore`
-    * resolved to} is debris and deleted. */
+  /** Point `CURRENT` at `newName` ([[StagedCommit.writeAtomic]]) and
+    * GC by served identity: everything but {newName, the dir
+    * `servedBefore` resolved to} is debris and deleted. */
   def publish(spark: SparkSession, root: String, newName: String,
               servedBefore: Option[String]): Unit = {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((newName + "\n").getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(s"$root/CURRENT")
-    fs.delete(cur, false)
-    if (!fs.rename(tmp, cur))
-      throw new java.io.IOException(s"publish: could not swap $cur")
+    StagedCommit.writeAtomic(fs, new org.apache.hadoop.fs.Path(s"$root/CURRENT"),
+      (newName + "\n").getBytes("UTF-8"))
     val keep = Set(newName) ++
       servedBefore.map(s => new org.apache.hadoop.fs.Path(s).getName)
     versions(spark, root).filterNot(keep).foreach { n =>

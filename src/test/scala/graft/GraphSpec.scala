@@ -241,10 +241,18 @@ class GraphSpec extends SparkSpec {
     GraphArtifact.refreshRanks(spark, path)
     assert(GraphArtifact.readRanks(spark, path)
       .as[(Long, Long)].collect().toMap === before)
-    // crash windows: a batch parked aside mid-promote is healed at the
-    // next single-writer entry; staging debris is dropped and never read
+    // crash windows: a compaction commit that crashed inside its
+    // replace of b=0 (live dir moved aside, the compacted copy staged, the
+    // marker pending) fails readers loudly and is rolled forward at the
+    // next single-writer entry; staging debris from before a marker is
+    // dropped and never read
     fs.rename(new org.apache.hadoop.fs.Path(s"$path/parts/b=0"),
-      new org.apache.hadoop.fs.Path(s"$path/parts/b=0__old"))
+      new org.apache.hadoop.fs.Path(s"$path/parts/b=0__staged"))
+    graft.sources.StagedCommit.plan(fs, new org.apache.hadoop.fs.Path(s"$path/parts/_compact.plan"),
+      Seq(graft.sources.StagedCommit.Replace("b=0__staged", "b=0")))
+    assert(intercept[IllegalArgumentException] {
+      GraphArtifact.standingEdges(spark, path).collect()
+    }.getMessage.contains("compaction in progress"))
     Seq((100007L, 100008L)).toDF("src", "dst")
       .write.parquet(s"$path/parts/b=5__staged")
     GraphArtifact.refreshRanks(spark, path) // entry heals, then sweeps ALL batches

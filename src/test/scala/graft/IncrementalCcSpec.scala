@@ -159,9 +159,9 @@ class IncrementalCcSpec extends SparkSpec {
     val dir = stateDir()
     // one group {50,51}; the interrupted merge is edge (1,50), whose
     // commit relabels the group to 1 (new bucket), EMPTIES group 50's
-    // old bucket (a delete action), and upserts docs 1/50/51 into the
-    // doc projection. Hand-build the exact staging + marker that merge
-    // leaves the instant after marker publication.
+    // old bucket (a drop step), and upserts docs 1/50/51 into the
+    // doc projection. Hand-build the exact staging + commit marker that
+    // merge leaves the instant after the marker is published.
     Dedup.buildComponentState(pairsDf((50L, 51L)), dir, stateBuckets = 64)
     def bucket(id: Long): Int =
       spark.range(1).select(pmod(xxhash64(lit(id)), lit(64L)).cast("int")).as[Int].head()
@@ -175,12 +175,14 @@ class IncrementalCcSpec extends SparkSpec {
       rows.map(r => (r._1, r._2)).toDF("doc_id", "group_id").coalesce(1)
         .write.parquet(s"$dir/components_by_doc__staged/db=$db")
     }
-    val marker =
-      (Seq(s"components\tpromote\tgb=$g1", s"components\tdelete\tgb=$g50") ++
-        dbs.map(_._3).distinct.sorted.map(db => s"components_by_doc\tpromote\tdb=$db"))
-        .mkString("", "\n", "\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/commit.plan"),
-      marker.getBytes("UTF-8"))
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    import graft.sources.StagedCommit.{Drop, Replace}
+    graft.sources.StagedCommit.plan(fs, new org.apache.hadoop.fs.Path(s"$dir/commit.plan"),
+      Seq(Replace(s"components__staged/gb=$g1", s"components/gb=$g1"),
+        Drop(s"components/gb=$g50")) ++
+        dbs.map(_._3).distinct.sorted.map(db =>
+          Replace(s"components_by_doc__staged/db=$db", s"components_by_doc/db=$db")) ++
+        Seq(Drop("components__staged"), Drop("components_by_doc__staged")))
     // a reader racing the (dead) writer must fail LOUDLY, not serve a
     // mix of pre- and post-merge buckets — and must not mutate
     val e = intercept[IllegalArgumentException] {
@@ -193,10 +195,12 @@ class IncrementalCcSpec extends SparkSpec {
     assert(e2.getMessage.contains("unfinished merge commit"), e2.getMessage)
     assert(new java.io.File(s"$dir/commit.plan").exists(),
       "read must not have consumed the commit marker")
-    // simulate the crash having landed MID-apply: the delete action
-    // already ran — recovery must be idempotent over applied actions
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/components/gb=$g50"), true)
+    // simulate the crash having landed MID-apply: the drop step (step
+    // 1) already moved its bucket into the marker's trash — recovery
+    // must be idempotent over applied steps
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/commit.plan.trash"))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/components/gb=$g50"),
+      new org.apache.hadoop.fs.Path(s"$dir/commit.plan.trash/1")))
     // recovery belongs to the single writer: any merge rolls the
     // commit forward (an empty edge batch is the minimal retry)
     Dedup.mergeComponentState(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"), dir)
@@ -204,6 +208,36 @@ class IncrementalCcSpec extends SparkSpec {
       "merge-entry recovery must complete the marked commit on BOTH projections")
     assert(!new java.io.File(s"$dir/commit.plan").exists(), "marker must be retired")
     assert(!new java.io.File(s"$dir/components__staged").exists(), "staging must be dropped")
+    assert(!new java.io.File(s"$dir/commit.plan.trash").exists(), "trash must be deleted")
+  }
+
+  test("a crash inside compactComponentState's commit fails reads loudly and the next merge rolls it forward") {
+    val dir = stateDir()
+    val b1 = Seq((2L, 3L), (7L, 8L), (11L, 12L))
+    Dedup.buildComponentState(pairsDf(b1: _*), dir, stateBuckets = 4)
+    Dedup.mergeComponentState(pairsDf((3L, 7L)), dir)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def p(rel: String) = new org.apache.hadoop.fs.Path(s"$dir/$rel")
+    // the compaction staged both projections and published the state's
+    // marker, then crashed inside the group-keyed replace: the live
+    // table already sits in the marker's trash, the compacted copy is
+    // still staged
+    val steps = Seq("components" -> "gb", "components_by_doc" -> "db").map { case (table, pcol) =>
+      graft.sources.Sinks.stageCompaction(spark, s"$dir/$table", Seq(pcol), 128L * 1024 * 1024)
+    }
+    graft.sources.StagedCommit.plan(fs, p("commit.plan"), steps)
+    fs.mkdirs(p("commit.plan.trash"))
+    assert(fs.rename(p("components"), p("commit.plan.trash/0")))
+    Seq(() => Dedup.readComponentState(spark, dir), () => Dedup.readComponentStateByDoc(spark, dir))
+      .foreach { read =>
+        val e = intercept[IllegalArgumentException](read().collect())
+        assert(e.getMessage.contains("unfinished merge commit or compaction"), e.getMessage)
+      }
+    // the next merge rolls the compaction forward before it reads the
+    // state, so both projections agree and nothing is lost
+    Dedup.mergeComponentState(pairsDf((8L, 11L)), dir)
+    assert(!fs.exists(p("commit.plan")) && !fs.exists(p("commit.plan.trash")))
+    assert(readSorted(dir) === fullCc(b1 ++ Seq((3L, 7L), (8L, 11L)): _*))
   }
 
   test("stale debris under components/ fails the read loudly") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Sinks, Sources}
+import graft.sources.{Sinks, Sources, StagedCommit}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
@@ -69,29 +69,33 @@ class IoSpec extends SparkSpec {
     val dir = tmp() + "/target"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val marker = p(dir + "__commit")
     Sinks.mergeInto(Seq((1, "a", 1.0), (2, "a", 2.0)).toDF("k", "d", "v"),
       dir, Seq("k", "d"), doUpdate = true)
 
-    // simulate a crash between rename-aside and promote: target gone,
-    // history sits at __old, a half-written __staged dir is lying around
-    fs.rename(new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(dir + "__old"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir + "__staged"))
+    // simulate a crash inside the commit's whole-dir replace: the live
+    // target already moved into the marker's trash, the merged history
+    // sits staged, and the marker is pending
+    fs.rename(p(dir), p(dir + "__staged"))
+    StagedCommit.plan(fs, marker, Seq(StagedCommit.Replace("target__staged", "target")))
 
-    // retry with ONLY the new batch — pre-fix this rebuilt the table
-    // from the batch alone, discarding rows 1 and 2
+    // retry with ONLY the new batch — without recovery this would
+    // rebuild the table from the batch alone, discarding rows 1 and 2
     Sinks.mergeInto(Seq((3, "a", 3.0)).toDF("k", "d", "v"),
       dir, Seq("k", "d"), doUpdate = true)
     val rows = spark.read.parquet(dir).as[(Int, String, Double)].collect().toSet
     assert(rows === Set((1, "a", 1.0), (2, "a", 2.0), (3, "a", 3.0)))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__old")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__staged")))
+    assert(!fs.exists(marker))
+    assert(!fs.exists(p(dir + "__staged")))
 
-    // crash AFTER promote but before cleanup: stale __old alongside target
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir + "__old"))
+    // crash AFTER the replace but before the marker retired: the
+    // recovery re-applies nothing and the retry still converges
+    StagedCommit.plan(fs, marker, Seq(StagedCommit.Replace("target__staged", "target")))
     Sinks.mergeInto(Seq((4, "a", 4.0)).toDF("k", "d", "v"),
       dir, Seq("k", "d"), doUpdate = true)
     assert(spark.read.parquet(dir).count() === 4)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__old")))
+    assert(!fs.exists(marker))
   }
 
   test("mergeIntoPartitioned rewrites only touched partitions") {
@@ -125,37 +129,37 @@ class IoSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val marker = p(dir + "__commit")
+    val day2 = Seq(StagedCommit.Replace("ptarget__staged/d=2024-01-02", "ptarget/d=2024-01-02"),
+      StagedCommit.Drop("ptarget__staged"))
     Sinks.mergeIntoPartitioned(
       Seq((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)).toDF("k", "d", "v"),
       dir, Seq("k", "d"), "d", doUpdate = true)
 
-    // simulate a crash between rename-aside and promote for day 2: its
-    // live dir is gone, the pre-merge copy sits under __old, and a
-    // stale __staged dir is lying around
-    fs.mkdirs(p(dir + "__old"))
-    fs.rename(p(s"$dir/d=2024-01-02"), p(dir + "__old/d=2024-01-02"))
-    fs.mkdirs(p(dir + "__staged/d=2024-01-02"))
+    // simulate a crash inside day 2's replace: its live dir already
+    // moved aside, its merged copy sits staged, and the marker is pending
+    fs.mkdirs(p(dir + "__staged"))
+    fs.rename(p(s"$dir/d=2024-01-02"), p(dir + "__staged/d=2024-01-02"))
+    StagedCommit.plan(fs, marker, day2)
 
-    // retry with a batch touching ONLY day 1 — pre-recovery this would
-    // silently drop day 2 from the table
+    // retry with a batch touching ONLY day 1 — without recovery this
+    // would silently drop day 2 from the table
     Sinks.mergeIntoPartitioned(Seq((3, "2024-01-01", 3.0)).toDF("k", "d", "v"),
       dir, Seq("k", "d"), "d", doUpdate = true)
     val rows = spark.read.parquet(dir).select("k", "d", "v")
       .as[(Int, String, Double)].collect().toSet
     assert(rows === Set((1, "2024-01-01", 1.0), (3, "2024-01-01", 3.0),
       (2, "2024-01-02", 2.0)))
-    assert(!fs.exists(p(dir + "__old")) && !fs.exists(p(dir + "__staged")))
+    assert(!fs.exists(marker) && !fs.exists(p(dir + "__staged")))
 
-    // crash AFTER a partition promoted but before cleanup: the __old
-    // copy is stale (live twin exists) and must be dropped, not restored
-    fs.mkdirs(p(dir + "__old"))
-    fs.rename(p(s"$dir/d=2024-01-02"), p(dir + "__old/d=2024-01-02"))
-    fs.mkdirs(p(s"$dir/d=2024-01-02"))
+    // crash AFTER the partition promoted but before the marker retired:
+    // every step is already applied, and recovery must not disturb it
+    StagedCommit.plan(fs, marker, day2)
     Sinks.mergeIntoPartitioned(
       Seq((2, "2024-01-02", 2.0)).toDF("k", "d", "v"),
       dir, Seq("k", "d"), "d", doUpdate = true)
     assert(spark.read.parquet(dir).filter($"d" === "2024-01-02").count() === 1)
-    assert(!fs.exists(p(dir + "__old")))
+    assert(!fs.exists(marker))
   }
 
   test("mergeIntoPartitioned bootstrap is crash-atomic: a crashed first write leaves no live target and the retry re-bootstraps") {
@@ -163,22 +167,32 @@ class IoSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // A bootstrap that crashed mid-write leaves only a partial __staged
-    // dir — the live target must NOT exist (fs.exists(target) is the
-    // completeness signal Pipeline.predictDay's fold path gates on;
-    // ADVICE r20 medium: the old direct write could leave a partial
-    // live table the fold path then extended forever).
+    val first = Seq((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)).toDF("k", "d", "v")
+    def rows() = spark.read.parquet(dir).select("k", "d", "v")
+      .as[(Int, String, Double)].collect().toSet
+    // A bootstrap that crashed mid-staging leaves only a partial
+    // __staged dir and no marker — the live target must NOT exist
+    // (fs.exists(target) is the completeness signal Pipeline.predictDay's
+    // fold path gates on; ADVICE r20 medium: the old direct write could
+    // leave a partial live table the fold path then extended forever).
     fs.mkdirs(p(dir + "__staged/d=2024-01-01"))
     assert(!fs.exists(p(dir)), "crashed bootstrap must leave no live target")
-    // the retry drops the stale staged dir, re-stages the FULL frame and
-    // promotes it with one atomic rename
-    Sinks.mergeIntoPartitioned(
-      Seq((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)).toDF("k", "d", "v"),
-      dir, Seq("k", "d"), "d", doUpdate = true)
-    val rows = spark.read.parquet(dir).select("k", "d", "v")
-      .as[(Int, String, Double)].collect().toSet
-    assert(rows === Set((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)))
+    // the retry re-stages the FULL frame over the stale staging and
+    // commits it as one whole-dir replace
+    Sinks.mergeIntoPartitioned(first, dir, Seq("k", "d"), "d", doUpdate = true)
+    assert(rows() === Set((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)))
     assert(!fs.exists(p(dir + "__staged")))
+    // A bootstrap that crashed AFTER its marker: the complete staging
+    // is pending and the target still reads as absent; the next write
+    // rolls the bootstrap forward, then merges into it
+    fs.rename(p(dir), p(dir + "__staged"))
+    StagedCommit.plan(fs, p(dir + "__commit"),
+      Seq(StagedCommit.Replace("btarget__staged", "btarget")))
+    assert(!fs.exists(p(dir)), "a pending bootstrap must leave no live target")
+    Sinks.mergeIntoPartitioned(Seq((3, "2024-01-03", 3.0)).toDF("k", "d", "v"),
+      dir, Seq("k", "d"), "d", doUpdate = true)
+    assert(rows() === Set((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0), (3, "2024-01-03", 3.0)))
+    assert(!fs.exists(p(dir + "__staged")) && !fs.exists(p(dir + "__commit")))
   }
 
   test("S8 JDBC serving sink: batched upsert on embedded Derby, idempotent") {

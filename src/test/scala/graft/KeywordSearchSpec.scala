@@ -166,6 +166,40 @@ class KeywordSearchSpec extends SparkSpec {
     }
   }
 
+  test("a crash inside compactInvertedIndex's commit fails reads loudly and the next ingest rolls it forward, losing no postings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bm25compactcrash").toString
+    KeywordSearch.buildInvertedIndex(docs, dir, termBuckets = 4)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def p(rel: String) = new org.apache.hadoop.fs.Path(s"$dir/$rel")
+    def postings() = spark.read.parquet(s"$dir/postings").count()
+    val before = postings()
+    // the compaction staged all three tables and published the index's
+    // marker, then crashed inside the postings replace: the live
+    // postings already sit in the marker's trash, the compacted copy
+    // is still staged
+    val steps = Seq("postings" -> Seq("tb"), "dfreq" -> Seq("tb"), "docs" -> Nil).map {
+      case (table, pcols) =>
+        graft.sources.Sinks.stageCompaction(spark, s"$dir/$table", pcols, 128L * 1024 * 1024)
+    }
+    graft.sources.StagedCommit.plan(fs, p("commit.plan"), steps)
+    fs.mkdirs(p("commit.plan.trash"))
+    assert(fs.rename(p("postings"), p("commit.plan.trash/0")))
+    val e = intercept[IllegalArgumentException] {
+      KeywordSearch.bm25TopKIndexed(spark, dir, Seq("spark"), 10)
+    }
+    assert(e.getMessage.contains("unfinished ingest commit or compaction"), e.getMessage)
+    // the next ingest rolls the compaction forward before it stages, so
+    // its delta lands on the whole compacted postings
+    val b = Seq((700L, "spark engine anew")).toDF("doc_id", "text")
+    KeywordSearch.ingestIntoInvertedIndex(b, dir)
+    assert(!fs.exists(p("commit.plan")) && !fs.exists(p("commit.plan.trash")))
+    assert(postings() === before + 3, "the ingest must add its three postings to the full table")
+    val grown = docs.unionByName(b)
+    assert(KeywordSearch.bm25TopKIndexed(spark, dir, Seq("spark", "engine"), 10)
+      .as[(Long, Double)].collect().toSeq ===
+      KeywordSearch.bm25TopK(grown, Seq("spark", "engine"), 10).as[(Long, Double)].collect().toSeq)
+  }
+
   test("doc_id side table: maintained by every writer, required by ingest, stats crash window compactable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bm25docs").toString
     KeywordSearch.buildInvertedIndex(docs, dir, termBuckets = 4)
@@ -187,15 +221,17 @@ class KeywordSearchSpec extends SparkSpec {
         Seq((501L, "engine anew again")).toDF("doc_id", "text"), dir)
     }
     java.nio.file.Files.move(aside, java.nio.file.Paths.get(s"$dir/docs"))
-    // the stats mid-promote crash window (live stats deleted, staged
+    // the stats mid-replace crash window (live stats moved aside, staged
     // pending, marker live): compactInvertedIndex is documented to
     // roll the commit forward FIRST — it must heal this state, not
     // mistake it for "not an index" (r15 review finding)
     java.nio.file.Files.move(
       java.nio.file.Paths.get(s"$dir/stats"),
       java.nio.file.Paths.get(s"$dir/stats__staged"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/commit.plan"), "ingest\n".getBytes)
+    graft.sources.StagedCommit.plan(
+      org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$dir/commit.plan"),
+      Seq(graft.sources.StagedCommit.Replace("stats__staged", "stats")))
     KeywordSearch.compactInvertedIndex(spark, dir)
     assert(new java.io.File(s"$dir/stats").exists(), "compact must promote the staged stats")
     assert(!new java.io.File(s"$dir/commit.plan").exists(), "compact must retire the marker")

@@ -320,12 +320,19 @@ class StreamingSpec extends SparkSpec {
     // mid-promote mix
     val b3 = Seq((30L, "a fresh judge vows quartz"))
     KeywordSearch.ingestIntoInvertedIndex(b3.toDF("doc_id", "text"), idx)
-    // re-stage b3's commit by hand: simulate the crash point where the
-    // marker is live but nothing promoted — recovery must be a no-op
-    // for already-promoted content (idempotent apply), so re-running
-    // an ingest of ALREADY indexed docs with a stale marker present
-    // heals cleanly
-    Files.write(java.nio.file.Paths.get(s"$idx/commit.plan"), "ingest\n".getBytes)
+    // re-plan b3's commit by hand: simulate the crash point where every
+    // step has applied but the marker is still live — recovery must be
+    // a no-op for already-promoted content (idempotent apply), so
+    // re-running an ingest of ALREADY indexed docs with a stale marker
+    // present heals cleanly
+    import graft.sources.StagedCommit.{Drop, MoveIn, Replace}
+    val tbs = new java.io.File(s"$idx/postings").list().filter(_.startsWith("tb=")).sorted
+    graft.sources.StagedCommit.plan(
+      org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$idx/commit.plan"),
+      tbs.toSeq.map(tb => MoveIn(s"postings__staged/$tb", s"postings/$tb")) ++ Seq(
+        MoveIn("docs__staged", "docs"), Replace("dfreq__staged", "dfreq"),
+        Replace("stats__staged", "stats"), Drop("postings__staged"), Drop("docs__staged")))
     val e = intercept[IllegalArgumentException] {
       KeywordSearch.bm25TopKIndexed(spark, idx, Seq("quick"), 3).collect()
     }
