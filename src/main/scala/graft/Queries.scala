@@ -738,7 +738,7 @@ object Queries {
     val w = Indicators.series("user_id", "d")
     DailySeries(s, dir)
       .select(col("user_id"), col("d"),
-        round(Indicators.ema(s, col("close"), w, 14), 4).as("ema_14"))
+        round(Indicators.ema(col("close"), w, 14), 4).as("ema_14"))
       .orderBy("user_id", "d")
   }
 
@@ -907,7 +907,7 @@ object Queries {
         when(count(lit(1)).over(f5) >= 5,
           sum(col("c6")).over(f5).cast("double") /
             (lit(1000000.0) * count(lit(1)).over(f5))).as("sma_5"),
-        round(Indicators.ema(s, col("close"), w, 14), 4).as("ema_14"))
+        round(Indicators.ema(col("close"), w, 14), 4).as("ema_14"))
       .orderBy("d")
   }
 
@@ -1267,7 +1267,7 @@ object Queries {
     val w = Indicators.series("user_id", "d")
     DailySeries(s, dir)
       .withColumn("macd", round(Indicators.macd(col("close"), w, 12, 26), 6))
-      .withColumn("signal", round(Indicators.ema(s, col("macd"), w, 9), 4))
+      .withColumn("signal", round(Indicators.ema(col("macd"), w, 9), 4))
       .select("user_id", "d", "macd", "signal")
       .orderBy("user_id", "d")
   }

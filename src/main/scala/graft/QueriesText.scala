@@ -1429,7 +1429,7 @@ object QueriesText {
           // composed over the keepers; survivors past k get their own
           // audit reason. Corpus-proportional set → shuffle join.
           val domains = corpus.select(col("doc_id"),
-            graft.functions.Urls.registeredDomain(s, syntheticUrl(col("doc_id"))).as("domain"))
+            graft.functions.Urls.registeredDomain(syntheticUrl(col("doc_id"))).as("domain"))
           val capped = graft.operators.Sampling.exactKPerStratum(
               pre.filter(col("reason0") === "keep").select("doc_id")
                 .join(domains, Seq("doc_id")),
@@ -2121,7 +2121,7 @@ object QueriesText {
           .select(graft.functions.Urls.host(urlOf(col("doc_id"))).as("host"))
           .distinct()
           .select(col("host"),
-            graft.functions.Urls.registeredDomain(s, col("host")).as("domain"),
+            graft.functions.Urls.registeredDomain(col("host")).as("domain"),
             hid(col("host")).as("hid"))
         graft.operators.Graph.pageRank(edges, iters = 5)
           .join(broadcast(hosts), col("node") === col("hid"))
@@ -2635,7 +2635,7 @@ object QueriesText {
       val t = Tables.documents(s, dir).select(id, col("n_chars"),
         graft.functions.Urls.canonicalizeUrl(url).as("curl"),
         graft.functions.Urls.host(url).as("host"),
-        graft.functions.Urls.registeredDomain(s, url).as("domain"))
+        graft.functions.Urls.registeredDomain(url).as("domain"))
       t.groupBy("domain", "host", "curl")
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc"))
         .groupBy("domain")
@@ -2671,7 +2671,7 @@ object QueriesText {
         |ORDER BY domain, doc_id""") { (s, dir) =>
       val url = syntheticUrl(col("doc_id"))
       val dom = Tables.documents(s, dir).select(col("doc_id"),
-        graft.functions.Urls.registeredDomain(s, url).as("domain"))
+        graft.functions.Urls.registeredDomain(url).as("domain"))
       graft.operators.Sampling.exactKPerStratum(dom, "domain", "doc_id", k = 3)
         .select("domain", "doc_id")
         .orderBy("domain", "doc_id")

@@ -53,31 +53,16 @@ object Indicators {
     * recursive ema_t = alpha*c_t + (1-alpha)*ema_{t-1}, seeded with c_0,
     * alpha = 2/(n+1). Reference: indicators.py:6-9.
     *
-    * Expressed with collect_list over the growing frame + the
-    * `aggregate` higher-order function folding in time order — exact
-    * recursion, no UDAF, stays in Catalyst. O(rows·frame) per key;
-    * at scale prefer `emaByKey` below (single pass per key).
+    * The native TypedImperativeAggregate `graft_ema`
+    * (plans/EmaAggregate) over the growing frame: the window evaluates
+    * it incrementally — O(n) per key vs the [[emaHof]] closed form's
+    * O(n²), with bit-identical recursion (PlansSpec).
     */
   def ema(c: Column, w: WindowSpec, span: Int): Column =
-    ema(org.apache.spark.sql.SparkSession.active, c, w, span)
+    call_function("graft_ema", c, lit(span))
+      .over(w.rowsBetween(Window.unboundedPreceding, 0))
 
-  /** [[ema]] with the EXECUTING session made explicit — prefer this
-    * overload whenever a session/DataFrame is in scope, so native-
-    * expression detection resolves against the session the plan will
-    * run in (not whichever session happens to be thread-active). */
-  def ema(spark: org.apache.spark.sql.SparkSession, c: Column, w: WindowSpec,
-          span: Int): Column = {
-    // Prefer the native TypedImperativeAggregate (plans/EmaAggregate):
-    // the growing-frame window evaluates it incrementally — O(n) per
-    // key vs the HOF closed form's O(n²). Bit-identical recursion
-    // (PlansSpec), so oracle results don't change with the path taken.
-    if (NativeFns.has(spark, "graft_ema"))
-      call_function("graft_ema", c, lit(span))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-    else emaHof(c, w, span)
-  }
-
-  /** Composable fallback: exact-recursion fold over the collected
+  /** Composable twin of [[ema]]: exact-recursion fold over the collected
     * history (no extensions required). O(rows × history) per key. */
   def emaHof(c: Column, w: WindowSpec, span: Int): Column = {
     val alpha = 2.0 / (span + 1)

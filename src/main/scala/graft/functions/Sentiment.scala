@@ -119,6 +119,15 @@ object Sentiment {
   def compoundUdf(text: Column): Column =
     scoreUdf(split(trim(text), "\\s+"))
 
+  /** Compound sentiment of `textCol` into `outCol`: the fused native
+    * `graft_sentiment` expression (plans/TextSignatures.scala; hash-map
+    * lookup per token, lexicon-size-independent), bit-identical to
+    * [[withCompoundColumns]] (TextSignaturesSpec). */
+  def withCompound(df: org.apache.spark.sql.DataFrame, textCol: String,
+                   outCol: String): org.apache.spark.sql.DataFrame =
+    df.withColumn(outCol,
+      call_function("graft_sentiment", split(trim(col(textCol)), "\\s+")))
+
   /** Compound sentiment as PURE built-in column functions — no UDF, so
     * the whole scorer inlines into whole-stage codegen and (because
     * every step is plain SQL semantics) is replayed value-exactly by
@@ -139,27 +148,10 @@ object Sentiment {
     * `get(stripped, i)` rebuild the whole regex-stripped array for
     * every token (O(n²) regex calls per document: 373 s at sf0.1).
     * Materializing each intermediate as a real projection column makes
-    * the lambdas reference per-row attributes instead. */
-  def withCompound(df: org.apache.spark.sql.DataFrame, textCol: String,
-                   outCol: String): org.apache.spark.sql.DataFrame = {
-    // fused native expression when the extensions are installed — same
-    // arithmetic, one JIT'd pass (plans/TextSignatures.scala); the
-    // column pipeline is the plain-session fallback
-    if (NativeFns.has(df.sparkSession, "graft_sentiment"))
-      df.withColumn(outCol,
-        call_function("graft_sentiment", split(trim(col(textCol)), "\\s+")))
-    else withCompoundColumns(df, textCol, outCol)
-  }
-
-  /** The composable-builtins fallback (TextSignaturesSpec asserts the
-    * native expression matches it bit for bit).
-    *
-    * SCALE NOTE: the per-token valence CASE chain below grows with the
-    * lexicon and runs interpreted inside transform() — fine for plain-
-    * session/spec use, but the production path is the native
-    * `graft_sentiment` expression (hash-map lookup per token,
-    * lexicon-size-independent), which every GraftExtensions session
-    * takes automatically. */
+    * the lambdas reference per-row attributes instead. The per-token
+    * valence CASE chain grows with the lexicon and runs interpreted
+    * inside transform(), which is why [[withCompound]] serves the
+    * native expression instead. */
   private[graft] def withCompoundColumns(df: org.apache.spark.sql.DataFrame, textCol: String,
                                          outCol: String): org.apache.spark.sql.DataFrame = {
     def valence(t: Column): Column =

@@ -143,24 +143,19 @@ object Urls {
     * shorter) degrade to themselves — the normalizer contract, not an
     * error. Served by the native `graft_registered_domain` expression
     * ([[graft.plans.RegisteredDomainLookup]] — ONE plan node probing
-    * rule sets hashed once per JVM) when the EXECUTING session has
-    * the graft extensions ([[NativeFns.has]] — the house gating
-    * convention; plain sessions fall back to the declarative twin,
-    * so no caller ever hits an unresolved-function analysis error): the declarative when-chain twin
+    * rule sets hashed once per JVM): the declarative when-chain twin
     * below carries ~14k rule literals through analysis/optimization/
     * codegen on EVERY query that calls it, measured as
     * q_domain_health's 1.85→2.96 s regression when the full PSL
-    * landed (r15 verdict #4). Both paths consume the same parsed
+    * landed (r15 verdict #4). Both forms consume the same parsed
     * [[SuffixRules]] and FunctionsSpec pins their equality, and the
     * same rule sets generate the DuckDB replay (q_domain_health's
     * oracle), so all THREE readings share one resource. The grouping
     * key for per-domain curation rollups and leakage-safe splits
     * ([[graft.operators.Sampling.assignSplit]] on this column keeps a
     * domain's pages on one side of the train/eval boundary). */
-  def registeredDomain(spark: org.apache.spark.sql.SparkSession, u: Column): Column =
-    if (NativeFns.has(spark, "graft_registered_domain"))
-      call_function("graft_registered_domain", host(u))
-    else registeredDomainDeclarative(u)
+  def registeredDomain(u: Column): Column =
+    call_function("graft_registered_domain", host(u))
 
   /** The declarative (built-ins only) twin of [[registeredDomain]] —
     * runnable on a session WITHOUT the graft extensions installed,

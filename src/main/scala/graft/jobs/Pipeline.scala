@@ -447,6 +447,15 @@ object Pipeline {
     Sinks.mergeIntoPartitioned(preds, lake.predictions, Seq("user_id", "d"), "d", doUpdate = true)
   }
 
+  /** Roll forward any crashed commit of the five merged lake tables
+    * before a stage reads one: [[runDay]] pins history and reads the
+    * feature table before the merges that would recover them. */
+  private def recoverLake(spark: SparkSession, lake: LakePaths): LakePaths = {
+    Seq(lake.history, lake.patterns, lake.analysis, lake.predictions, lake.features)
+      .foreach(Sinks.recover(spark, _))
+    lake
+  }
+
   /** The [[runDay]] append-only guard: `day` must be ≥ every date
     * already in standing history (equality = the sanctioned re-run of
     * the frontier day). A late-arriving day would rewrite only its own
@@ -502,7 +511,7 @@ object Pipeline {
     * bounds the source days — the standup shape for [[runDay]]. */
   def run(spark: SparkSession, sfDir: String, lakeRoot: String,
           before: Option[java.sql.Date] = None): LakePaths = {
-    val lake = LakePaths(lakeRoot)
+    val lake = recoverLake(spark, LakePaths(lakeRoot))
     // Each post-merge stage reads the lake itself (r22, guide §5):
     // r21 cached the WHOLE history here for stages 3–5, which defeats
     // per-stage column pruning (each stage needs a different narrow
@@ -540,7 +549,7 @@ object Pipeline {
   def runDay(spark: SparkSession, sfDir: String, lakeRoot: String,
              day: java.sql.Date,
              lookbackDays: Int = DayLookback): LakePaths = {
-    val lake = LakePaths(lakeRoot)
+    val lake = recoverLake(spark, LakePaths(lakeRoot))
     requireAppendOnly(spark, lake, day)
     var slice: DataFrame = null
     try {

@@ -74,13 +74,6 @@ object Dedup {
     docs.select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
       .select(col("doc_id"), gramsOf(col("toks"), n).as("grams"))
 
-  /** True when the fused native signature expressions (plans/
-    * TextSignatures.scala) are registered via GraftExtensions. The HOF
-    * column forms below compute identical VALUES (TextSignaturesSpec)
-    * but evaluate interpreted per element; native is one JIT'd pass. */
-  private def nativeSigs(spark: SparkSession): Boolean =
-    graft.functions.NativeFns.has(spark, "graft_minhash_sigs")
-
   private def withToks(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
 
@@ -108,7 +101,6 @@ object Dedup {
     * a persisted LSH index stores per document. */
   private def minhashBanded(docs: DataFrame, shingleK: Int, bands: Int,
                             rowsPerBand: Int): DataFrame = {
-    val spark = docs.sparkSession
     val ab = minhashCoeffs(bands * rowsPerBand)
     val sigs = array(ab.map { case (a, b) =>
       array_min(transform(col("h32"), h => (h * lit(a) + lit(b)) % lit(minhashP)))
@@ -117,7 +109,7 @@ object Dedup {
       t => concat_ws(":", t,
         concat_ws(",", slice(col("sigs"), t * lit(rowsPerBand) + 1, lit(rowsPerBand)))))
     val sigsStage =
-      if (nativeSigs(spark) && bands * rowsPerBand == 64)
+      if (bands * rowsPerBand == 64)
         withToks(docs).select(col("doc_id"),
           call_function("graft_minhash_sigs", col("toks"), lit(shingleK)).as("sigs"))
       else withGrams(docs, shingleK)
@@ -307,39 +299,21 @@ object Dedup {
 
   // ── SimHash ────────────────────────────────────────────────────────
 
-  /** 60-bit SimHash (Charikar 2002) over md5 token hashes, as pure
-    * built-ins: per bit, the majority vote of the token hash bits
-    * (each occurrence counted, like the classic accumulate loop) sets
-    * the signature bit. 60 bits = the 15-hex-char md5 prefix, which
-    * any SQL engine reproduces — q_dedup_simhash carries a value-exact
-    * DuckDB oracle built from the same per-bit expressions. */
-  /** Token md5 hash array (materialize this as a COLUMN before feeding
-    * [[simhashSigOfTh]] — each of the 60 per-bit votes walks the array,
-    * and a lambda-inlined expression would recompute every token's md5
-    * 60 times per row). */
-  private[graft] def tokenHashes(text: org.apache.spark.sql.Column) =
-    transform(TextStats.tokens(text),
-      t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-
-  /** SimHash signature from a materialized token-hash column. */
-  private[graft] def simhashSigOfTh(th: org.apache.spark.sql.Column) =
-    (0 until 60).map { b =>
-      val vote = aggregate(th, lit(0), (acc, h) =>
-        acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1, 1).otherwise(-1))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Near-dup pairs via SimHash banding: 4 bands of 15 bits; pairs
-    * sharing any band are verified by Hamming distance ≤ maxHamming. */
+    * sharing any band are verified by Hamming distance ≤ maxHamming.
+    * The signature is the 60-bit SimHash (Charikar 2002) over md5
+    * token hashes (the native `graft_simhash_sig`, [[graft.plans.TextSig]]): per
+    * bit, the majority vote of the token hash bits (each occurrence
+    * counted, like the classic accumulate loop) sets the signature
+    * bit. 60 bits = the 15-hex-char md5 prefix, which any SQL engine
+    * reproduces — q_dedup_simhash carries a value-exact DuckDB oracle
+    * built from per-bit votes that TextSignaturesSpec pins the native
+    * expression against. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sigs =
-      if (nativeSigs(spark))
-        withToks(docs).select(col("doc_id"),
-          call_function("graft_simhash_sig", col("toks")).as("sig"))
-      else docs.select(col("doc_id"), tokenHashes(col("text")).as("th"))
-        .select(col("doc_id"), simhashSigOfTh(col("th")).as("sig"))
+    val sigs = withToks(docs).select(col("doc_id"),
+      call_function("graft_simhash_sig", col("toks")).as("sig"))
     val banded = sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until 4).map(i =>
         concat_ws(":", lit(i), shiftright(col("sig"), i * 15).bitwiseAND(lit(0x7fffL)))): _*)).as("band"))
@@ -364,12 +338,8 @@ object Dedup {
   /** doc_id + sorted distinct 60-bit md5 gram-hash set (staged so the
     * tokenizer never lands inside a lambda). */
   private[graft] def withShingleHashSet(docs: DataFrame, n: Int): DataFrame =
-    if (nativeSigs(docs.sparkSession))
-      withToks(docs).select(col("doc_id"),
-        call_function("graft_gram_hashes", col("toks"), lit(n)).as("sh"))
-    else withGrams(docs, n).select(col("doc_id"),
-      array_sort(array_distinct(transform(col("grams"),
-        s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")))).as("sh"))
+    withToks(docs).select(col("doc_id"),
+      call_function("graft_gram_hashes", col("toks"), lit(n)).as("sh"))
 
   /** Benchmark decontamination — the training-data hygiene step that
     * drops training docs overlapping an evaluation/benchmark set: flag

@@ -89,7 +89,7 @@ object FuzzyLinkIndex {
 
   /** The raw (id, s) rows of every COMMITTED batch — singles AND
     * merged dirs carrying `_fp` ([[Profile.committedPartDirs]]:
-    * crash debris, maintenance twins and merged-away tombstones are
+    * crash debris, maintenance twins and merged-away batches are
     * invisible). NOT collapsed — the refresh distincts once, and the
     * growth trigger counts these raw rows (parquet-metadata-cheap;
     * duplicate rows across batches overstate true set growth, which
@@ -107,7 +107,7 @@ object FuzzyLinkIndex {
     * hoisted house protocol ([[Profile.mergeBatchParts]]): batch
     * merges travel the `_fp` inside the staged dir, re-derive + refuse
     * on corruption, and keep redeliveries of merged-away batch keys
-    * no-ops via tombstoned fingerprints. Single-writer maintenance
+    * no-ops via the merged part's `_sources`. Single-writer maintenance
     * entry, like refresh. */
   def mergeCatalogBatches(spark: SparkSession, path: String,
                           maxDirs: Int = 64): Unit = {

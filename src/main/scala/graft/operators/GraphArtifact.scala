@@ -79,7 +79,7 @@ object GraphArtifact {
   /** The union edge set of every COMMITTED batch — singles AND merged
     * dirs carrying the `_fp` marker ([[Profile.committedPartDirs]]:
     * mid-crash debris, `__staged` maintenance twins and merged-away
-    * tombstones are all invisible). */
+    * batches are all invisible). */
   private def committedEdges(spark: SparkSession, path: String): DataFrame = {
     val committed = Profile.committedPartDirs(spark, path)
     require(committed.nonEmpty,
@@ -132,9 +132,9 @@ object GraphArtifact {
     * ~maxDirs ticks apart): count+XOR fingerprints compose, the
     * union edge multiset is preserved exactly (refresh re-collapses
     * as always), and a REDELIVERY of a merged-away batch key still
-    * no-ops against its `_fp` in the tombstone LEDGER (one file, so
-    * the listing bound is real) — with a different payload still
-    * loud. Same concurrent-reader caveat as [[compactEdgeBatches]],
+    * no-ops against its `_fp` in the merged part's `_sources` (no
+    * dir per batch, so the listing bound is real) — with a different
+    * payload still loud. Same concurrent-reader caveat as [[compactEdgeBatches]],
     * except the mid-merge window is LOUD to readers, never a
     * silently partial fold. */
   def mergeEdgeBatches(spark: SparkSession, path: String,

@@ -18,8 +18,12 @@ import org.apache.spark.sql.functions._
   *                 Reference: fetch_tech_companies.py:66-89.
   *
   * Mechanics: tag-union + window row_number over the key, keeping the
-  * preferred provenance. Columns are aligned by name (`unionByName`),
-  * so schema drift between target and updates is an explicit error.
+  * preferred provenance; same-key rows of one side (two rows for one
+  * key in a batch) resolve to the row with the highest full-row
+  * `xxhash64`, the [[graft.sources.Sinks.jdbcUpsert]] rule, so a
+  * bootstrap and every replay persist the same survivor. Columns are
+  * aligned by name (`unionByName`), so schema drift between target and
+  * updates is an explicit error.
   *
   * Scale: one shuffle on the merge key — the same shuffle a SQL MERGE
   * would pay. On a partitioned lake, pair with dynamic partition
@@ -33,33 +37,39 @@ object Merge {
   private val provCol = "__graft_prov"
   private val seqCol  = "__graft_seq"
 
+  /** One row per `keys` of `df`: the first under `prefer`, then the
+    * highest hash of `cols`. */
+  private def survivors(df: DataFrame, keys: Seq[String], cols: Seq[String],
+                        prefer: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(prefer :+ xxhash64(cols.map(col): _*).desc: _*)
+    df.withColumn(seqCol, row_number().over(w))
+      .filter(col(seqCol) === 1)
+      .drop(seqCol)
+  }
+
   private def merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
                     updatesWin: Boolean): DataFrame = {
     val cols = target.columns.toSeq
     require(keys.forall(cols.contains), s"merge keys $keys must exist in target")
     val t = target.withColumn(provCol, lit(if (updatesWin) 1 else 0))
     val u = updates.select(cols.map(col): _*).withColumn(provCol, lit(if (updatesWin) 0 else 1))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(provCol))
-    t.unionByName(u)
-      .withColumn(seqCol, row_number().over(w))
-      .filter(col(seqCol) === 1)
-      .drop(provCol, seqCol)
+    survivors(t.unionByName(u), keys, cols, Seq(col(provCol))).drop(provCol)
   }
 
-  /** ON CONFLICT (keys) DO UPDATE — updates win. Updates are deduped on
-    * the key first (last-write-wins is undefined within a batch, as in
-    * the reference's per-row upsert loop, so we take an arbitrary-but-
-    * deterministic one via dropDuplicates). */
+  /** ON CONFLICT (keys) DO UPDATE — updates win. Last-write-wins is
+    * undefined within a batch, as in the reference's per-row upsert
+    * loop, so same-key updates keep the deterministic survivor. */
   def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
-    merge(target, updates.dropDuplicates(keys), keys, updatesWin = true)
+    merge(target, updates, keys, updatesWin = true)
 
   /** ON CONFLICT (keys) DO NOTHING — existing rows win. */
   def insertIgnore(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
-    merge(target, updates.dropDuplicates(keys), keys, updatesWin = false)
+    merge(target, updates, keys, updatesWin = false)
 
   /** U6 — overwrite-upsert: rebuild the dim from the incoming batch. */
   def overwrite(updates: DataFrame, keys: Seq[String]): DataFrame =
-    updates.dropDuplicates(keys)
+    survivors(updates, keys, updates.columns.toSeq, Nil)
 
   /** Slowly-changing-dimension type 2 — the versioned form of the
     * dimension upserts above (U6's tech_companies dim, kept with full

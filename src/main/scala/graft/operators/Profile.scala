@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.sources.StagedCommit
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -413,26 +414,26 @@ object Profile {
                               d => xxhash64(d.columns.map(col): _*),
                             coalesce1: Boolean = true): Unit = {
     val spark = contribution.sparkSession
+    recoverParts(spark, path) // a writer entry: heal first
     val df = contribution.localCheckpoint() // one computation for fp + write
     val fp = contentFingerprint(df, fpRow)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/parts/$part")
+    val dir = new Path(s"$path/parts/$part")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fpFile = new org.apache.hadoop.fs.Path(dir, "_fp")
+    val fpFile = new Path(dir, "_fp")
     if (fs.exists(fpFile)) {
-      val in = fs.open(fpFile)
-      val old = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
+      val old = readSmall(fs, fpFile)
       require(old == fp,
         s"$what part $part already holds a DIFFERENT contribution " +
           s"(fingerprint $old vs $fp) — a redelivered batch must be identical; " +
           "this looks like a reset checkpoint or a second writer sharing the artifact")
       return // identical redelivery: nothing to do
     }
-    // a merged-away batch has no dir — its fingerprint lives in the
-    // tombstone ledger, and the replay contract is identical: same
-    // payload is a no-op (its rows already fold via the merged dir),
-    // a different payload under a retired key is loud
-    readTombstones(fs, dir.getParent).get(part) match {
+    // a merged-away batch has no dir — its fingerprint rides in the
+    // `_sources` of the merged part that absorbed it, and the replay
+    // contract is identical: same payload is a no-op (its rows
+    // already fold via the merged dir), a different payload under a
+    // retired key is loud
+    retiredFingerprint(fs, dir.getParent, part) match {
       case Some(retired) =>
         require(retired == fp,
           s"$what part $part was merged away holding a DIFFERENT contribution " +
@@ -453,184 +454,80 @@ object Profile {
   // (CMS / quantile / agg / HLL-shard sketches here, rank edges in
   // [[GraphArtifact]], the fuzzy-link catalog in [[FuzzyLinkIndex]]):
   // one definition of "committed", one recovery, one per-dir
-  // compaction, one dir-count-bounding merge — so the crash-window
-  // engineering can never fork between families (r16 verdict #4/#7).
+  // compaction, one dir-count-bounding merge, all committed under the
+  // parts dir's one [[StagedCommit]] marker — so the crash-window
+  // engineering can never fork between families.
+
+  private def readSmall(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+  }
+
+  private val MergedName = ".*-?\\d+_-?\\d+"
 
   /** The COMMITTED part-dir names under `path/parts` for `prefix`
     * (e.g. "b="): single batch dirs `<prefix><key>` and merged dirs
     * `<prefix><lo>_<hi>` carrying the `_fp` marker; `__staged`
     * maintenance twins never match (name match is EXACT), and
     * merged-away batches have no dir at all — their replay
-    * fingerprints live in the `_tombstones` ledger, so the listing
-    * stays O(committed dirs), which the merge policy bounds
-    * (r17 review: per-batch tombstone DIRS would re-grow the
-    * O(batches) listing the merge exists to remove).
+    * fingerprints ride in the merged part's `_sources`, so the
+    * listing stays O(committed dirs), which the merge policy bounds.
     *
-    * LOUD when a pending merge is visible (a `__staged` twin carrying
-    * a `_sources` manifest) or a compaction commit is pending: either
-    * way the part set is transiently partial, and a silent read of it
-    * would serve wrong folds — the [[graft.operators.KeywordSearch]]
-    * ingest-marker discipline.
-    * Single-writer entries heal first ([[recoverParts]]) and never
-    * see this. */
+    * LOUD while a compaction or merge commit is pending: the part set
+    * is transiently partial, and a silent read of it would serve
+    * wrong folds. Single-writer entries heal first ([[recoverParts]])
+    * and never see this. */
   private[operators] def committedPartDirs(spark: org.apache.spark.sql.SparkSession,
       path: String, prefix: String = "b="): Seq[String] = {
-    val parts = new org.apache.hadoop.fs.Path(s"$path/parts")
+    val parts = new Path(s"$path/parts")
     val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = java.util.regex.Pattern.quote(prefix)
     if (!fs.exists(parts)) Seq.empty
     else {
-      val listed = fs.listStatus(parts)
-      val pending = listed.filter { s =>
-        s.getPath.getName.matches(s"$p-?\\d+(_-?\\d+)?__staged") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_sources"))
-      }
-      require(pending.isEmpty && !StagedCommit.pending(fs, compactMarker(parts)),
-        s"artifact at $path has a merge or compaction in progress or crashed " +
-          s"(${pending.map(_.getPath.getName).mkString(", ")}) — the part set is " +
-          "transiently partial; a single-writer entry (refresh/compact/merge) heals it")
-      listed.filter { s =>
-        val n = s.getPath.getName
-        n.matches(s"$p-?\\d+(_-?\\d+)?") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_fp"))
+      require(!StagedCommit.pending(fs, partsMarker(parts)),
+        s"artifact at $path has a merge or compaction in progress or crashed — " +
+          "the part set is transiently partial; a single-writer entry " +
+          "(ingest/refresh/compact/merge) heals it")
+      val p = java.util.regex.Pattern.quote(prefix)
+      fs.listStatus(parts).filter { s =>
+        s.getPath.getName.matches(s"$p-?\\d+(_-?\\d+)?") && fs.exists(new Path(s.getPath, "_fp"))
       }.map(_.getPath.toString).toSeq.sorted
     }
   }
 
-  /** The merged-away batch ledger at `path/parts/_tombstones`: one
-    * line per retired single batch dir — `<name> <fingerprint>` — so
-    * a late at-least-once redelivery of a merged-away batch key still
-    * no-ops (same payload) or fails loudly (different payload)
-    * without keeping one tombstone DIR per batch forever. Written
-    * only by single-writer maintenance ([[finishMerge]]), read by
-    * [[landBatchPart]] on the slow path (dir absent). */
-  /** One `<name> <count-x-xor fingerprint>` ledger line. */
-  private val LedgerLine = "(.+) (-?\\d+x-?\\d+)".r
-
-  /** The ledger's terminator record — `#end <entry count>`, written
-    * LAST (r17 verdict #5): a file that carries it is COMPLETE by
-    * construction (writes are sequential), so truncation is decidable
-    * exactly — including the nasty case where the cut lands inside a
-    * fingerprint and the shortened number still parses. Batch dir
-    * names never start with '#'. */
-  private val LedgerEnd = "#end (\\d+)".r
-
-  /** Parse ledger lines (r17 verdict #5 — the first-merge crash must
-    * heal clean):
-    *  - terminator present and last, count matching → every entry;
-    *  - no terminator and every line parses → a tmp a crash cut at
-    *    a line boundary: every entry;
-    *  - no terminator, malformed TRAILING line → a crash mid-write of
-    *    the tmp; the lost tail's source dirs were never deleted
-    *    (deletion happens strictly after the writer closes), so
-    *    dropping the partial line is exact roll-back — the merge
-    *    retry re-tombstones from the dirs' own `_fp` files;
-    *  - anything else (malformed interior line, misplaced terminator,
-    *    count mismatch) cannot come from a crash window → loud. */
-  private def parseLedgerLines(lines: List[String],
-      src: org.apache.hadoop.fs.Path): Map[String, String] = {
-    val terminated = lines.lastOption.exists(LedgerEnd.matches)
-    val data = if (terminated) lines.dropRight(1) else lines
-    data.foreach { l =>
-      require(!LedgerEnd.matches(l),
-        s"tombstone ledger $src has a misplaced terminator ('$l') — " +
-          "not a crash shape; refusing to guess at corruption")
+  /** A merged part's `_sources`: one `<batch part> <fingerprint>` line
+    * per single batch it absorbed, directly or through a merged
+    * source. */
+  private def readSources(fs: FileSystem, merged: Path): Seq[(String, String)] = {
+    val f = new Path(merged, "_sources")
+    readSmall(fs, f).split('\n').toSeq.filter(_.nonEmpty).map { l =>
+      val i = l.indexOf(' ')
+      require(i > 0, s"corrupt merge record $f: line '$l'")
+      l.substring(0, i) -> l.substring(i + 1)
     }
-    if (terminated) {
-      val LedgerEnd(n) = lines.last
-      // a terminator claiming FEWER entries than the complete data
-      // lines above it, in the TMP, is the crash that truncated the
-      // terminator's own digits ('#end 12' cut to '#end 1' — r18
-      // review): writes are sequential, so every data line preceding
-      // it is complete — keep them all, drop the mangled terminator.
-      // The published ledger is a rename of a closed tmp and can
-      // never truncate; anything else is real corruption.
-      require(n.toLong == data.length ||
-          (src.getName.endsWith(".tmp") && n.toLong < data.length),
-        s"tombstone ledger $src terminator claims $n entries, file has " +
-          s"${data.length} — not a crash shape; refusing to guess at corruption")
-    }
-    data.zipWithIndex.flatMap { case (l, i) =>
-      l match {
-        case LedgerLine(name, fp) => Some(name -> fp)
-        case _ =>
-          require(!terminated && i == data.length - 1,
-            s"tombstone ledger $src line ${i + 1} is malformed ('$l') before " +
-              "intact lines — not a crash tail; refusing to guess at corruption")
-          None // truncated trailing line from a crash mid-write
+  }
+
+  /** The fingerprint a committed merged part recorded for the
+    * merged-away batch `part` (`<prefix><key>`), if any. Only a merged
+    * dir whose `<lo>_<hi>` range spans the key can have absorbed it,
+    * so a fresh key past every range reads no `_sources` at all. */
+  private def retiredFingerprint(fs: FileSystem, parts: Path, part: String): Option[String] = {
+    val cut = part.indexOf('=') + 1
+    val key = part.substring(cut).toLong
+    val Merged = (java.util.regex.Pattern.quote(part.substring(0, cut)) + "(-?\\d+)_(-?\\d+)").r
+    if (!fs.exists(parts)) None
+    else fs.listStatus(parts).iterator.map(_.getPath).filter { d =>
+      d.getName match {
+        case Merged(lo, hi) => lo.toLong <= key && key <= hi.toLong
+        case _ => false
       }
-    }.toMap
+    }.flatMap(d => readSources(fs, d).find(_._1 == part).map(_._2)).nextOption()
   }
-
-  /** Is this line set a crash-cut tmp shape — unterminated, or a
-    * terminator whose own digits were truncated? Only meaningful for
-    * a `.tmp` source (the published ledger is a rename of a closed
-    * tmp and can never truncate). */
-  private def isCrashCutTmp(lines: List[String]): Boolean =
-    lines.lastOption match {
-      case None => false
-      case Some(LedgerEnd(n)) => n.toLong < lines.length - 1
-      case Some(_) => true
-    }
-
-  /** Assert the invariant the crash-tail heal CONSUMES (r18 advice):
-    * a no-ledger crash-cut tmp can only be the FIRST-EVER merge (any
-    * later crash-mid-tmp leaves the published ledger intact, and the
-    * delete→rename window leaves a COMPLETE tmp), so every entry it
-    * records — including a trailing line whose truncated fingerprint
-    * still parses ('123x45' cut to '123x4') — references a source dir
-    * that still exists, and [[finishMerge]]'s upsert re-tombstones it
-    * from the dir's own `_fp`, overwriting any mis-recorded value.
-    * This check makes that write-ordering assumption LOUD where it is
-    * relied on: if a future reordering ever deleted source dirs
-    * before the ledger publish, the silent adoption would otherwise
-    * become a permanent 'DIFFERENT contribution' crash-loop on
-    * correct replays. */
-  private def requireCrashTailDirsExist(fs: org.apache.hadoop.fs.FileSystem,
-      parts: org.apache.hadoop.fs.Path, entries: Map[String, String],
-      src: org.apache.hadoop.fs.Path): Unit =
-    entries.keys.foreach { name =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(parts, name)),
-        s"crash-cut tombstone tmp $src records batch '$name' whose source dir " +
-          "is gone — a first-merge crash always leaves its sources (deletion " +
-          "is strictly after ledger publish), so this is corruption or a " +
-          "write-ordering change; refusing to adopt a possibly-truncated entry")
-    }
-
-  private def readTombstones(fs: org.apache.hadoop.fs.FileSystem,
-      parts: org.apache.hadoop.fs.Path): Map[String, String] = {
-    val ledger = new org.apache.hadoop.fs.Path(parts, "_tombstones")
-    // crash fallback: a delete→rename window can leave only the tmp;
-    // a FULLY-written tmp is the newer superset (the delete happens
-    // strictly after its close), and a PARTIAL tmp coexists with the
-    // intact ledger, which wins here
-    val src = if (fs.exists(ledger)) ledger
-      else new org.apache.hadoop.fs.Path(parts, "_tombstones.tmp")
-    if (!fs.exists(src)) Map.empty
-    else {
-      val in = fs.open(src)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList.filter(_.nonEmpty) finally in.close()
-      val entries = parseLedgerLines(lines, src)
-      if (src.getName.endsWith(".tmp") && isCrashCutTmp(lines))
-        requireCrashTailDirsExist(fs, parts, entries, src)
-      entries
-    }
-  }
-
-  private def writeTombstones(fs: org.apache.hadoop.fs.FileSystem,
-      parts: org.apache.hadoop.fs.Path, entries: Map[String, String]): Unit =
-    // entries only grow: the tmp ⊇ the ledger, and readTombstones
-    // falls back to the tmp inside the delete→rename window
-    StagedCommit.writeAtomic(fs, new org.apache.hadoop.fs.Path(parts, "_tombstones"),
-      (entries.toSeq.sorted.map { case (k, v) => s"$k $v\n" }
-        .mkString + s"#end ${entries.size}\n").getBytes("UTF-8"))
 
   /** Fold scaffolding shared by the artifact readers: meta-free —
     * public readers check the meta themselves (once). Reads ONLY
     * committed dirs ([[committedPartDirs]]) — crash debris without
-    * `_fp`, tombstoned merged-away parts, and maintenance twins are
-    * invisible, the [[GraphArtifact]] read discipline generalized. */
+    * `_fp`, merged-away parts, and maintenance twins are invisible,
+    * the [[GraphArtifact]] read discipline generalized. */
   private def foldParts(spark: org.apache.spark.sql.SparkSession, path: String,
                         prefix: String)(fold: DataFrame => DataFrame,
                                         empty: => DataFrame): DataFrame = {
@@ -644,150 +541,56 @@ object Profile {
     * maintenance must never launder a corrupted part into a
     * freshly-committed dir. Returns the fresh `count x xor` form. */
   private def verifiedFingerprint(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, what: String,
+      fs: FileSystem, dir: String, what: String,
       fpRow: DataFrame => org.apache.spark.sql.Column): String = {
     val fresh = contentFingerprint(spark.read.parquet(dir), fpRow)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/_fp"))
-    val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
+    val stored = readSmall(fs, new Path(s"$dir/_fp"))
     require(stored == fresh,
       s"$what part at $dir fails its fingerprint ($stored vs $fresh) — " +
         "refusing to rewrite a corrupted part into a freshly-committed dir")
     fresh
   }
 
-  /** Heal every maintenance crash window under `path/parts` — runs
-    * ONLY at single-writer entry points (ingest-side maintenance,
-    * refresh); read paths never mutate. In order:
-    *  - a pending COMPACTION commit ([[compactBatchParts]]'s
-    *    [[StagedCommit]] marker): rolled FORWARD first, so no later
-    *    step mistakes its staged twins for debris;
-    *  - a PENDING MERGE (`__staged` dir carrying a `_sources`
-    *    manifest): rolled FORWARD when any evidence of tombstoning
-    *    exists (a listed single already `_merged`, or a listed merged
-    *    source already deleted) — finish tombstoning, promote —
-    *    else rolled back (sources intact, staged is debris);
-    *  - any other `__staged` twin is staging from before its manifest
-    *    or marker: debris, dropped. */
+  /** Heal a crashed compaction or merge under `path/parts` — runs ONLY
+    * at single-writer entry points (ingest, maintenance, refresh);
+    * read paths never mutate. A pending commit rolls FORWARD; with no
+    * marker left, any `__staged` twin is staging from before its
+    * commit point: debris, dropped (its sources are intact). */
   private[operators] def recoverParts(spark: org.apache.spark.sql.SparkSession,
-      path: String, prefix: String = "b="): Unit = {
-    val parts = new org.apache.hadoop.fs.Path(s"$path/parts")
+      path: String): Unit = {
+    val parts = new Path(s"$path/parts")
     val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(parts)) return
-    StagedCommit.recover(fs, compactMarker(parts))
-    // ledger publish window: a tmp with no ledger is either the
-    // delete→rename crash (tmp complete — the newer superset) or a
-    // crash MID-WRITE of the first-ever merge's tmp (tmp truncated).
-    // Heal by PARSING it (r17 verdict #5: a blind rename promoted the
-    // truncated tail, and the next read threw on the partial line) —
-    // a malformed trailing line is dropped (its entries' source dirs
-    // were never deleted, so the merge retry re-tombstones them),
-    // interior corruption stays loud — then republishing the cleaned
-    // entries through the normal tmp→rename writer.
-    val ledger = new org.apache.hadoop.fs.Path(parts, "_tombstones")
-    val ledgerTmp = new org.apache.hadoop.fs.Path(parts, "_tombstones.tmp")
-    if (!fs.exists(ledger) && fs.exists(ledgerTmp))
-      // same parse + crash-shape guards as every read (a crash-cut
-      // tmp's entries must all reference still-present dirs before
-      // they are laundered into a published ledger — r18 advice)
-      writeTombstones(fs, parts, readTombstones(fs, parts))
-    val p = java.util.regex.Pattern.quote(prefix)
-    val names = fs.listStatus(parts).map(_.getPath.getName)
-    // a __staged dir carrying a `_sources` manifest is a pending merge
-    // (a rollback after tombstoning would lose data); any other is
-    // staging from before its merge manifest or compaction marker
-    names.filter(_.matches(s"$p-?\\d+(_-?\\d+)?__staged")).foreach { n =>
-      val staged = new org.apache.hadoop.fs.Path(parts, n)
-      val manifest = new org.apache.hadoop.fs.Path(staged, "_sources")
-      if (fs.exists(manifest)) {
-        val in = fs.open(manifest)
-        val sources = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList.filter(_.nonEmpty) finally in.close()
-        // tombstoning evidence = any listed source already retired
-        // (dir gone, or its key in the ledger): roll FORWARD; with no
-        // evidence the sources are intact and the staged dir is debris
-        val retired = readTombstones(fs, parts)
-        val tombstoned = sources.exists { s =>
-          retired.contains(s) || !fs.exists(new org.apache.hadoop.fs.Path(parts, s))
-        }
-        if (tombstoned) finishMerge(fs, parts, n.stripSuffix("__staged"), sources)
-        else fs.delete(staged, true) // nothing consumed yet: pure debris
-      } else fs.delete(staged, true) // crashed before a manifest or marker: debris
-    }
+    StagedCommit.recover(fs, partsMarker(parts))
+    fs.listStatus(parts).map(_.getPath).filter(_.getName.endsWith("__staged"))
+      .foreach(fs.delete(_, true))
   }
 
-  /** The forward half of a merge — callable from the merge itself or
-    * from [[recoverParts]] at any crash point after tombstoning
-    * began: record every still-present listed SINGLE source in the
-    * `_tombstones` ledger (its `_fp` keeps the replay guard alive
-    * without a per-batch dir — r17 review: tombstone dirs would
-    * re-grow the O(batches) listing), delete the source dirs (merged
-    * sources too — synthetic keys never receive redeliveries, and
-    * the name must free for future merges), then promote the staged
-    * dir. Every step is idempotent: a source already retired has a
-    * ledger entry and no dir. */
-  private def finishMerge(fs: org.apache.hadoop.fs.FileSystem,
-      parts: org.apache.hadoop.fs.Path, target: String,
-      sources: Seq[String]): Unit = {
-    val (mergedSrcs, singleSrcs) = sources.partition(_.matches(".*-?\\d+_-?\\d+"))
-    // ledger first (one idempotent write covering every still-present
-    // single), dirs second — a crash between leaves dirs whose keys
-    // are ledgered, which the retry just deletes
-    val present = singleSrcs.filter(s =>
-      fs.exists(new org.apache.hadoop.fs.Path(parts, s"$s/_fp")))
-    if (present.nonEmpty) {
-      val old = readTombstones(fs, parts)
-      // UPSERT, not insert-if-absent (r17 verdict #5): while a source
-      // dir still exists, its own `_fp` is ground truth — a retry
-      // after a crash mid-first-write overwrites any entry a
-      // truncated-but-parseable ledger tail mis-recorded
-      val fresh = present.map { s =>
-        val in = fs.open(new org.apache.hadoop.fs.Path(parts, s"$s/_fp"))
-        s -> (try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close())
-      }.filter { case (s, fp) => !old.get(s).contains(fp) }
-      if (fresh.nonEmpty) writeTombstones(fs, parts, old ++ fresh)
-    }
-    (singleSrcs ++ mergedSrcs).foreach { s =>
-      val d = new org.apache.hadoop.fs.Path(parts, s)
-      if (fs.exists(d)) fs.delete(d, true)
-    }
-    val staged = new org.apache.hadoop.fs.Path(parts, s"${target}__staged")
-    if (fs.exists(staged)) {
-      val tgt = new org.apache.hadoop.fs.Path(parts, target)
-      require(!fs.exists(tgt),
-        s"merge: target $tgt already exists beside its staged twin — " +
-          "refusing to overwrite; inspect the artifact")
-      if (!fs.rename(staged, tgt))
-        throw new java.io.IOException(s"merge: could not promote $staged")
-    }
-  }
-
-  /** The [[StagedCommit]] marker of an in-flight [[compactBatchParts]]
-    * run: one per `parts` dir, recovered first by [[recoverParts]]. */
-  private def compactMarker(parts: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(parts, "_compact.plan")
+  /** The parts dir's one [[StagedCommit]] marker: every compaction
+    * and merge commits under it, and [[recoverParts]] rolls it
+    * forward. */
+  private def partsMarker(parts: Path) = new Path(parts, "_compact.plan")
 
   /** Small-files maintenance, hoisted from [[GraphArtifact]] (r16
     * verdict #4): each committed part dir above the file-count target
-    * is rewritten — the `_fp` travels INSIDE the staged dir so the
-    * promoted dir is committed-with-marker atomically, and the
-    * fingerprint is RE-DERIVED from the rows and required equal
-    * first ([[verifiedFingerprint]]). Every rewritten dir is then
-    * replaced under ONE [[StagedCommit]] per run; a crash rolls it
-    * forward at the next single-writer entry via [[recoverParts]], and
-    * readers fail loudly while it is pending ([[committedPartDirs]]).
-    * Replay semantics are untouched. */
+    * is rewritten — its `_fp` (and a merged part's `_sources`) travel
+    * INSIDE the staged dir so the promoted dir is committed-with-
+    * marker atomically, and the fingerprint is RE-DERIVED from the
+    * rows and required equal first ([[verifiedFingerprint]]). Every
+    * rewritten dir is then replaced under ONE [[StagedCommit]] per
+    * run; a crash rolls it forward at the next single-writer entry
+    * via [[recoverParts]], and readers fail loudly while it is
+    * pending ([[committedPartDirs]]). Replay semantics are untouched. */
   private[operators] def compactBatchParts(spark: org.apache.spark.sql.SparkSession,
       path: String, what: String, prefix: String = "b=",
       targetFileBytes: Long = 128L * 1024 * 1024,
       fpRow: DataFrame => org.apache.spark.sql.Column =
         d => xxhash64(d.columns.map(col): _*)): Unit = {
-    recoverParts(spark, path, prefix)
-    val parts = new org.apache.hadoop.fs.Path(s"$path/parts")
+    recoverParts(spark, path)
+    val parts = new Path(s"$path/parts")
     val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val steps = committedPartDirs(spark, path, prefix).flatMap { dir =>
-      val d = new org.apache.hadoop.fs.Path(dir)
+      val d = new Path(dir)
       val dataFiles = fs.listStatus(d).filter(_.isFile)
         .filterNot(f => f.getPath.getName.startsWith("_") ||
           f.getPath.getName.startsWith("."))
@@ -796,15 +599,18 @@ object Profile {
       if (dataFiles.length <= nTarget) None
       else {
         val stored = verifiedFingerprint(spark, fs, dir, what, fpRow)
-        val staged = new org.apache.hadoop.fs.Path(s"${dir}__staged")
+        val staged = new Path(s"${dir}__staged")
         spark.read.parquet(dir).coalesce(nTarget)
           .write.mode("overwrite").parquet(staged.toString)
-        val out = fs.create(new org.apache.hadoop.fs.Path(staged, "_fp"), true)
+        val out = fs.create(new Path(staged, "_fp"), true)
         try out.write(stored.getBytes("UTF-8")) finally out.close()
+        if (d.getName.matches(MergedName))
+          org.apache.hadoop.fs.FileUtil.copy(fs, new Path(d, "_sources"), fs,
+            new Path(staged, "_sources"), false, spark.sparkContext.hadoopConfiguration)
         Some(StagedCommit.Replace(staged.getName, d.getName))
       }
     }
-    if (steps.nonEmpty) StagedCommit.commit(fs, compactMarker(parts), steps)
+    if (steps.nonEmpty) StagedCommit.commit(fs, partsMarker(parts), steps)
   }
 
   /** Dir-count maintenance (r16 verdict #7): when committed part dirs
@@ -825,48 +631,51 @@ object Profile {
     * ~maxDirs ticks apart.
     *
     * Replay after a merge: a redelivered merged-away batch key still
-    * no-ops — its original `_fp` moves into the `_tombstones` ledger
-    * (ONE file, not one dir per batch, so the listing bound is real);
-    * a DIFFERENT payload under that key still fails loudly. Merged
-    * dirs use synthetic `<lo>_<hi>` keys no writer ever lands; a
-    * singles-only target cannot collide (its endpoints are
-    * un-retired keys, every existing merged dir's endpoints are
-    * retired ones) and a consolidation frees its sources' names
-    * before the promote. Crash windows roll forward/back at
-    * [[recoverParts]] (the `_sources` manifest inside the staged dir
-    * is the decision record), and the transiently-partial part set
-    * mid-merge is LOUD to readers ([[committedPartDirs]] refuses
-    * while a manifest-carrying staged dir exists) rather than served
-    * as silently-wrong folds. */
+    * no-ops — its original `_fp` rides in the merged part's
+    * `_sources` (one line per absorbed batch, carried over by every
+    * later consolidation, so the listing bound is real); a DIFFERENT
+    * payload under that key still fails loudly. Merged dirs use
+    * synthetic `<lo>_<hi>` keys no writer ever lands.
+    *
+    * Commit: the merged part is staged whole (data, `_fp`,
+    * `_sources`), then ONE [[StagedCommit]] under the parts marker
+    * replaces the target and drops every source. Before the marker
+    * the staged twin is debris and the sources are intact; after it
+    * the merge rolls forward ([[recoverParts]]), and readers fail
+    * loudly while it is pending ([[committedPartDirs]]). A
+    * consolidation whose target name equals a source's is retired by
+    * the replace itself. */
   private[operators] def mergeBatchParts(spark: org.apache.spark.sql.SparkSession,
       path: String, what: String, prefix: String = "b=", maxDirs: Int = 64,
       targetFileBytes: Long = 128L * 1024 * 1024,
       fpRow: DataFrame => org.apache.spark.sql.Column =
         d => xxhash64(d.columns.map(col): _*)): Unit = {
     require(maxDirs >= 1, s"maxDirs must be positive, got $maxDirs")
-    recoverParts(spark, path, prefix)
+    recoverParts(spark, path)
     val committed = committedPartDirs(spark, path, prefix)
     if (committed.length <= maxDirs) return
-    val parts = new org.apache.hadoop.fs.Path(s"$path/parts")
+    val parts = new Path(s"$path/parts")
     val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val singles = committed.filterNot(d =>
-      new org.apache.hadoop.fs.Path(d).getName.matches(".*-?\\d+_-?\\d+"))
+    val singles = committed.filterNot(d => new Path(d).getName.matches(MergedName))
     val sources = if (singles.length >= 2) singles else committed
     // verify every source BEFORE consuming any (the integrity refusal)
     val fps = sources.map(dir => verifiedFingerprint(spark, fs, dir, what, fpRow))
     val counts = fps.map(f => f.substring(0, f.indexOf('x')).toLong)
     val xors = fps.map(f => java.lang.Long.parseLong(f.substring(f.indexOf('x') + 1)))
     val mergedFp = s"${counts.sum}x${xors.foldLeft(0L)(_ ^ _)}"
-    val keys = sources.flatMap { dir =>
-      new org.apache.hadoop.fs.Path(dir).getName.stripPrefix(prefix)
-        .split('_').map(_.toLong)
-    }
+    val sourceNames = sources.map(new Path(_).getName)
+    val keys = sourceNames.flatMap(_.stripPrefix(prefix).split('_').map(_.toLong))
     val target = s"$prefix${keys.min}_${keys.max}"
-    val sourceNames = sources.map(new org.apache.hadoop.fs.Path(_).getName)
-    val staged = new org.apache.hadoop.fs.Path(parts, s"${target}__staged")
+    // every single batch the part absorbs: a single source directly,
+    // a merged source's own record carried over
+    val absorbed = sources.zip(fps).flatMap { case (dir, fp) =>
+      val d = new Path(dir)
+      if (d.getName.matches(MergedName)) readSources(fs, d) else Seq(d.getName -> fp)
+    }
+    val staged = new Path(parts, s"${target}__staged")
     val union = spark.read.parquet(sources: _*)
     val totalBytes = sources.map { dir =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir)).filter(_.isFile)
+      fs.listStatus(new Path(dir)).filter(_.isFile)
         .filterNot(f => f.getPath.getName.startsWith("_") ||
           f.getPath.getName.startsWith("."))
         .map(_.getLen).sum
@@ -883,12 +692,15 @@ object Profile {
     val shaped = if (singles.length >= 2) union.coalesce(nFiles)
       else union.repartition(nFiles)
     shaped.write.mode("overwrite").parquet(staged.toString)
-    val mf = fs.create(new org.apache.hadoop.fs.Path(staged, "_sources"), true)
-    try mf.write((sourceNames.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally mf.close()
-    val out = fs.create(new org.apache.hadoop.fs.Path(staged, "_fp"), true)
-    try out.write(mergedFp.getBytes("UTF-8")) finally out.close()
-    finishMerge(fs, parts, target, sourceNames)
+    def put(name: String, body: String): Unit = {
+      val out = fs.create(new Path(staged, name), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    put("_sources", absorbed.sorted.map { case (k, v) => s"$k $v\n" }.mkString)
+    put("_fp", mergedFp)
+    StagedCommit.commit(fs, partsMarker(parts),
+      StagedCommit.Replace(staged.getName, target) +:
+        sourceNames.filterNot(_ == target).map(StagedCommit.Drop))
   }
 
   /** Public maintenance pair for the `b=`-keyed sketch artifacts

@@ -25,21 +25,10 @@ import graft.sources.VersionedRoot
   */
 object Similarity {
 
-  /** Cosine similarity of two double arrays, sequential sum order.
-    * Uses the native codegen'd [[graft.plans.CosineSimilarity]] when the
-    * engine extensions are installed (one fused loop, no allocation);
-    * falls back to the equivalent higher-order-function form on a plain
-    * session. Both accumulate left-to-right in double → identical bits. */
-  private def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    if (graft.functions.NativeFns.has(spark, "graft_cosine"))
-      call_function("graft_cosine", a, b)
-    else {
-      val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-      val na  = sqrt(aggregate(zip_with(a, a, (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
-      val nb  = sqrt(aggregate(zip_with(b, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
-      dot / (na * nb)
-    }
-  }
+  /** Cosine similarity of two double arrays, sequential sum order:
+    * the native codegen'd [[graft.plans.CosineSimilarity]] (one fused
+    * loop, no allocation), accumulating left-to-right in double. */
+  private def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
 
   private def widened(df: DataFrame): DataFrame =
     df.withColumn("emb", transform(col("embedding"), x => x.cast("double")))
@@ -73,12 +62,11 @@ object Similarity {
   /** Exact top-k neighbors of each query vector (queries ≪ corpus). */
   def bruteTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
                 maxBroadcastProbes: Int = defaultMaxBroadcastProbes): DataFrame = {
-    val spark = embeddings.sparkSession
     val corpus = widened(embeddings).select(col("vec_id").as("n_id"), col("emb").as("n_emb"))
     val probes = widened(queries).select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
     val scored = corpus
       .join(probeSide(probes, queries, maxBroadcastProbes), col("q_id") =!= col("n_id"))
-      .withColumn("cos", round(cosine(spark, col("q_emb"), col("n_emb")), 6))
+      .withColumn("cos", round(cosine(col("q_emb"), col("n_emb")), 6))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
     scored
       .withColumn("rnk", row_number().over(w))
@@ -98,14 +86,12 @@ object Similarity {
   }
 
   /** LSH bucket keys "t:sig" of a double-array column: per table, each
-    * bit is the sign of the ±1-plane dot product. Uses the fused native
-    * expression when the extensions are installed (one pass; the 64
-    * interpreted zip_with+aggregate walks below are the plain-session
-    * fallback — bit-identical, TextSignaturesSpec). */
-  private[graft] def lshBuckets(spark: SparkSession, emb: Column,
-                                nTables: Int, bitsPerTable: Int): Column = {
-    if (graft.functions.NativeFns.has(spark, "graft_lsh_buckets") &&
-        nTables == 8 && bitsPerTable == 8)
+    * bit is the sign of the ±1-plane dot product. The 8×8 shape runs
+    * the fused native expression (one pass); other shapes take the
+    * interpreted zip_with+aggregate walks below — bit-identical,
+    * TextSignaturesSpec. */
+  private[graft] def lshBuckets(emb: Column, nTables: Int, bitsPerTable: Int): Column = {
+    if (nTables == 8 && bitsPerTable == 8)
       return call_function("graft_lsh_buckets", emb)
     val planes = hyperplanes(nTables * bitsPerTable, 64)
     val tables = (0 until nTables).map { t =>
@@ -126,14 +112,12 @@ object Similarity {
   def lshTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
               nTables: Int = 8, bitsPerTable: Int = 8,
               maxBroadcastProbes: Int = defaultMaxBroadcastProbes): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val corpus = widened(embeddings)
       .select(col("vec_id").as("n_id"), col("emb").as("n_emb"),
-        explode(lshBuckets(spark, col("emb"), nTables, bitsPerTable)).as("bucket"))
+        explode(lshBuckets(col("emb"), nTables, bitsPerTable)).as("bucket"))
     val probes = widened(queries)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        explode(lshBuckets(spark, col("emb"), nTables, bitsPerTable)).as("bucket"))
+        explode(lshBuckets(col("emb"), nTables, bitsPerTable)).as("bucket"))
     val candidates = corpus
       .join(probeSide(probes, queries, maxBroadcastProbes), Seq("bucket"))
       .filter(col("q_id") =!= col("n_id"))
@@ -141,7 +125,7 @@ object Similarity {
       .dropDuplicates("q_id", "n_id")
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
     candidates
-      .withColumn("cos", round(cosine(spark, col("q_emb"), col("n_emb")), 6))
+      .withColumn("cos", round(cosine(col("q_emb"), col("n_emb")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("cos"), col("rnk").cast("long").as("rnk"))
@@ -155,8 +139,6 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 4,
               maxBroadcastProbes: Int = defaultMaxBroadcastProbes): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val widenedCorpus = widened(embeddings)
@@ -175,7 +157,7 @@ object Similarity {
     corpus.join(probeSide(probes, queries, maxBroadcastProbes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
       .dropDuplicates("q_id", "n_id")
-      .withColumn("cos", round(cosine(spark, col("q_emb"), col("n_emb")), 6))
+      .withColumn("cos", round(cosine(col("q_emb"), col("n_emb")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("cos"), col("rnk").cast("long").as("rnk"))
@@ -364,7 +346,7 @@ object Similarity {
     corpus.join(probeSide(probes, queries, maxBroadcastProbes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
       .dropDuplicates("q_id", "n_id")
-      .withColumn("cos", round(cosine(spark, col("q_emb"), col("n_emb")), 6))
+      .withColumn("cos", round(cosine(col("q_emb"), col("n_emb")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("cos"), col("rnk").cast("long").as("rnk"))
@@ -451,14 +433,13 @@ object Similarity {
     * table; one mergeable max_by aggregation, never a window over the
     * N·k product. Output: (vec_id, cell, emb). */
   def assignClusters(embeddings: DataFrame, k: Int): DataFrame = {
-    val spark = embeddings.sparkSession
     val base = widened(embeddings).select(col("vec_id"), col("emb"))
     val centroids = base
       .orderBy(md5(col("vec_id").cast("string")))
       .limit(k)
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
     base.crossJoin(broadcast(centroids))
-      .withColumn("cos_c", round(cosine(spark, col("emb"), col("cemb")), 6))
+      .withColumn("cos_c", round(cosine(col("emb"), col("cemb")), 6))
       .groupBy(col("vec_id"))
       .agg(
         max_by(col("cid"), struct(col("cos_c"), (-col("cid")).as("nc"))).as("cell"),
@@ -475,7 +456,7 @@ object Similarity {
     assigned.as("a")
       .join(assigned.as("b").hint("shuffle_hash"),
         $"a.cell" === $"b.cell" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", round(cosine(spark, $"a.emb", $"b.emb"), 6))
+      .withColumn("cos", round(cosine($"a.emb", $"b.emb"), 6))
       .filter(col("cos") >= threshold)
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         $"a.cell".as("cell"), col("cos"))
@@ -777,7 +758,7 @@ object Similarity {
     cand
       .join(vecs, Seq("n_id"))
       .join(probeSide(probeVecs, probes, maxBroadcastProbes), Seq("q_id"))
-      .withColumn("cos", round(cosine(spark, col("q_emb"), col("n_emb")), 6))
+      .withColumn("cos", round(cosine(col("q_emb"), col("n_emb")), 6))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select("q_id", "n_id", "cos", "rnk")
@@ -1057,7 +1038,7 @@ object Similarity {
     cand
       .join(vecs, Seq("n_id"))
       .join(probeSide(probeVecs, probes, maxBroadcastProbes), Seq("q_id"))
-      .withColumn("cos", round(cosine(spark, col("q_emb"), col("n_emb")), 6))
+      .withColumn("cos", round(cosine(col("q_emb"), col("n_emb")), 6))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select("q_id", "n_id", "cos", "rnk")
@@ -1160,13 +1141,13 @@ object Similarity {
     import spark.implicits._
     val banded = widened(embeddings)
       .select(col("vec_id"), col("emb"),
-        explode(lshBuckets(spark, col("emb"), nTables, bitsPerTable)).as("bucket"))
+        explode(lshBuckets(col("emb"), nTables, bitsPerTable)).as("bucket"))
     banded.as("a")
       .join(banded.as("b"), $"a.bucket" === $"b.bucket" && $"a.vec_id" < $"b.vec_id")
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         $"a.emb".as("emb_a"), $"b.emb".as("emb_b"))
       .dropDuplicates("vec_a", "vec_b")
-      .withColumn("cos", round(cosine(spark, col("emb_a"), col("emb_b")), 6))
+      .withColumn("cos", round(cosine(col("emb_a"), col("emb_b")), 6))
       .filter(col("cos") >= threshold)
       .select("vec_a", "vec_b", "cos")
   }

@@ -111,7 +111,8 @@ object TextSig {
   }
 
   /** 60-bit SimHash: per-bit majority vote over md5 token hashes,
-    * every occurrence counted (matches Dedup.simhashSigOfTh). */
+    * every occurrence counted (matches the per-bit HOF votes,
+    * TextSignaturesSpec). */
   def simhashSig(toks: ArrayData): Long = {
     val votes = new Array[Int](60)
     val n = toks.numElements()

@@ -106,7 +106,7 @@ object Views {
       .coalesce(1)
       .withColumns(Map( // a Map of four keeps this (output) order
         "sma_14" -> Indicators.sma(col("close"), w, 14),
-        "ema_14" -> Indicators.ema(spark, col("close"), w, 14),
+        "ema_14" -> Indicators.ema(col("close"), w, 14),
         "rsi_14" -> Indicators.rsi(col("close"), w, 14),
         "bb_mid" -> Indicators.bollinger(col("close"), w, 20)._1))
       .orderBy("d")

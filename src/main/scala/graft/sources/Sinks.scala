@@ -122,6 +122,17 @@ object Sinks {
   private def stagedOf(target: Path) = new Path(target.getParent, target.getName + "__staged")
   private def markerOf(target: Path) = new Path(target.getParent, target.getName + "__commit")
 
+  /** Roll forward a crashed commit of the table at `path`, the same
+    * recovery its next merge runs first. A job that READS a table
+    * before merging into it calls this at entry: a crash inside a
+    * replace has already moved a live partition into the marker's
+    * trash, and a read before recovery would miss it. One `exists`
+    * on a clean table. */
+  private[graft] def recover(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    StagedCommit.recover(p.getFileSystem(spark.sparkContext.hadoopConfiguration), markerOf(p))
+  }
+
   /** Write `df` whole to the staging dir and return the whole-dir
     * [[StagedCommit.Replace]] that promotes it over `target`, relative
     * to `target`'s parent dir, where every marker that commits it

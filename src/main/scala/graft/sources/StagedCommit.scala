@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The one crash-safe promote behind every staged write: Sinks' merges
   * and compactions, the inverted-index ingest, the component-state
-  * merge and batch-part compaction (SURVEY §2.8: the reference's
-  * upsert became "stage the new files, then promote them"). A writer
+  * merge, and batch-part compactions and merges (SURVEY §2.8: the
+  * reference's upsert became "stage the new files, then promote
+  * them"). A writer
   * stages its new files aside, then [[commit]]s a list of steps:
   *
   *  - a marker listing every step is written ([[writeAtomic]]) only
@@ -109,9 +110,7 @@ object StagedCommit {
 
   /** Replace the small file `path` with `bytes` through `<path>.tmp`
     * and a rename. A reader sees the old content, the new content or,
-    * inside the delete→rename window, no file, never a torn one. The
-    * tmp name is fixed: Profile's tombstone ledger reader falls back
-    * to it after a crash in that window. */
+    * inside the delete→rename window, no file, never a torn one. */
   def writeAtomic(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
     val tmp = path.suffix(".tmp")
     val out = fs.create(tmp, true)

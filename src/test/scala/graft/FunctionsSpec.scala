@@ -262,7 +262,7 @@ class FunctionsSpec extends SparkSpec {
       // …and in its raw Unicode form (both forms stay indexed)
       "https://foo.公司.cn/" -> "foo.公司.cn")
     val got = cases.map(_._1).toDF("u")
-      .select(Urls.registeredDomain(spark, $"u")).as[String].collect().toSeq
+      .select(Urls.registeredDomain($"u")).as[String].collect().toSeq
     got.zip(cases).foreach { case (g, (in, want)) =>
       assert(g === want, s"registeredDomain($in)")
     }
@@ -306,7 +306,7 @@ class FunctionsSpec extends SparkSpec {
       (0 until 500).map(i => s"https://h$i.sub$i.example${i % 7}.co.uk/p$i")
     val df = hosts.toDF("u").localCheckpoint()
     val both = df.select(
-      Urls.registeredDomain(spark, $"u").as("native"),
+      Urls.registeredDomain($"u").as("native"),
       Urls.registeredDomainDeclarative($"u").as("decl"))
       .collect()
     both.zip(hosts).foreach { case (r, in) =>

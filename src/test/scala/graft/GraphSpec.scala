@@ -302,18 +302,18 @@ class GraphSpec extends SparkSpec {
       .map(_.getPath.getName).toSet
     GraphArtifact.mergeEdgeBatches(spark, path, maxDirs = 2)
     // ONE merged dir serves; the five single dirs are GONE — their
-    // replay fingerprints retired into the tombstone LEDGER (one
-    // file, so the dir listing is actually bounded)
+    // replay fingerprints ride in the merged part's `_sources` (no
+    // dir per batch, so the dir listing is actually bounded)
     assert(partNames().contains("b=0_4"))
     (0 until 5).foreach { k =>
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/parts/b=$k")),
         s"merged-away single b=$k must not keep a dir")
     }
-    val ledgerIn = fs.open(new org.apache.hadoop.fs.Path(s"$path/parts/_tombstones"))
-    val ledger = try scala.io.Source.fromInputStream(ledgerIn, "UTF-8").mkString
-    finally ledgerIn.close()
-    (0 until 5).foreach(k => assert(ledger.contains(s"b=$k "),
-      s"ledger must retire b=$k's fingerprint"))
+    val sourcesIn = fs.open(new org.apache.hadoop.fs.Path(s"$path/parts/b=0_4/_sources"))
+    val sources = try scala.io.Source.fromInputStream(sourcesIn, "UTF-8").mkString
+    finally sourcesIn.close()
+    (0 until 5).foreach(k => assert(sources.contains(s"b=$k "),
+      s"the merged part must record b=$k's fingerprint"))
     GraphArtifact.refreshRanks(spark, path)
     assert(GraphArtifact.readRanks(spark, path)
       .as[(Long, Long)].collect().toMap === before,
@@ -334,6 +334,9 @@ class GraphSpec extends SparkSpec {
     GraphArtifact.ingestEdgeBatch(Seq((500L, 501L), (501L, 500L)).toDF("src", "dst"), path, 7L)
     GraphArtifact.mergeEdgeBatches(spark, path, maxDirs = 1)
     assert(partNames().contains("b=0_7") && !partNames().contains("b=0_4"))
+    // the consolidated part carries b=0_4's record: a replay still no-ops
+    GraphArtifact.ingestEdgeBatch(slices(1).toDF("src", "dst"), path, 1L)
+    assert(!partNames().contains("b=1"), "a merged-away key must stay retired through a consolidation")
     GraphArtifact.refreshRanks(spark, path)
     val after = GraphArtifact.readRanks(spark, path).as[(Long, Long)].collect().toMap
     val scratch = Graph.pageRank(
@@ -352,6 +355,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("rank artifact: merge crash windows roll back (untouched sources) or forward (tombstoning began)") {
+    import graft.sources.StagedCommit.{Drop, Replace}
     val path = tmpArt()
     GraphArtifact.initRankArtifact(spark, path, iters = 3)
     GraphArtifact.ingestEdgeBatch(Seq((1L, 2L)).toDF("src", "dst"), path, 0L)
@@ -360,50 +364,59 @@ class GraphSpec extends SparkSpec {
     val want = GraphArtifact.readRanks(spark, path).as[(Long, Long)].collect().toMap
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def writeFile(p: String, body: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(p), true)
+    def p(rel: String) = new org.apache.hadoop.fs.Path(s"$path/parts/$rel")
+    def writeFile(rel: String, body: String): Unit = {
+      val out = fs.create(p(rel), true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
     }
-    def readFp(b: String): (Long, Long) = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/parts/$b/_fp"))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      (s.substring(0, s.indexOf('x')).toLong, s.substring(s.indexOf('x') + 1).toLong)
+    def readFp(b: String): String = {
+      val in = fs.open(p(s"$b/_fp"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
     }
-    // ROLLBACK window: staged dir + manifest written, nothing consumed
-    // yet — recovery must drop the staged twin and keep the sources
-    Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-      .write.parquet(s"$path/parts/b=0_1__staged")
-    writeFile(s"$path/parts/b=0_1__staged/_sources", "b=0\nb=1\n")
-    val (c0, x0) = readFp("b=0"); val (c1, x1) = readFp("b=1")
-    writeFile(s"$path/parts/b=0_1__staged/_fp", s"${c0 + c1}x${x0 ^ x1}")
+    def fpParts(fp: String) =
+      (fp.substring(0, fp.indexOf('x')).toLong, fp.substring(fp.indexOf('x') + 1).toLong)
+    val (fp0, fp1) = (readFp("b=0"), readFp("b=1"))
+    val ((c0, x0), (c1, x1)) = (fpParts(fp0), fpParts(fp1))
+    // the merged part exactly as mergeEdgeBatches stages it
+    def stageMerged(): Unit = {
+      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst").write.parquet(s"$path/parts/b=0_1__staged")
+      writeFile("b=0_1__staged/_sources", s"b=0 $fp0\nb=1 $fp1\n")
+      writeFile("b=0_1__staged/_fp", s"${c0 + c1}x${x0 ^ x1}")
+    }
+    // ROLLBACK window: the merged part staged, no marker yet —
+    // recovery must drop the staged twin and keep the sources
+    stageMerged()
     GraphArtifact.refreshRanks(spark, path) // single-writer entry heals
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/parts/b=0_1")),
-      "an unconsumed staged merge is debris, not a commit")
+    assert(!fs.exists(p("b=0_1")) && !fs.exists(p("b=0_1__staged")),
+      "a staged merge without its marker is debris, not a commit")
+    assert(fs.exists(p("b=0/_fp")) && fs.exists(p("b=1/_fp")))
     assert(GraphArtifact.readRanks(spark, path)
       .as[(Long, Long)].collect().toMap === want)
-    // ROLL-FORWARD window: staged complete AND one source already
-    // retired (ledger entry written, dir gone) — recovery must finish
-    // the merge, losing nothing
-    Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-      .write.parquet(s"$path/parts/b=0_1__staged")
-    writeFile(s"$path/parts/b=0_1__staged/_sources", "b=0\nb=1\n")
-    writeFile(s"$path/parts/b=0_1__staged/_fp", s"${c0 + c1}x${x0 ^ x1}")
-    writeFile(s"$path/parts/_tombstones", s"b=0 ${c0}x$x0\n")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/parts/b=0"), true)
+    // ROLL-FORWARD window: the marker pending, its replace applied and
+    // the first source already moved into the marker's trash —
+    // readers fail loudly, and recovery must finish the merge, losing
+    // nothing
+    stageMerged()
+    val marker = p("_compact.plan")
+    graft.sources.StagedCommit.plan(fs, marker,
+      Seq(Replace("b=0_1__staged", "b=0_1"), Drop("b=0"), Drop("b=1")))
+    fs.rename(p("b=0_1__staged"), p("b=0_1"))
+    fs.mkdirs(p("_compact.plan.trash"))
+    fs.rename(p("b=0"), p("_compact.plan.trash/1"))
+    assert(intercept[IllegalArgumentException] {
+      GraphArtifact.standingEdges(spark, path).collect()
+    }.getMessage.contains("in progress or crashed"))
     GraphArtifact.refreshRanks(spark, path)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/parts/b=0_1")),
-      "a merge that began tombstoning must roll forward")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/parts/b=1")),
-      "roll-forward must finish retiring the remaining sources")
-    val lIn = fs.open(new org.apache.hadoop.fs.Path(s"$path/parts/_tombstones"))
-    val l = try scala.io.Source.fromInputStream(lIn, "UTF-8").mkString finally lIn.close()
-    assert(l.contains("b=1 "), "roll-forward must ledger the remaining single's _fp")
+    assert(fs.exists(p("b=0_1/_fp")), "a committed merge must roll forward")
+    assert(!fs.exists(p("b=0")) && !fs.exists(p("b=1")),
+      "roll-forward must finish retiring the sources")
+    assert(!fs.exists(marker) && !fs.exists(p("_compact.plan.trash")))
     assert(GraphArtifact.readRanks(spark, path)
       .as[(Long, Long)].collect().toMap === want)
-    // a redelivery of a ledger-retired key is still a no-op, and a
+    // a redelivery of a merged-away key is still a no-op, and a
     // different payload under it is still loud
     GraphArtifact.ingestEdgeBatch(Seq((1L, 2L)).toDF("src", "dst"), path, 0L)
+    assert(!fs.exists(p("b=0")), "a redelivered merged-away batch must not land again")
     assert(intercept[IllegalArgumentException] {
       GraphArtifact.ingestEdgeBatch(Seq((9L, 8L)).toDF("src", "dst"), path, 0L)
     }.getMessage.contains("DIFFERENT contribution"))

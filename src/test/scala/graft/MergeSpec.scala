@@ -58,6 +58,25 @@ class MergeSpec extends SparkSpec {
     assert(Merge.overwrite(updates, Seq("k", "d")).count() === 2)
   }
 
+  test("same-key rows of one batch keep one deterministic survivor in every operation") {
+    // a bootstrap (overwrite) and a replay (upsert / insertIgnore) of a
+    // batch carrying one key twice must persist the same row whatever
+    // order the batch arrives in
+    val keys = Seq("k", "d")
+    val target = df(Seq((2, "a", 2.0), (3, "b", 3.0)))
+    val dups = Seq((1, "a", 10.0), (1, "a", 20.0), (3, "b", 30.0), (3, "b", 31.0))
+    def outcomes(batch: Seq[(Int, String, Double)]) = Seq(
+      canon(Merge.upsert(target, df(batch), keys)),
+      canon(Merge.insertIgnore(target, df(batch), keys)),
+      canon(Merge.overwrite(df(batch), keys)))
+    val forward = outcomes(dups)
+    assert(forward === outcomes(dups.reverse))
+    forward.foreach(rows => assert(rows.toSeq.map(r => (r._1, r._2)).distinct.size === rows.size))
+    val survivor = forward(2).find(_._1 == 1).get
+    assert(forward(0).contains(survivor), "upsert and overwrite must keep the same survivor")
+    assert(forward(1).contains((3, "b", 3.0)), "insertIgnore keeps the existing row")
+  }
+
   test("scd2: closes changed, opens new, passes unchanged/absent; idempotent") {
     import org.apache.spark.sql.functions._
     val dim0 = Seq((1, "A", 10.0), (2, "B", 20.0), (3, "C", 30.0))

@@ -354,6 +354,44 @@ class PipelineSpec extends SparkSpec {
       "pinned slice re-read post-rewrite files — pin must be eager")
   }
 
+  test("runDay recovers a crashed lake commit before its first read") {
+    import graft.sources.StagedCommit
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val day = Tables.events(spark, sfDir).agg(max(col("event_date"))).head().getDate(0)
+    val clean = Pipeline.run(spark, sfDir,
+      Files.createTempDirectory("graft-lakeC").toString, before = Some(day))
+    val crashed = Pipeline.run(spark, sfDir,
+      Files.createTempDirectory("graft-lakeX").toString, before = Some(day))
+    // a history commit that crashed inside its replace of the frontier
+    // partition: the live dir already in the marker's trash, its staged
+    // twin not yet renamed into place
+    val prev = spark.read.parquet(crashed.history).agg(max(col("d"))).head().getDate(0)
+    val hist = new Path(crashed.history)
+    val fs = hist.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = s"d=$prev"
+    FileUtil.copy(fs, new Path(hist, part), fs,
+      new Path(crashed.root, s"stock_price_history__staged/$part"), false,
+      spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(crashed.root, "stock_price_history__commit")
+    StagedCommit.plan(fs, marker, Seq(
+      StagedCommit.Replace(s"stock_price_history__staged/$part", s"stock_price_history/$part"),
+      StagedCommit.Drop("stock_price_history__staged")))
+    fs.mkdirs(marker.suffix(".trash"))
+    fs.rename(new Path(hist, part), new Path(marker.suffix(".trash"), "0"))
+    Pipeline.runDay(spark, sfDir, clean.root, day)
+    Pipeline.runDay(spark, sfDir, crashed.root, day)
+    assert(!fs.exists(marker), "runDay must roll the pending commit forward")
+    def rows(p: String): Array[Seq[Any]] = {
+      val df = spark.read.parquet(p)
+      df.select(df.columns.sorted.map(col): _*).collect()
+        .map(_.toSeq).sortBy(_.mkString("|"))
+    }
+    // the day's prev_close (and the analysis built on it) must read
+    // the recovered frontier partition, not fall back to an older row
+    for ((c, x) <- Seq(clean.history -> crashed.history, clean.analysis -> crashed.analysis))
+      assert(rows(c).sameElements(rows(x)), s"$x diverged from a clean runDay")
+  }
+
   test("patterns only contain the four defined categories") {
     val lakeRoot = Files.createTempDirectory("graft-lake2").toString
     val lake = Pipeline.run(spark, sfDir, lakeRoot)

@@ -406,133 +406,6 @@ class ProfileSpec extends SparkSpec {
     } finally rmTree(root)
   }
 
-  test("tombstone ledger heal: a truncated first-merge tmp heals clean; interior corruption stays loud") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ledgerheal").toString
-    val rows = (0L until 240L).map(i => (s"g${i % 3}", i)).toDF("g", "v")
-    Profile.initAggArtifact(spark, root, "g", "v")
-    (0 until 4).foreach { m =>
-      Profile.aggIngestBatch(rows.filter($"v" % 4 === m), "g", "v", root, m.toLong)
-    }
-    val before = Profile.readAggArtifact(spark, root)
-      .collect().map(_.toSeq).toSet
-    val parts = new org.apache.hadoop.fs.Path(s"$root/parts")
-    val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def fpOf(b: Int): String = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(parts, s"b=$b/_fp"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    // simulate the FIRST-EVER merge crashing mid-tmp-write: two
-    // complete lines, the third cut inside its fingerprint (still
-    // parseable — the nastiest shape), no terminator, no ledger, and
-    // the source dirs all still on disk (deletion follows the close)
-    val tmp = new org.apache.hadoop.fs.Path(parts, "_tombstones.tmp")
-    val out = fs.create(tmp, true)
-    out.write(s"b=0 ${fpOf(0)}\nb=1 ${fpOf(1)}\nb=2 ${fpOf(2).dropRight(2)}".getBytes("UTF-8"))
-    out.close()
-    // the real merge (a single-writer entry) heals first, then runs:
-    // the mis-recorded b=2 entry is UPSERTED from its dir's _fp
-    Profile.mergeArtifactParts(spark, root, maxDirs = 1)
-    assert(Profile.readAggArtifact(spark, root)
-      .collect().map(_.toSeq).toSet === before, "merge after heal changed the fold")
-    // every replay guard holds: identical redeliveries of ALL batches
-    // (including the one whose ledger line was truncated) are no-ops...
-    (0 until 4).foreach { m =>
-      Profile.aggIngestBatch(rows.filter($"v" % 4 === m), "g", "v", root, m.toLong)
-    }
-    assert(Profile.readAggArtifact(spark, root)
-      .collect().map(_.toSeq).toSet === before, "replay after heal changed the fold")
-    // ...and a DIFFERENT payload under a retired key is loud
-    assert(intercept[IllegalArgumentException] {
-      Profile.aggIngestBatch(rows.filter($"v" % 4 === 3), "g", "v", root, 0L)
-    }.getMessage.contains("DIFFERENT contribution"))
-    // interior corruption is NOT a crash shape: loud, never guessed at
-    val ledger = new org.apache.hadoop.fs.Path(parts, "_tombstones")
-    val in = fs.open(ledger)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    fs.delete(ledger, false)
-    val out2 = fs.create(tmp, true)
-    out2.write(("zzz not-a-fingerprint\n" + lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    out2.close()
-    assert(intercept[IllegalArgumentException] {
-      Profile.mergeArtifactParts(spark, root, maxDirs = 1)
-    }.getMessage.contains("refusing to guess at corruption"))
-  }
-
-  test("tombstone ledger heal: a terminator with truncated DIGITS heals keeping every complete entry") {
-    // the r18 review's brick: 12 entries + '#end 12' crashed to
-    // '#end 1' — a VALID terminator line whose count mismatches; the
-    // heal must recognize the tmp-only truncated-terminator shape
-    // (data lines all complete) instead of refusing forever. Modeled
-    // at the REACHABLE crash point (r18 advice): the FIRST merge
-    // crashed mid-tmp-write, so there is no published ledger and
-    // every recorded source dir is still on disk — the write-ordering
-    // invariant the heal now asserts loudly instead of assuming.
-    val root = java.nio.file.Files.createTempDirectory("graft-ledgerterm").toString
-    val rows = (0L until 240L).map(i => (s"g${i % 3}", i)).toDF("g", "v")
-    Profile.initAggArtifact(spark, root, "g", "v")
-    (0 until 12).foreach { m =>
-      Profile.aggIngestBatch(rows.filter($"v" % 12 === m), "g", "v", root, m.toLong)
-    }
-    val before = Profile.readAggArtifact(spark, root).collect().map(_.toSeq).toSet
-    val parts = new org.apache.hadoop.fs.Path(s"$root/parts")
-    val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def fpOf(b: Int): String = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(parts, s"b=$b/_fp"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    val tmp = new org.apache.hadoop.fs.Path(parts, "_tombstones.tmp")
-    val out = fs.create(tmp, true)
-    out.write(((0 until 12).map(m => s"b=$m ${fpOf(m)}").mkString("\n") +
-      "\n#end 1").getBytes("UTF-8"))
-    out.close()
-    Profile.compactArtifactParts(spark, root) // single-writer entry: heals
-    assert(Profile.readAggArtifact(spark, root).collect().map(_.toSeq).toSet === before)
-    // every complete entry survived: replay no-ops, different payload loud
-    Profile.aggIngestBatch(rows.filter($"v" % 12 === 5), "g", "v", root, 5L)
-    assert(Profile.readAggArtifact(spark, root).collect().map(_.toSeq).toSet === before)
-    assert(intercept[IllegalArgumentException] {
-      Profile.aggIngestBatch(rows.filter($"v" % 12 === 7), "g", "v", root, 5L)
-    }.getMessage.contains("DIFFERENT contribution"))
-    // a real merge retires the dirs through the healed ledger cleanly
-    Profile.mergeArtifactParts(spark, root, maxDirs = 1)
-    assert(Profile.readAggArtifact(spark, root).collect().map(_.toSeq).toSet === before)
-    // the PUBLISHED ledger can never truncate: the same shape there is loud
-    val ledger = new org.apache.hadoop.fs.Path(parts, "_tombstones")
-    val in2 = fs.open(ledger)
-    val healed = try scala.io.Source.fromInputStream(in2, "UTF-8").getLines().toList
-    finally in2.close()
-    val out2 = fs.create(ledger, true)
-    out2.write((healed.dropRight(1).mkString("\n") + "\n#end 1").getBytes("UTF-8"))
-    out2.close()
-    assert(intercept[IllegalArgumentException] {
-      Profile.aggIngestBatch(rows.filter($"v" % 12 === 7), "g", "v", root, 99L)
-    }.getMessage.contains("refusing to guess at corruption"))
-  }
-
-  test("tombstone ledger heal: a crash-cut tmp naming a MISSING dir refuses loudly") {
-    // the r18-advice guard itself: a no-ledger crash-cut tmp can only
-    // be the first-ever merge, whose source dirs all still exist — an
-    // entry naming a missing dir means corruption or a write-ordering
-    // change, and adopting its possibly-truncated fingerprint would
-    // crash-loop correct replays later
-    val root = java.nio.file.Files.createTempDirectory("graft-ledgermiss").toString
-    val rows = (0L until 60L).map(i => (s"g${i % 3}", i)).toDF("g", "v")
-    Profile.initAggArtifact(spark, root, "g", "v")
-    Profile.aggIngestBatch(rows, "g", "v", root, 0L)
-    val parts = new org.apache.hadoop.fs.Path(s"$root/parts")
-    val fs = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(parts, "_tombstones.tmp")
-    val out = fs.create(tmp, true)
-    out.write("b=99 123x456".getBytes("UTF-8")) // unterminated = crash shape
-    out.close()
-    assert(intercept[IllegalArgumentException] {
-      Profile.compactArtifactParts(spark, root)
-    }.getMessage.contains("refusing to adopt a possibly-truncated entry"))
-  }
-
   test("artifact guards: re-init dim mismatch, batch-key collision, orphan parts all fail loudly") {
     // CMS: same-dim re-init is a no-op; a different geometry refuses
     // (silently rewriting the meta would mix hash geometries under

@@ -6,10 +6,9 @@ Usage: python3 tools/check_promotes.py [repo_root]
 
 Every staged write promotes through graft.sources.StagedCommit, whose file
 also holds the one atomic small-file write (StagedCommit.writeAtomic).
-Two separate designs keep their own renames: VersionedRoot's versioned
-publication and Profile's merge manifest (Profile.finishMerge). A
-`.rename(` call anywhere else is a new copy of the promote and fails the
-check. Column renames (Conform.rename, withColumnRenamed) are not file
+One separate design keeps its own renames: VersionedRoot's versioned
+publication. A `.rename(` call anywhere else is a new copy of the promote
+and fails the check. Column renames (Conform.rename, withColumnRenamed) are not file
 renames and are skipped; comment lines are skipped too.
 
 Prints one line per rename found, `ok` or `FAIL`, with file:line and the
@@ -20,7 +19,7 @@ import re
 import sys
 
 ALLOWED_FILES = {"sources/StagedCommit.scala", "sources/VersionedRoot.scala"}
-ALLOWED_DEFS = {("operators/Profile.scala", "finishMerge")}
+ALLOWED_DEFS = set()  # (file, enclosing def) pairs allowed beside the files
 NOT_FILE_RENAMES = {"Conform"}  # receivers whose .rename( renames columns
 
 RENAME = re.compile(r"(\w+)?\s*\.rename\(")
@@ -59,8 +58,8 @@ def main():
                         bad += not ok
                         print(f"{'ok  ' if ok else 'FAIL'} {rel}:{n} in {enclosing}: {code}")
     if bad:
-        print(f"check_promotes: {bad} rename(s) outside StagedCommit, VersionedRoot "
-              "and Profile.finishMerge — promote through graft.sources.StagedCommit",
+        print(f"check_promotes: {bad} rename(s) outside StagedCommit and VersionedRoot "
+              "— promote through graft.sources.StagedCommit",
               file=sys.stderr)
         sys.exit(1)
     print("check_promotes: every rename is in an allowed place")
